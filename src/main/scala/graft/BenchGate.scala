@@ -188,6 +188,12 @@ object BenchGate {
       case Some(_) => Nil
     }
 
+  /** One violation per headline that threw: a failed query is a broken
+    * query at every scale, so this check applies off sf0.1 too, where
+    * the telemetry bands do not. */
+  def requireNoFailures(failed: Seq[String]): Seq[String] =
+    failed.map(q => s"headline $q failed")
+
   /** JSON-safe number rendering: NaN/Infinity (e.g. a 0/0 recall from an
     * empty truth set) become `null` instead of the bare literals JSON
     * parsers reject. */

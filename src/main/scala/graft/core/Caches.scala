@@ -22,11 +22,11 @@ import org.apache.spark.sql.DataFrame
   * plan re-persisted before its async drop completes simply re-marks the
   * same cache entry (Spark dedupes by canonicalized plan).
   *
-  * CONCURRENCY CONTRACT — single driver thread, same as
-  * [[LoopWidth]]: the registry is process-global, so [[release]] drains
-  * every tracked frame in the JVM, including ones another thread or
-  * SparkSession is still computing over (the result is a silent
-  * recompute, never a wrong answer — Spark re-evaluates the lineage).
+  * CONCURRENCY CONTRACT — single driver thread: the registry is
+  * process-global, so [[release]] drains every tracked frame in the
+  * JVM, including ones another thread or SparkSession is still
+  * computing over (the result is a silent recompute, never a wrong
+  * answer — Spark re-evaluates the lineage).
   * Embedders running concurrent queries in one JVM must serialize
   * query+release sequences on one thread, or scope their own
   * persist/unpersist instead of tracking here.

@@ -2,55 +2,16 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 
-/** Shuffle-width scoping for iterative operators whose per-round state is
-  * a small DERIVED structure (a duplicate graph, a BFS frontier, a peeled
+/** Shuffle widths for iterative operators whose per-round state is a
+  * small DERIVED structure (a duplicate graph, a BFS frontier, a peeled
   * edge list) rather than the corpus: running their per-round joins at
   * the corpus-tuned `spark.sql.shuffle.partitions` pays task-scheduling
-  * overhead per round for partitions that are nearly empty. `scoped`
-  * pins a width sized for the derived structure for the duration of the
-  * loop BODY (which must materialize its rounds eagerly — checkpoints/
-  * actions inside the scope plan at the scoped width) and restores the
-  * session width before returning, so lazy plans the caller builds
-  * afterwards re-plan at the session width at action time.
+  * overhead per round for partitions that are nearly empty. [[Fixpoint]]
+  * runs a loop's rounds at the width these rules derive.
   *
   * At 100 TB the same rule holds with a bigger constant: width ∝ the
-  * derived structure's size, never the corpus's.
-  *
-  * CONCURRENCY CONTRACT: the width is set on the session's SQLConf, so
-  * it applies to EVERY plan that reaches an action on this SparkSession
-  * while the body runs — `scoped` assumes the single-threaded-driver
-  * model the queries()/Verify/Bench harness uses (one query at a time
-  * per session). A multi-threaded driver sharing one session must
-  * instead give the loop its own `spark.newSession()` (isolated SQLConf
-  * over the same shared state and cache) and run `scoped` there, so a
-  * corpus-sized plan on another thread can never plan its shuffles at
-  * the loop's narrow width. Corpus-sized subtrees inside the loop body
-  * itself must be materialized (persist + action) BEFORE entering the
-  * scope for the same reason. */
+  * derived structure's size, never the corpus's. */
 object LoopWidth {
-  def scoped[T](df: DataFrame, width: Int = 8)(body: => T): T = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prev = conf.get(key)
-    val prevAqe = conf.get(aqeKey, "true")
-    conf.set(key, width.toString)
-    // AQE exists to size UNKNOWN shuffles at runtime; inside a scoped
-    // loop the width was just derived from a MATERIALIZED count, so
-    // there is nothing left for it to decide — but it still charges
-    // per-round overhead (stage-by-stage submission barriers and
-    // re-optimization on every tiny query stage). Measured on the
-    // iterative family at sf0.1: q_pagerank 4.27 -> 1.80 s, q_sssp
-    // 2.30 -> 1.03 s with AQE off. The toggle is loop-scoped and
-    // restores on exit, so corpus-sized plans outside the loop keep
-    // AQE's coalescing/skew handling at every scale.
-    conf.set(aqeKey, "false")
-    try body finally {
-      conf.set(key, prev)
-      conf.set(aqeKey, prevAqe)
-    }
-  }
-
   /** Session shuffle width — the corpus-tuned ceiling every derived
     * width is clamped to (at production scale the size-driven term
     * exceeds it, so the adaptive rules below reduce to today's

@@ -56,10 +56,13 @@ object DeferredIngest {
   private[graft] def addBodyNanos(n: Long): Unit = bodyNanos.addAndGet(n)
 }
 
-/** Logical leaf: just the output attributes and the deferred body. */
+/** Logical leaf: just the output attributes and the deferred body.
+  * `body` (here and on the exec) runs on the driver only and captures a
+  * session that may not serialize (`observe()` leaves an
+  * `ObservationManager` on it), so a plan shipped to executors drops it. */
 final case class DeferredIngestNode(
     output: Seq[Attribute],
-    body: () => DataFrame) extends LeafNode {
+    @transient body: () => DataFrame) extends LeafNode {
   // size unknown until the write runs — report "big" so no broadcast of
   // this side is ever planned
   override def computeStats(): Statistics =
@@ -72,7 +75,7 @@ final case class DeferredIngestNode(
   * that idempotent. */
 final case class DeferredIngestExec(
     output: Seq[Attribute],
-    body: () => DataFrame) extends LeafExecNode {
+    @transient body: () => DataFrame) extends LeafExecNode {
   override protected def doExecute(): RDD[InternalRow] = {
     val t0 = System.nanoTime()
     val df = body()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.{Caches, GQuery, Tables}
+import graft.core.{Caches, Fixpoint, GQuery, LoopWidth, Tables}
 import graft.core.Caches.TrackedOps
 import Qdsl._
 
@@ -219,36 +219,32 @@ object Analytics {
     * is cached pre-partitioned on src so only frontier rows shuffle.
     * Output is the per-hop discovery census (hop 0 = seeds). */
   def bfsHops(s: SparkSession, dir: String): DataFrame = {
-    // corpus-proportional distinct at session width, outside the scope;
+    // corpus-proportional distinct at session width, outside the loop;
     // the explicit narrow repartition pins the cached loop distribution.
     // Loop width is size-adaptive (anchor-table bytes, clamped to the
     // session width — LoopWidth.forBytes): the fixed 8 it replaces was
     // over-wide for bench-scale frontiers and under-wide at 100 TB.
-    val w = graft.core.LoopWidth.forBytes(Tables.events(s, dir),
+    val w = LoopWidth.forBytes(Tables.events(s, dir),
       Tables.tableBytes(s, dir, "events"))
     val edges = Tables.events(s, dir)
       .select(col("user_id").as("src"), (col("event_id") % 500).as("dst"))
       .distinct().repartition(w, col("src")).persist()
     edges.count() // materialize now, at session width
-    try graft.core.LoopWidth.scoped(edges, w) { bfsHopsLoop(edges) }
-    finally edges.unpersist()
-  }
-
-  private def bfsHopsLoop(edges: DataFrame): DataFrame = {
-    {
-      val seeds = edges.select(col("src").as("node"))
+    Fixpoint(s, w, edges) { loop =>
+      val loopEdges = loop(edges)
+      val seeds = loopEdges.select(col("src").as("node"))
         .filter(col("node") % 100 === 0).distinct()
-      var visited = seeds.withColumn("hop", lit(0L)).localCheckpoint(eager = true)
-      var frontier = visited.select(col("node"))
-      for (h <- 1 to 3) {
-        val next = edges.join(frontier.hint("shuffle_hash"), col("src") === col("node"))
-          .select(col("dst").as("node")).distinct()
-          .join(visited.select(col("node")), Seq("node"), "left_anti")
-          .localCheckpoint(eager = true)
-        visited = visited.union(next.withColumn("hop", lit(h.toLong)))
-          .localCheckpoint(eager = true)
-        frontier = next
-      }
+      // the state is the visited set; hop h's frontier is the nodes it
+      // discovered at hop h - 1, so one checkpoint per hop
+      val visited = loop.rounds(loop.checkpoint(seeds.withColumn("hop", lit(0L))), 3) {
+        (visited, h) =>
+          val frontier = visited.filter(col("hop") === h - 1).select(col("node"))
+          val next = loopEdges
+            .join(frontier.hint("shuffle_hash"), col("src") === col("node"))
+            .select(col("dst").as("node")).distinct()
+            .join(visited.select(col("node")), Seq("node"), "left_anti")
+          visited.union(next.withColumn("hop", lit(h.toLong)))
+      }.last
       visited.groupBy(col("hop"))
         .agg(count(lit(1)).as("n_nodes"), sum(col("node")).as("id_sum"))
     }
@@ -287,7 +283,7 @@ object Analytics {
     * candidate rows; rounds needed = shortest-path hop radius. */
   def sssp(s: SparkSession, dir: String): DataFrame = {
     // size-adaptive loop width, same derivation as [[bfsHops]]
-    val w = graft.core.LoopWidth.forBytes(Tables.events(s, dir),
+    val w = LoopWidth.forBytes(Tables.events(s, dir),
       Tables.tableBytes(s, dir, "events"))
     val edges = Tables.events(s, dir)
       .select(col("user_id").as("src"), (col("event_id") % 500).as("dst"),
@@ -295,28 +291,23 @@ object Analytics {
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
       .repartition(w, col("src")).persist()
     edges.count() // materialize at session width
-    try graft.core.LoopWidth.scoped(edges, w) { ssspLoop(edges) }
-    finally edges.unpersist()
-  }
-
-  private def ssspLoop(edges: DataFrame): DataFrame = {
-    var dist = edges.select(col("src").as("node"))
-      .filter(col("node") % 100 === 0).distinct()
-      .select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(eager = true)
-    def census(round: Int, d: DataFrame) =
-      d.agg(count(lit(1)).as("n_reached"), sum(col("dist")).as("dist_sum"))
-        .select(lit(round.toLong).as("round"), col("n_reached"), col("dist_sum"))
-    var out = census(0, dist)
-    for (r <- 1 to 4) {
-      val cand = edges.join(dist.hint("shuffle_hash"), col("src") === col("node"))
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.union(cand)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(eager = true)
-      out = out.union(census(r, dist))
+    Fixpoint(s, w, edges) { loop =>
+      val loopEdges = loop(edges)
+      val dist0 = loopEdges.select(col("src").as("node"))
+        .filter(col("node") % 100 === 0).distinct()
+        .select(col("node"), lit(0L).as("dist"))
+      val trajectory = loop.rounds(loop.checkpoint(dist0), 4) { (dist, _) =>
+        val cand = loopEdges
+          .join(dist.hint("shuffle_hash"), col("src") === col("node"))
+          .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
+        dist.union(cand)
+          .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+      }
+      trajectory.zipWithIndex.map { case (dist, r) =>
+        dist.agg(count(lit(1)).as("n_reached"), sum(col("dist")).as("dist_sum"))
+          .select(lit(r.toLong).as("round"), col("n_reached"), col("dist_sum"))
+      }.reduce(_.union(_))
     }
-    out
   }
 
   private val ssspSql = {

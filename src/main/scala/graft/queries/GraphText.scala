@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, GQuery, Tables}
+import graft.core.{Caches, Fixpoint, GQuery, LoopWidth, Tables}
 import graft.core.Caches.TrackedOps
 import Qdsl._
 
@@ -329,19 +329,13 @@ object GraphText {
     * keep the plan linear. Degree-biased graphs peel in a handful of
     * rounds; the loop is the driver-side pattern, maxRounds caps it. */
   def kcore(s: SparkSession, dir: String): DataFrame = {
-    // the corpus-proportional distinct runs OUTSIDE the width scope (at
-    // session width); only the derived edge list's peel rounds are narrow
     val e0 = Tables.events(s, dir)
       .select((col("user_id") % 4000).as("a"),
         (col("event_id") % 4000 + 4000).as("b"))
       .distinct()
-      .localCheckpoint(eager = true)
-    // size-adaptive peel width (anchor bytes, session-width clamp) —
-    // replaces the fixed 8 with the same rule the other loops derive
-    graft.core.LoopWidth.scoped(e0, graft.core.LoopWidth.forBytes(e0,
-      Tables.tableBytes(s, dir, "events"))) {
-      kcoreLoop(e0, KCore, KCoreRounds)
-    }
+    // size-adaptive peel width (anchor bytes, session-width clamp)
+    kcoreLoop(e0, LoopWidth.forBytes(e0, Tables.tableBytes(s, dir, "events")),
+      KCore, KCoreRounds)
   }
 
   /** k-core on a HEAVY-TAILED graph — the multi-round peel exercise the
@@ -373,45 +367,49 @@ object GraphText {
       .distinct()
 
   def kcorePowerlaw(s: SparkSession, dir: String): DataFrame = {
-    val e0 = powerlawEdges(s, dir).localCheckpoint(eager = true)
+    val e0 = powerlawEdges(s, dir)
     // the generator inflates `part` rows ~hundredfold (outdeg explode),
     // so the anchor-bytes rule uses a smaller per-partition target to
     // account for the fan-out; still session-width-clamped at scale
-    graft.core.LoopWidth.scoped(e0, graft.core.LoopWidth.forBytes(e0,
-      Tables.tableBytes(s, dir, "part"), bytesPerPartition = 256L << 10)) {
-      kcoreLoop(e0, KCorePowerlawK, KCorePowerlawRounds)
-    }
+    kcoreLoop(e0, LoopWidth.forBytes(e0, Tables.tableBytes(s, dir, "part"),
+      bytesPerPartition = 256L << 10), KCorePowerlawK, KCorePowerlawRounds)
   }
 
-  private def kcoreLoop(e0: DataFrame, k: Long, rounds: Int): DataFrame = {
-    var edges = e0
-    // round-tagged views of the per-round CHECKPOINTED edge frames; the
-    // census over all rounds is computed at the end as ONE grouped
-    // aggregation instead of one distinct-aggregate plan per round —
-    // r17 profiling showed the final action spending ~2.5 s in ~27
-    // census stages (9 rounds × 3 stages of countDistinct/sum_distinct
-    // plans over width-1 frames); the fused census is 2 exchanges total
-    val tagged = scala.collection.mutable.ArrayBuffer(
-      edges.select(lit(0L).as("round"), col("a"), col("b")))
-    for (r <- 1 to rounds) {
-      // peel in WINDOW form (r17, §2.4): each edge contributes one row
-      // per endpoint, a whole-partition window count over the endpoint
-      // IS that endpoint's degree, and the edge survives iff the MIN of
-      // its two rows' degrees clears k — two exchanges per round
-      // (endpoint hash for the window, (a,b) hash for the min-agg)
-      // instead of the degree-agg + two-semi-join form's four. Edge
-      // sets per round are unchanged (keep ⟺ deg(a) ≥ k ∧ deg(b) ≥ k ⟺
-      // min ≥ k), so the oracle-pinned trajectory is identical.
-      val wV = org.apache.spark.sql.expressions.Window.partitionBy(col("v"))
-      edges = edges
+  /** `rounds` peels of `e0` at loop width `width`, censused per round.
+    * `e0` must hold DISTINCT CANONICAL (a < b) edges: the window degree
+    * counts every edge row, so a duplicate or reversed copy of an edge
+    * would inflate both endpoints' degrees, while the peel's
+    * groupBy(a, b) silently merges exact duplicates. Both callers pass
+    * such edges (a bipartite distinct projection; the deduped
+    * least/greatest power-law list). */
+  private def kcoreLoop(e0: DataFrame, width: Int, k: Long, rounds: Int)
+      : DataFrame = Fixpoint(e0.sparkSession, width) { loop =>
+    // peel in WINDOW form (r17, §2.4): each edge contributes one row
+    // per endpoint, a whole-partition window count over the endpoint
+    // IS that endpoint's degree, and the edge survives iff the MIN of
+    // its two rows' degrees clears k — two exchanges per round
+    // (endpoint hash for the window, (a,b) hash for the min-agg)
+    // instead of the degree-agg + two-semi-join form's four. Edge
+    // sets per round are unchanged (keep ⟺ deg(a) ≥ k ∧ deg(b) ≥ k ⟺
+    // min ≥ k), so the oracle-pinned trajectory is identical.
+    val wV = org.apache.spark.sql.expressions.Window.partitionBy(col("v"))
+    val trajectory = loop.rounds(loop.checkpoint(loop(e0)), rounds) { (edges, _) =>
+      edges
         .select(col("a"), col("b"),
           explode(array(col("a"), col("b"))).as("v"))
         .withColumn("dg", count(lit(1)).over(wV))
         .groupBy(col("a"), col("b")).agg(min(col("dg")).as("mdg"))
         .filter(col("mdg") >= k)
         .select(col("a"), col("b"))
-        .localCheckpoint(eager = true)
-      tagged += edges.select(lit(r.toLong).as("round"), col("a"), col("b"))
+    }
+    // round-tagged views of the CHECKPOINTED per-round edge frames; the
+    // census over all rounds is ONE grouped aggregation instead of one
+    // distinct-aggregate plan per round — r17 profiling showed the final
+    // action spending ~2.5 s in ~27 census stages (9 rounds × 3 stages
+    // of countDistinct/sum_distinct plans over width-1 frames); the
+    // fused census is 2 exchanges total
+    val tagged = trajectory.zipWithIndex.map { case (edges, r) =>
+      edges.select(lit(r.toLong).as("round"), col("a"), col("b"))
     }
     // per-round census as one two-level aggregation: distinct endpoints
     // per (round, v) group, then per-round node count / id sum / edge
@@ -426,7 +424,7 @@ object GraphText {
       .agg(count(lit(1)).as("n_nodes"),
         expr("SUM(cnt) DIV 2").as("n_edges"),
         sum(col("v")).as("node_id_sum"))
-    val zeros = e0.sparkSession.range(0, rounds + 1L)
+    val zeros = loop.session.range(0, rounds + 1L)
       .select(col("id").as("round"), lit(0L).as("n_nodes"),
         lit(0L).as("n_edges"), lit(0L).as("node_id_sum"))
     grouped.unionByName(zeros)

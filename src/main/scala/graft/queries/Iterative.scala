@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, GQuery, Tables}
+import graft.core.{Caches, Fixpoint, GQuery, LoopWidth, Tables}
 import graft.core.Caches.TrackedOps
 
 /** Iterative dataflows — the reference's chained-job pattern
@@ -23,16 +23,6 @@ import graft.core.Caches.TrackedOps
   */
 object Iterative {
 
-  /** PageRank, 3 power iterations, damping 0.85, over the bipartite
-    * part↔supplier graph from lineitem (both directions, so every node
-    * has out-edges — no dangling mass). Node ids are namespaced:
-    * part → 2k, supplier → 2k+1.
-    *
-    * Per iteration: one equi-join rank⋈edges + one hash aggregation —
-    * exactly the tagged-union-through-shuffle the reference emulates in
-    * `PageRankMapFunction.cc:8-43`/`PageRankReduceFunction.cc:6-64`, but
-    * as a real join. The edge list (with out-degree pre-joined) is cached
-    * across iterations. */
   /** The part↔supplier bipartite edge list (src-hash layout, 2 columns)
     * plus its node-sized out-degree side table — the shared graph all
     * PageRank variants iterate over. r16 carried the degree ON the edge
@@ -46,8 +36,7 @@ object Iterative {
     * edge join (per-edge value is identical — it never depended on the
     * edge). Symmetrize with ONE explode pass (a union of two
     * projections would run the scan+distinct subtree twice — DataFrames
-    * share no common subplans). Caller materializes `edges` inside the
-    * loop-width scope and unpersists both. */
+    * share no common subplans). The PageRank loop unpersists both. */
   private def edgesAndDegrees(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val base = Tables.lineitem(s, dir)
@@ -68,49 +57,68 @@ object Iterative {
 
   /** Iteration width for the rank/edge state, derived from the anchor
     * table's bytes and clamped to the session width
-    * ([[graft.core.LoopWidth.forBytes]]): the graph is a distinct
-    * projection of lineitem, so at bench scale (MBs of anchor) the
-    * rounds run a few partitions wide instead of paying the full
-    * session width's per-task fixed costs per round, while at 100 TB
-    * the byte term exceeds the clamp and the rounds keep today's
-    * session-width plan. The edge materialization sits INSIDE the scope
-    * deliberately — its window exchange is what pins the cached edge
-    * layout every round joins against, so it must plan at the loop
-    * width or each round would re-exchange the edges. */
+    * ([[LoopWidth.forBytes]]): the graph is a distinct projection of
+    * lineitem, so at bench scale (MBs of anchor) the rounds run a few
+    * partitions wide instead of paying the full session width's
+    * per-task fixed costs per round, while at 100 TB the byte term
+    * exceeds the clamp and the rounds keep the session-width plan. */
   private def pagerankWidth(s: SparkSession, dir: String,
       edges: DataFrame): Int =
-    graft.core.LoopWidth.forBytes(edges, Tables.tableBytes(s, dir, "lineitem"))
+    LoopWidth.forBytes(edges, Tables.tableBytes(s, dir, "lineitem"))
 
-  def pagerank(s: SparkSession, dir: String): DataFrame = {
+  /** A PageRank form's arithmetic: the seed rank, a node's per-edge share
+    * of `rank` over out-degree `d`, the next rank from summed `contrib`. */
+  private final case class RankArith(seed: Column, share: Column, damp: Column)
+  // ranks ×1e6 with DIV truncation (oracle-exact); double ranks
+  private val IntRanks = RankArith(lit(1000000L), expr("rank DIV d"),
+    expr("150000 + (850000 * contrib) DIV 1000000"))
+  private val DoubleRanks = RankArith(lit(1.0), col("rank") / col("d"),
+    lit(0.15) + lit(0.85) * col("contrib"))
+
+  /** `iters` PageRank rounds over the part↔supplier graph, checkpointed
+    * every `every` rounds (lazily chained between), handed to `finish`
+    * as the rank trajectory (round 0 = the seed). */
+  private def pagerankLoop(s: SparkSession, dir: String, arith: RankArith,
+      iters: Int, every: Int)(finish: IndexedSeq[DataFrame] => DataFrame)
+      : DataFrame = {
     val (edgesD, degrees) = edgesAndDegrees(s, dir)
-    try graft.core.LoopWidth.scoped(edgesD, pagerankWidth(s, dir, edgesD)) {
+    Fixpoint(s, pagerankWidth(s, dir, edgesD), edgesD, degrees) { loop =>
       // seed straight off the degree table — it IS distinct(src), and it
       // arrives already src-hash-partitioned from the cached layout
-      var ranks = degrees.select(col("node"), lit(1000000L).as("rank"))
-      for (_ <- 1 to 3) {
-        // Three fixed iterations chain lazily into one job over the cached
-        // edge list. For long/unbounded iteration counts, checkpoint every
-        // few rounds instead (lineage growth re-optimizes the whole prefix
-        // each step — see pagerankDouble); at 3 the chain is cheaper than
-        // extra job boundaries.
+      val (loopEdges, loopDegrees) = (loop(edgesD), loop(degrees))
+      val seed = loopDegrees.select(col("node"), arith.seed.as("rank"))
+      finish(loop.rounds(seed, iters, every) { (ranks, _) =>
         // shuffled-hash join, building on the node-state side: avoids
         // re-sorting the cached edge list every iteration (SMJ would),
         // and unlike a broadcast stays valid when node state is huge.
-        // rank DIV d attaches on the node side (degrees ⋈ ranks, both
+        // The share attaches on the node side (degrees ⋈ ranks, both
         // node-sized and co-partitioned) before the edge join.
-        val contribs = degrees
+        val contribs = loopDegrees
           .join(ranks.hint("shuffle_hash"), Seq("node"))
-          .select(col("node"), expr("rank DIV d").as("c"))
-        ranks = edgesD.join(contribs.hint("shuffle_hash"),
+          .select(col("node"), arith.share.as("c"))
+        loopEdges.join(contribs.hint("shuffle_hash"),
             col("src") === col("node"))
           .groupBy(col("dst"))
           .agg(sum(col("c")).as("contrib"))
-          .select(col("dst").as("node"),
-            expr("150000 + (850000 * contrib) DIV 1000000").as("rank"))
-      }
-      ranks.localCheckpoint(eager = true)
-    } finally { edgesD.unpersist(); degrees.unpersist() }
+          .select(col("dst").as("node"), arith.damp.as("rank"))
+      })
+    }
   }
+
+  /** PageRank, 3 power iterations, damping 0.85, over the bipartite
+    * part↔supplier graph from lineitem (both directions, so every node
+    * has out-edges — no dangling mass). Node ids are namespaced:
+    * part → 2k, supplier → 2k+1.
+    *
+    * Per iteration: one equi-join rank⋈edges + one hash aggregation —
+    * exactly the tagged-union-through-shuffle the reference emulates in
+    * `PageRankMapFunction.cc:8-43`/`PageRankReduceFunction.cc:6-64`, but
+    * as a real join. The edge list and the degree table are cached
+    * across iterations; the three iterations chain lazily into one job
+    * (at 3 the chain is cheaper than extra job boundaries; long runs
+    * checkpoint every few rounds — see [[pagerankDouble]]). */
+  def pagerank(s: SparkSession, dir: String): DataFrame =
+    pagerankLoop(s, dir, IntRanks, iters = 3, every = 3)(_.last)
 
   /** Production PageRank: double-precision ranks (the scaled-integer form
     * above exists for oracle exactness and overflows past ~1e9 nodes) and
@@ -121,26 +129,8 @@ object Iterative {
     * (double summation order is engine- and run-dependent); PageRankSpec
     * asserts rank-order agreement with the integer-exact form. */
   def pagerankDouble(s: SparkSession, dir: String,
-      iters: Int = 3, checkpointEvery: Int = 3): DataFrame = {
-    val (edgesD, degrees) = edgesAndDegrees(s, dir)
-    try graft.core.LoopWidth.scoped(edgesD, pagerankWidth(s, dir, edgesD)) {
-      var ranks = degrees.select(col("node"), lit(1.0).as("rank"))
-      for (i <- 1 to iters) {
-        val contribs = degrees
-          .join(ranks.hint("shuffle_hash"), Seq("node"))
-          .select(col("node"), (col("rank") / col("d")).as("c"))
-        ranks = edgesD.join(contribs.hint("shuffle_hash"),
-            col("src") === col("node"))
-          .groupBy(col("dst"))
-          .agg(sum(col("c")).as("contrib"))
-          .select(col("dst").as("node"),
-            (lit(0.15) + lit(0.85) * col("contrib")).as("rank"))
-        if (i % checkpointEvery == 0 && i < iters)
-          ranks = ranks.localCheckpoint(eager = true)
-      }
-      ranks.localCheckpoint(eager = true)
-    } finally { edgesD.unpersist(); degrees.unpersist() }
-  }
+      iters: Int = 3, checkpointEvery: Int = 3): DataFrame =
+    pagerankLoop(s, dir, DoubleRanks, iters, checkpointEvery)(_.last)
 
   /** Conserved-mass census of the double-precision PageRank — the
     * portable face of [[pagerankDouble]]: one row per iteration with the
@@ -160,28 +150,14 @@ object Iterative {
     * Each iteration is referenced twice (census + next round), so ranks
     * checkpoint every round — which is also what cuts lineage for long
     * runs. */
-  def pagerankDoubleMass(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
-    val (edgesD, degrees) = edgesAndDegrees(s, dir)
-    try graft.core.LoopWidth.scoped(edgesD, pagerankWidth(s, dir, edgesD)) {
-      var ranks = degrees.select(col("node"), lit(1.0).as("rank"))
-      val census = (1 to iters).map { i =>
-        val contribs = degrees
-          .join(ranks.hint("shuffle_hash"), Seq("node"))
-          .select(col("node"), (col("rank") / col("d")).as("c"))
-        ranks = edgesD.join(contribs.hint("shuffle_hash"),
-            col("src") === col("node"))
-          .groupBy(col("dst"))
-          .agg(sum(col("c")).as("contrib"))
-          .select(col("dst").as("node"),
-            (lit(0.15) + lit(0.85) * col("contrib")).as("rank"))
-          .localCheckpoint(eager = true)
-        ranks.agg(count(lit(1)).as("n_nodes"),
+  def pagerankDoubleMass(s: SparkSession, dir: String, iters: Int = 3): DataFrame =
+    pagerankLoop(s, dir, DoubleRanks, iters, every = 1) { trajectory =>
+      (1 to iters).map { i =>
+        trajectory(i).agg(count(lit(1)).as("n_nodes"),
             expr("CAST(round(SUM(rank) * 1000) AS BIGINT)").as("mass_milli"))
           .select(lit(i.toLong).as("iter"), col("n_nodes"), col("mass_milli"))
-      }
-      census.reduce(_.unionByName(_))
-    } finally { edgesD.unpersist(); degrees.unpersist() }
-  }
+      }.reduce(_.unionByName(_))
+    }
 
   private val pagerankDoubleMassSql = {
     def iter(prev: String, out: String) =
@@ -248,35 +224,42 @@ object Iterative {
     * checkpoint per half-step because the max aggregate references the
     * same subtree a second time (lazy chaining would double the plan per
     * half-step). */
-  def hits(s: SparkSession, dir: String): DataFrame =
-    hitsGraph(Tables.lineitem(s, dir)
-      .select(col("l_partkey").as("p"), col("l_suppkey").as("sup")).distinct())
+  def hits(s: SparkSession, dir: String): DataFrame = {
+    val base = Tables.lineitem(s, dir)
+      .select(col("l_partkey").as("p"), col("l_suppkey").as("sup")).distinct()
+    // the PageRank graph's width: the same lineitem projection
+    hitsGraph(base, pagerankWidth(s, dir, base))
+  }
 
-  /** [[hits]] over an explicit (p, sup) edge frame (spec surface). */
-  private[graft] def hitsGraph(base: DataFrame): DataFrame = {
+  /** [[hits]] over an explicit (p, sup) edge frame at loop width `width`
+    * (spec surface). */
+  private[graft] def hitsGraph(base: DataFrame, width: Int): DataFrame = {
     val edgesByP = base.repartition(col("p")).persist()
     val edgesBySup = base.repartition(col("sup")).persist()
-    try {
-      var a = edgesBySup.select(col("sup")).distinct()
-        .select(col("sup"), lit(1000000L).as("a"))
-        .localCheckpoint(eager = true)
-      var h: DataFrame = null
-      for (_ <- 1 to 3) {
-        val hRaw = edgesBySup.join(a.hint("shuffle_hash"), "sup")
-          .groupBy(col("p")).agg(sum(col("a")).as("hr"))
-        h = hRaw.crossJoin(hRaw.agg(max(col("hr")).as("hm")))
-          .select(col("p"), expr("(hr * 1000000) DIV hm").as("h"))
-          .localCheckpoint(eager = true)
-        val aRaw = edgesByP.join(h.hint("shuffle_hash"), "p")
-          .groupBy(col("sup")).agg(sum(col("h")).as("ar"))
-        a = aRaw.crossJoin(aRaw.agg(max(col("ar")).as("am")))
-          .select(col("sup"), expr("(ar * 1000000) DIV am").as("a"))
-          .localCheckpoint(eager = true)
+    Fixpoint(base.sparkSession, width, edgesByP, edgesBySup) { loop =>
+      val (byP, bySup) = (loop(edgesByP), loop(edgesBySup))
+      val a0 = loop.checkpoint(bySup.select(col("sup")).distinct()
+        .select(col("sup"), lit(1000000L).as("a")))
+      // six half-steps: odd ones update hubs from authorities, even ones
+      // authorities from hubs
+      val scores = loop.rounds(a0, 6) { (prev, r) =>
+        if (r % 2 == 1) hitsHalfStep(bySup, prev, "sup", "a", "p", "h")
+        else hitsHalfStep(byP, prev, "p", "h", "sup", "a")
       }
-      h.select(lit("hub").as("role"), col("p").as("node"), col("h").as("score"))
-        .union(a.select(lit("authority").as("role"), col("sup").as("node"),
+      scores(5).select(lit("hub").as("role"), col("p").as("node"), col("h").as("score"))
+        .union(scores(6).select(lit("authority").as("role"), col("sup").as("node"),
           col("a").as("score")))
-    } finally { edgesByP.unpersist(); edgesBySup.unpersist() }
+    }
+  }
+
+  /** One HITS half-step: each `to` node scores the sum of its `from`
+    * neighbors' `in` scores, max-normalized to 1e6 as column `out`. */
+  private def hitsHalfStep(edges: DataFrame, scores: DataFrame,
+      from: String, in: String, to: String, out: String): DataFrame = {
+    val raw = edges.join(scores.hint("shuffle_hash"), from)
+      .groupBy(col(to)).agg(sum(col(in)).as("raw"))
+    raw.crossJoin(raw.agg(max(col("raw")).as("mx")))
+      .select(col(to), expr("(raw * 1000000) DIV mx").as(out))
   }
 
   private val hitsSql = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, GQuery, Tables, Widen}
+import graft.core.{Caches, Fixpoint, GQuery, LoopWidth, Tables, Widen}
 import graft.core.Caches.TrackedOps
 import Qdsl._
 
@@ -1102,44 +1102,9 @@ object TextPipeline {
   private[graft] def hashMinComponents(
       nodes: DataFrame, pairs: DataFrame, iters: Int): DataFrame = {
     val edges = dupEdges(pairs)
-    // scope at the edges' own layout width so per-round joins reuse the
+    // loop at the edges' own layout width so per-round joins reuse the
     // cached hash partitioning instead of re-exchanging the edge list
-    try graft.core.LoopWidth.scoped(nodes, edges.rdd.getNumPartitions) {
-      hashMinComponentsLoop(nodes, edges, iters)
-    } finally edges.unpersist()
-  }
-
-  /** Symmetrized dup-graph edge list, hash-partitioned on src at a
-    * SIZE-ADAPTIVE loop width and MATERIALIZED before the width scope is
-    * entered: the corpus-proportional upstream (MinHash bands, signature
-    * pair agg) must plan at the session width — only the derived edge
-    * list and the label rounds are narrow. Symmetrization is ONE explode
-    * pass: a union of two projections would evaluate that upstream twice
-    * (DataFrames share no common subplans). The width derives from the
-    * edge COUNT the materialization already pays
-    * ([[graft.core.LoopWidth.forRows]], session-width-clamped at scale —
-    * replaces the fixed 8): the raw list is cached once at its upstream
-    * layout, counted, and the narrow re-hash then reads that cache, so
-    * the extra step costs one metadata-sized job, not a recompute.
-    * Caller unpersists (the raw cache is dropped here). */
-  private def dupEdges(pairs: DataFrame): DataFrame = {
-    val raw = pairs
-      .select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist()
-    val n = raw.count() // materialize now, at session width
-    val w = graft.core.LoopWidth.forRows(raw, n)
-    val edges = raw.repartition(w, col("src")).persist()
-    edges.count() // re-layout narrow off the raw cache
-    raw.unpersist(blocking = false)
-    edges
-  }
-
-  private def hashMinComponentsLoop(
-      nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    {
+    Fixpoint(nodes.sparkSession, edges.rdd.getNumPartitions, edges) { loop =>
       // Only nodes incident to an edge can ever change label, so the
       // loop iterates over V(E) — the edge endpoints — and the (usually
       // vast) singleton majority is attached AFTER the loop with one
@@ -1155,27 +1120,66 @@ object TextPipeline {
       // whole upstream subtree each round — 2^iters plan growth (measured:
       // 5 lazy rounds benched 15 s vs 2 s checkpointed). Materialize each
       // round; the per-round job is join + agg over label rows only.
-      var labels = edges.select(col("src").as("doc_id")).distinct()
-        .select(col("doc_id"), col("doc_id").as("lbl"))
-        .localCheckpoint(eager = true)
-      for (_ <- 1 to iters) {
-        // min neighbor label, shuffle-hash-joined on the small label side
-        // (same reasoning as the PageRank iteration: SMJ would re-sort the
-        // cached edges every round). A union-form carry (labels ∪ contrib
-        // → one MIN agg, saving the second join) was A/B'd in r17 and
-        // LOST (1.81 → 2.10 s same-window at sf0.1) — the join form
-        // stays.
-        val nbrMin = edges.join(labels.hint("shuffle_hash"),
-            col("src") === col("doc_id"))
-          .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
-        labels = labels.join(nbrMin, col("doc_id") === col("dst"), "left")
-          .select(col("doc_id"),
-            least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-          .localCheckpoint(eager = true)
-      }
-      nodes.join(labels, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
+      val loopEdges = loop(edges)
+      val labels = loop.rounds(loop.checkpoint(vertexLabels(loopEdges)), iters) {
+        (labels, _) =>
+          // A union-form carry (labels ∪ contrib → one MIN agg, saving
+          // the second join) was A/B'd in r17 and LOST (1.81 → 2.10 s
+          // same-window at sf0.1) — the join form stays.
+          labels.join(neighborMin(loopEdges, labels),
+              col("doc_id") === col("dst"), "left")
+            .select(col("doc_id"),
+              least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
+      }.last
+      withSingletons(nodes, labels)
     }
+  }
+
+  /** Every endpoint of the symmetrized `edges` as its own label. */
+  private def vertexLabels(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("doc_id")).distinct()
+      .select(col("doc_id"), col("doc_id").as("lbl"))
+
+  /** Per node `dst`, the minimum label `nlbl` among its neighbors —
+    * shuffle-hash-joined on the small label side (same reasoning as the
+    * PageRank iteration: SMJ would re-sort the cached edges every
+    * round). */
+  private def neighborMin(edges: DataFrame, labels: DataFrame): DataFrame =
+    edges.join(labels.hint("shuffle_hash"), col("src") === col("doc_id"))
+      .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
+
+  /** A label for every node of `nodes`: the loop's labels cover V(E),
+    * every other node labels itself. */
+  private def withSingletons(nodes: DataFrame, labels: DataFrame): DataFrame =
+    nodes.join(labels, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
+
+  /** Symmetrized dup-graph edge list, hash-partitioned on src at a
+    * SIZE-ADAPTIVE loop width and MATERIALIZED before the loop starts:
+    * the corpus-proportional upstream (MinHash bands, signature pair agg)
+    * must plan at the session width — only the derived edge list and the
+    * label rounds are narrow. Symmetrization is ONE explode
+    * pass: a union of two projections would evaluate that upstream twice
+    * (DataFrames share no common subplans). The width derives from the
+    * edge COUNT the materialization already pays
+    * ([[LoopWidth.forRows]], session-width-clamped at scale —
+    * replaces the fixed 8): the raw list is cached once at its upstream
+    * layout, counted, and the narrow re-hash then reads that cache, so
+    * the extra step costs one metadata-sized job, not a recompute.
+    * The loop unpersists it (the raw cache is dropped here). */
+  private def dupEdges(pairs: DataFrame): DataFrame = {
+    val raw = pairs
+      .select(explode(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .persist()
+    val n = raw.count() // materialize now, at session width
+    val w = LoopWidth.forRows(raw, n)
+    val edges = raw.repartition(w, col("src")).persist()
+    edges.count() // re-layout narrow off the raw cache
+    raw.unpersist(blocking = false)
+    edges
   }
 
   /** Production components: hash-min PLUS pointer doubling
@@ -1185,58 +1189,33 @@ object TextPipeline {
     * convergence is O(log diameter) — a 100 TB web-graph-diameter
     * component costs tens of rounds, not diameter rounds (the same
     * round-complexity class as large-star/small-star). Convergence is
-    * detected with one tiny aggregation per round: labels only ever
+    * probed by the round's own checkpoint action: labels only ever
     * DECREASE, so Σlbl is strictly monotone and stalls exactly at the
     * fixpoint. Per round: one edge↔label join (work ∝ edges), one
-    * label self-join (∝ nodes), one agg. */
+    * label self-join (∝ nodes). A budget of `maxIters` rounds that ends
+    * short of the fixpoint throws. */
   private[graft] def pointerDoublingComponents(
       nodes: DataFrame, pairs: DataFrame, maxIters: Int = 50): DataFrame = {
     val edges = dupEdges(pairs)
-    try graft.core.LoopWidth.scoped(nodes, edges.rdd.getNumPartitions) {
-      pointerDoublingComponentsLoop(nodes, edges, maxIters)
-    } finally edges.unpersist()
-  }
-
-  private def pointerDoublingComponentsLoop(
-      nodes: DataFrame, edges: DataFrame, maxIters: Int): DataFrame = {
-    {
+    Fixpoint(nodes.sparkSession, edges.rdd.getNumPartitions, edges) { loop =>
       // iterate over V(E) only, singletons attached after the loop —
       // see the identical reasoning in [[hashMinComponents]]; the
-      // convergence sum is likewise over V(E), still strictly monotone
-      var labels = edges.select(col("src").as("doc_id")).distinct()
-        .select(col("doc_id"), col("doc_id").as("lbl"))
-        .localCheckpoint(eager = true)
-      var last = -1L
-      var iters = 0
-      while (iters < maxIters) {
-        val nbrMin = edges.join(labels.hint("shuffle_hash"),
-            col("src") === col("doc_id"))
-          .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
+      // convergence sum is likewise over V(E), still strictly monotone.
+      // sum() over zero rows is NULL — an empty node set is already
+      // converged, not a crash.
+      val loopEdges = loop(edges)
+      val labels = loop.converge(loop.checkpoint(vertexLabels(loopEdges)),
+          maxIters, coalesce(sum(col("lbl")), lit(0L)).as("s")) { labels =>
         val jump = labels.select(col("doc_id").as("j_id"), col("lbl").as("j_lbl"))
-        // the convergence sum rides the checkpoint action via observe()
-        // (localCheckpoint runs under withAction, so the CollectMetrics
-        // listener fires) instead of a separate per-round agg job — one
-        // action per round, not two. sum() over zero rows is NULL — an
-        // empty node set is already converged, not a crash.
-        val obs = org.apache.spark.sql.Observation(s"pd_probe_$iters")
-        val next = labels
-          .join(nbrMin, col("doc_id") === col("dst"), "left")
+        labels
+          .join(neighborMin(loopEdges, labels), col("doc_id") === col("dst"), "left")
           .join(jump, col("lbl") === col("j_id"), "left")
           .select(col("doc_id"),
             least(col("lbl"),
               coalesce(col("nlbl"), col("lbl")),
               coalesce(col("j_lbl"), col("lbl"))).as("lbl"))
-          .observe(obs, coalesce(
-            org.apache.spark.sql.functions.sum(col("lbl")), lit(0L)).as("s"))
-          .localCheckpoint(eager = true)
-        val sum = obs.get.apply("s").asInstanceOf[Long]
-        labels = next
-        iters += 1
-        if (sum == last) iters = maxIters // fixpoint: no label moved
-        else last = sum
       }
-      nodes.join(labels, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
+      withSingletons(nodes, labels)
     }
   }
 
@@ -1258,107 +1237,81 @@ object TextPipeline {
   private[graft] def starComponents(
       nodes: DataFrame, pairs: DataFrame, maxIters: Int = 30): DataFrame = {
     val edges = dupEdges(pairs)
-    try graft.core.LoopWidth.scoped(nodes, edges.rdd.getNumPartitions) {
-      starComponentsLoop(nodes, edges, maxIters)
-    } finally edges.unpersist()
-  }
-
-  private def starComponentsLoop(
-      nodes: DataFrame, edges: DataFrame, maxIters: Int): DataFrame = {
-    // the label universe is V(E) of the INPUT graph (star rounds rewrite
-    // the edge list, so the final list names only star endpoints);
-    // `edges` arrives symmetrized, so src alone covers every endpoint
-    val vset = edges.select(col("src").as("doc_id")).distinct()
-      .localCheckpoint(eager = true)
-    // canonical undirected pairs (a < b); input has no self-loops
-    var e = edges.filter(col("src") < col("dst"))
-      .select(col("src").as("a"), col("dst").as("b"))
-      .distinct()
-      .localCheckpoint(eager = true)
-    var last = (-1L, -1L)
-    var iters = 0
-    var converged = false
-    while (iters < maxIters && !converged) {
-      // One FUSED action per round (was three: e1 checkpoint, e2
-      // checkpoint, probe agg — at derived loop widths the round cost is
-      // per-stage fixed overhead, so action and exchange count IS the
-      // runtime; r17 A/B at sf0.1: 2.23 s → ~1.1 s for the headline).
-      // Both star ops become whole-partition window minima — one
-      // exchange each instead of groupBy-agg + re-hang join — and
-      // large-star's output feeds small-star LAZILY: in window form it
-      // is referenced exactly once, so nothing re-executes without the
-      // intermediate checkpoint. Its `distinct` is dropped too:
-      // sym.filter(v > u) emits exactly one row per canonical edge
-      // (rows never duplicate, only their (m, v) VALUES can — min is
-      // duplicate-insensitive and e2's distinct collapses the values),
-      // so the round's edge SETS are exactly the classic alternation's
-      // (validated round-by-round against the 3-action form at sf0.1:
-      // identical per-round counts and signatures, identical census).
-      //
-      // LARGE-STAR over symmetric neighborhoods: v > u re-hangs onto
-      // m(u) = min(Γ(u) ∪ {u}); m(u) ≤ u < v keeps the output canonical
-      // and loop-free.
-      val sym = e.select(explode(array(
-          struct(col("a").as("u"), col("b").as("v")),
-          struct(col("b").as("u"), col("a").as("v")))).as("x"))
-        .select(col("x.u").as("u"), col("x.v").as("v"))
-      val wU = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
-      val e1 = sym
-        .withColumn("m", least(min(col("v")).over(wU), col("u")))
-        .filter(col("v") > col("u"))
-        .select(col("m").as("a"), col("v").as("b"))
-      // SMALL-STAR over canonical pairs, grouped at the LARGER endpoint:
-      // its strictly-smaller neighbors (and itself) re-hang onto the
-      // minimum one; m < every emitted partner, canonical again. Exactly
-      // one row per b-partition has a == m (m is that partition's min),
-      // so the per-b center edge (m, b) is emitted from that row and the
-      // others emit their (m, a) re-hang — one pair per row, no explode.
-      val wB = org.apache.spark.sql.expressions.Window.partitionBy(col("b"))
-      val e2 = e1
-        .withColumn("m", min(col("a")).over(wB))
-        .select(when(col("a") === col("m"),
-            struct(col("m").as("a"), col("b").as("b")))
-          .otherwise(struct(col("m").as("a"), col("a").as("b"))).as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
-        .distinct()
-      // fixpoint probe, folded into the checkpoint action via observe()
-      // (localCheckpoint runs under withAction, so the CollectMetrics
-      // listener fires — no separate probe job). A (count, checksum)
-      // collision could only stop EARLY on a non-fixpoint — the census
-      // oracle (exact transitive closure) would catch that; rounds only
-      // rewrite monotonically toward stars, they never oscillate. BOTH
-      // ids are pmod-reduced BEFORE the multiply-add (a·1000003 alone
-      // overflows Long above ~9.2e12 ids), so every term is < 1e15+1e9
-      // and the SUM stays inside Long at any id magnitude (the 100× skew
-      // drive overflowed the unbounded a*1000003+b sum under ANSI at
-      // 2.1e9 doc_ids); ≡ (a*1000003+b) mod M by modular arithmetic
+    Fixpoint(nodes.sparkSession, edges.rdd.getNumPartitions, edges) { loop =>
+      // the label universe is V(E) of the INPUT graph (star rounds rewrite
+      // the edge list, so the final list names only star endpoints);
+      // `edges` arrives symmetrized, so src alone covers every endpoint
+      val vset = loop.checkpoint(loop(edges).select(col("src").as("doc_id")).distinct())
+      // canonical undirected pairs (a < b); input has no self-loops
+      val e0 = loop.checkpoint(loop(edges).filter(col("src") < col("dst"))
+        .select(col("src").as("a"), col("dst").as("b"))
+        .distinct())
+      // fixpoint probe, collected by the round's checkpoint action. A
+      // (count, checksum) collision could only stop EARLY on a
+      // non-fixpoint — the census oracle (exact transitive closure)
+      // would catch that; rounds only rewrite monotonically toward
+      // stars, they never oscillate. BOTH ids are pmod-reduced BEFORE the
+      // multiply-add (a·1000003 alone overflows Long above ~9.2e12 ids),
+      // so every term is < 1e15+1e9 and the SUM stays inside Long at any
+      // id magnitude (the 100× skew drive overflowed the unbounded
+      // a*1000003+b sum under ANSI at 2.1e9 doc_ids); ≡ (a*1000003+b)
+      // mod M by modular arithmetic
       val M = lit(1000000007L)
-      val obs = org.apache.spark.sql.Observation(s"star_probe_$iters")
-      e = e2.observe(obs, count(lit(1)).as("n"),
+      val e = loop.converge(e0, maxIters, count(lit(1)).as("n"),
           coalesce(sum(pmod(pmod(col("a"), M) * 1000003L + pmod(col("b"), M),
-            M)), lit(0L)).as("sig"))
-        .localCheckpoint(eager = true)
-      iters += 1
-      val m = obs.get
-      val sig = (m("n").asInstanceOf[Long], m("sig").asInstanceOf[Long])
-      if (sig == last || sig._1 == 0L) converged = true
-      else last = sig
+            M)), lit(0L)).as("sig")) { e =>
+        // One FUSED action per round (was three: e1 checkpoint, e2
+        // checkpoint, probe agg — at derived loop widths the round cost
+        // is per-stage fixed overhead, so action and exchange count IS
+        // the runtime; r17 A/B at sf0.1: 2.23 s → ~1.1 s for the
+        // headline). Both star ops become whole-partition window minima
+        // — one exchange each instead of groupBy-agg + re-hang join —
+        // and large-star's output feeds small-star LAZILY: in window form
+        // it is referenced exactly once, so nothing re-executes without
+        // the intermediate checkpoint. Its `distinct` is dropped too:
+        // sym.filter(v > u) emits exactly one row per canonical edge
+        // (rows never duplicate, only their (m, v) VALUES can — min is
+        // duplicate-insensitive and e2's distinct collapses the values),
+        // so the round's edge SETS are exactly the classic alternation's
+        // (validated round-by-round against the 3-action form at sf0.1:
+        // identical per-round counts and signatures, identical census).
+        //
+        // LARGE-STAR over symmetric neighborhoods: v > u re-hangs onto
+        // m(u) = min(Γ(u) ∪ {u}); m(u) ≤ u < v keeps the output
+        // canonical and loop-free.
+        val sym = e.select(explode(array(
+            struct(col("a").as("u"), col("b").as("v")),
+            struct(col("b").as("u"), col("a").as("v")))).as("x"))
+          .select(col("x.u").as("u"), col("x.v").as("v"))
+        val wU = Window.partitionBy(col("u"))
+        val e1 = sym
+          .withColumn("m", least(min(col("v")).over(wU), col("u")))
+          .filter(col("v") > col("u"))
+          .select(col("m").as("a"), col("v").as("b"))
+        // SMALL-STAR over canonical pairs, grouped at the LARGER
+        // endpoint: its strictly-smaller neighbors (and itself) re-hang
+        // onto the minimum one; m < every emitted partner, canonical
+        // again. Exactly one row per b-partition has a == m (m is that
+        // partition's min), so the per-b center edge (m, b) is emitted
+        // from that row and the others emit their (m, a) re-hang — one
+        // pair per row, no explode.
+        val wB = Window.partitionBy(col("b"))
+        e1.withColumn("m", min(col("a")).over(wB))
+          .select(when(col("a") === col("m"),
+              struct(col("m").as("a"), col("b").as("b")))
+            .otherwise(struct(col("m").as("a"), col("a").as("b"))).as("p"))
+          .select(col("p.a").as("a"), col("p.b").as("b"))
+          .distinct()
+      }
+      // at the fixpoint every canonical edge is (center, member): a
+      // member's label is its (unique) center, a center labels itself
+      // (the read-off is only valid AT the fixpoint, which converge()
+      // guarantees by failing on an exhausted budget)
+      val memberLbl = e.groupBy(col("b")).agg(min(col("a")).as("lbl"))
+        .select(col("b").as("doc_id"), col("lbl"))
+      withSingletons(nodes, vset.join(memberLbl, Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl")))
     }
-    // the member/center read-off below is only valid AT the fixpoint —
-    // a budget-exhausted exit would silently emit labels where a node
-    // can be both center and member, so fail loudly instead
-    require(converged,
-      s"star components did not reach the star fixpoint in $maxIters " +
-        "rounds — raise maxIters (rounds needed grow O(log² n))")
-    // at the fixpoint every canonical edge is (center, member): a
-    // member's label is its (unique) center, a center labels itself
-    val memberLbl = e.groupBy(col("b")).agg(min(col("a")).as("lbl"))
-      .select(col("b").as("doc_id"), col("lbl"))
-    nodes.join(vset.join(memberLbl, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("lbl"), col("doc_id")).as("lbl")),
-      Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
   }
 
   /** [[dupClusters]] computed by star rewriting — census-identical to

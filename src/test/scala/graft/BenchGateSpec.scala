@@ -123,6 +123,12 @@ class BenchGateSpec extends AnyFunSuite {
     assert(BenchGate.requireSimTuned(Some(BenchGate.simTunedBaseline)).isEmpty)
   }
 
+  test("a failed headline turns the gate red") {
+    assert(BenchGate.requireNoFailures(Nil).isEmpty)
+    val v = BenchGate.requireNoFailures(Seq("q_pagerank"))
+    assert(v == Seq("headline q_pagerank failed"))
+  }
+
   test("jsonNum renders NaN/Infinity as null, numbers as themselves") {
     assert(BenchGate.jsonNum(Double.NaN) == "null")
     assert(BenchGate.jsonNum(Double.PositiveInfinity) == "null")

@@ -53,6 +53,17 @@ class DupClustersSpec extends SparkSpec {
       "fixpoint must label the whole 200-path with its minimum")
   }
 
+  test("pointer doubling fails loudly when the round budget is exhausted") {
+    // 2 rounds cannot settle the 200-path; returning its unconverged
+    // labels would silently split the component, so the loop must raise
+    val nodes = (0L until 200L).toDF("doc_id")
+    val path = (0L until 199L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalArgumentException] {
+      TextPipeline.pointerDoublingComponents(nodes, path, maxIters = 2)
+    }
+    assert(e.getMessage.contains("fixpoint"))
+  }
+
   test("converged and fixed-round variants agree on the corpus census") {
     val a = TextPipeline.dupClusters(spark, sfDir)
     val b = TextPipeline.dupClustersConverged(spark, sfDir)

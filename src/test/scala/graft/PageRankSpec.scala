@@ -30,7 +30,7 @@ class PageRankSpec extends SparkSpec {
     // hub(1) > hub(2); supplier 10 (bought by both) out-ranks 11/12
     val base = Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 10L))
       .toDF("p", "sup")
-    val out = Iterative.hitsGraph(base).collect()
+    val out = Iterative.hitsGraph(base, width = 2).collect()
     def score(role: String, node: Long): Long =
       out.find(r => r.getString(0) == role && r.getLong(1) == node)
         .map(_.getLong(2)).getOrElse(fail(s"missing $role $node"))
