@@ -238,7 +238,7 @@ object Bench {
     // the 100× drive crosses the dial to 64 bits. The corpus count the
     // dial needs is hoisted to ONE shared column-pruned scan here (also
     // emitted as n_docs corpus telemetry) instead of a per-call
-    // docs.count() action inside the query body — the ivfSearchSqrtN
+    // docs.count() action inside the query body — the sqrtNCenters
     // consistency stance for driver-side parameter derivation.
     val nDocs: Long = try {
       graft.core.Tables.documents(spark, sfDir).select("doc_id").count()

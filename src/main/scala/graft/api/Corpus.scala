@@ -711,34 +711,19 @@ object Corpus {
   * range first. */
 object Vectors {
 
-  private def canon(df: DataFrame, id: String, vec: String): DataFrame =
-    df.select(col(id).cast("long").as("vid"),
-      expr(s"transform($vec, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
-        .as("v"))
-      .withColumn("n2", graft.functions.GraftDot(col("v"), col("v")))
+  private val S = graft.queries.Similarity
 
   /** Exact cosine top-k: every query row against the full vector set,
     * query side broadcast (its purpose — bulk all-pairs goes through the
-    * LSH/IVF paths instead). Output (query_id, rank, neighbor_id, cos). */
+    * LSH/IVF paths instead) — [[graft.queries.Similarity.exactSearch]],
+    * the search q_knn_brute pins. Output (query_id, rank, neighbor_id,
+    * cos). */
   def cosineTopK(vectors: DataFrame, queries: DataFrame, k: Int,
       id: String = "vec_id", vec: String = "embedding",
-      excludeSelf: Boolean = true): DataFrame = {
-    val base = canon(vectors, id, vec)
-    val q = canon(queries, id, vec)
-      .select(col("vid").as("qid"), col("v").as("qv"), col("n2").as("qn2"))
-    val dot = graft.functions.GraftDot(col("v"), col("qv"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vid"))
-    base.join(broadcast(q),
-        if (excludeSelf) col("vid") =!= col("qid") else lit(true))
-      .select(col("qid"), col("vid"),
-        (dot.cast("double") / sqrt(col("n2").cast("double")) /
-          sqrt(col("qn2").cast("double"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("rank").cast("long").as("rank"),
-        col("vid").as("neighbor_id"), col("cos"))
-  }
+      excludeSelf: Boolean = true): DataFrame =
+    S.exactSearch(S.canonical(vectors, id, vec),
+      S.canonical(queries, id, vec), k, excludeSelf)
+      .withColumnRenamed("q_id", "query_id")
 
   /** NDCG@k rank-quality of ANY retrieval result against ANY truth
     * ranking — both as (query id, rank, neighbor id) frames, e.g. an
@@ -758,7 +743,7 @@ object Vectors {
       col(queryId).cast("long").as("q_id"),
       col(rank).cast("long").as("rank"),
       col(neighborId).cast("long").as("neighbor_id"))
-    graft.queries.Similarity.ndcgOf(canonR(results), canonR(truth), k)
+    S.ndcgOf(canonR(results), canonR(truth), k)
   }
 
   /** Semantic dedup (SemDeDup) over any vector frame: cluster into
@@ -779,28 +764,8 @@ object Vectors {
     * the quadratic in-cell risk the √n rule exists to avoid). */
   def semDedup(vectors: DataFrame, k: Int = 0, tau: Double = 0.3,
       id: String = "vec_id", vec: String = "embedding"): DataFrame = {
-    val base = canon(vectors, id, vec).trackedPersist()
-    // scan-local argmin on the fused kernel (the nearestAssign shape the
-    // engine uses on every other assignment path): the join+window form
-    // this replaces materialized the n*k distance frame and sorted it
-    // per vid - the exact O(n*k)-row plan the r13 drive banned. Tie
-    // semantics identical (min (dist, cid); VectorKernelSpec parity).
-    def argmin(centers: DataFrame): DataFrame = {
-      val carr = centers.agg(org.apache.spark.sql.functions.sort_array(
-        org.apache.spark.sql.functions.collect_list(
-          struct(col("cid"), col("cv")))).as("cs"))
-      base.crossJoin(broadcast(carr))
-        .withColumn("cell",
-          graft.functions.GraftNearestCell(col("v"), col("cs")))
-        .select(col("vid"), col("v"), col("n2"), col("cell"))
-    }
-    val assigned = (if (k > 0) {
-      val seedIds = base.select(col("vid")).orderBy(col("vid")).limit(k)
-      val c = base.join(seedIds.withColumnRenamed("vid", "svid"),
-          col("vid") === col("svid"))
-        .select(col("vid").as("cid"), col("v").as("cv"))
-      argmin(c)
-    } else {
+    val base = S.canonical(vectors, id, vec).trackedPersist()
+    val centers = if (k > 0) S.lowestCenters(base, k) else {
       // expected ⌈√n⌉ seeds: keep vid iff hash60(vid) < 2^60·k/n, both
       // factors from the same 1-row broadcast — no driver-side count
       val stats = base.agg(count(lit(1)).as("__graft_n"),
@@ -813,19 +778,12 @@ object Vectors {
           // expected-√n draw can come up empty) still gets one cell
           col("vid") === col("__graft_min_vid"))
         .select(col("vid").as("cid"), col("v").as("cv"))
-      // one Lloyd update over the seed assignment: per-dim integer mean,
-      // arrays rebuilt in dim order (the q_semdedup training step)
-      val a1 = argmin(c0).select(col("vid"), col("cell").as("cid"))
-      val c1 = base.join(a1, "vid")
-        .select(col("cid"), posexplode(col("v")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(expr("SUM(col) DIV COUNT(*)").as("cx"))
-        .groupBy(col("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-          e => e.getField("cx")).as("cv"))
-      argmin(c1)
-    }).trackedPersist()
-    val cos = graft.functions.GraftDot(col("av"), col("bv")).cast("double") / sqrt(col("an2").cast("double")) / sqrt(col("bn2").cast("double"))
+      S.lloydCenters(base, c0)
+    }
+    // the shared fused-kernel argmin: no n×k distance frame
+    val assigned = S.nearestAssign(base, centers, "cell").trackedPersist()
+    val cos = graft.functions.GraftDot(col("av"), col("bv")).cast("double") /
+      sqrt(col("an2").cast("double")) / sqrt(col("bn2").cast("double"))
     val dropped = assigned.select(col("cell"), col("vid").as("avid"),
         col("v").as("av"), col("n2").as("an2"))
       .join(assigned.select(col("cell"), col("vid").as("bvid"),
@@ -860,9 +818,7 @@ object Vectors {
       id: String = "vec_id", vec: String = "embedding",
       bucketCap: Long = Long.MaxValue,
       excludeSelf: Boolean = true): DataFrame =
-    graft.queries.Similarity.lshSearch(
-      canon(vectors, id, vec).select(col("vid"), col("v"), col("n2")),
-      canon(queries, id, vec).select(col("vid"), col("v"), col("n2")),
+    S.lshSearch(S.canonical(vectors, id, vec), S.canonical(queries, id, vec),
       k, bits, tables, hamming, bucketCap, excludeSelf)
       .withColumnRenamed("q_id", "query_id")
 
@@ -880,11 +836,15 @@ object Vectors {
   def ivfTopK(vectors: DataFrame, queries: DataFrame, k: Int = 3,
       cells: Int = 8, nprobe: Int = 2,
       id: String = "vec_id", vec: String = "embedding",
-      excludeSelf: Boolean = true): DataFrame =
-    graft.queries.Similarity.ivfSearch(
-      canon(vectors, id, vec), canon(queries, id, vec), k, cells, nprobe,
-      excludeSelf)
+      excludeSelf: Boolean = true): DataFrame = {
+    require(cells > 0, s"cells must be positive: $cells")
+    require(nprobe > 0 && nprobe <= cells,
+      s"nprobe must be in 1..$cells: $nprobe")
+    val base = S.canonical(vectors, id, vec)
+    S.ivfSearch(base, S.canonical(queries, id, vec),
+      S.lowestCenters(base, cells), k, nprobe, excludeSelf)
       .withColumnRenamed("q_id", "query_id")
+  }
 
   /** IVF drift census over arbitrary (id, Array[Float]) resident and
     * arriving frames — the retrain trigger the oracle-checked
@@ -897,36 +857,34 @@ object Vectors {
   def ivfDriftCensus(resident: DataFrame, arriving: DataFrame,
       cells: Int = 8, id: String = "vec_id",
       vec: String = "embedding"): DataFrame =
-    graft.queries.Similarity.ivfDriftCensusOf(
-      canon(resident, id, vec), canon(arriving, id, vec), cells)
+    S.ivfDriftCensusOf(
+      S.canonical(resident, id, vec), S.canonical(arriving, id, vec), cells)
 
   /** PQ/ADC top-k similarity search over arbitrary (id, Array[Float])
     * vector and query frames: the base's 16 lowest-id vectors seed the
     * per-subspace codebooks, every vector compresses to 8 nibble codes,
     * and queries rank candidates by the 8-integer-add asymmetric
     * distance — the bandwidth-compressed serving path the
-    * oracle-checked q_ann_pq pins ([[graft.queries.Similarity.pqSearch]]).
-    * Output (query_id, rank, neighbor_id, adc); vectors must be 64-dim.
+    * oracle-checked q_ann_pq pins. Output (query_id, rank, neighbor_id,
+    * adc); vectors must be 64-dim.
     *
-    * The PRODUCTION dials ([[graft.queries.Similarity.pqSearchProduction]],
-    * gated as the ann_pq_256* telemetry keys): `centroids` per subspace
-    * codebook ([[Tuning.pqCentroids]] — 256 in production; the default
-    * 16 keeps the oracle-pinned legacy shape), `rounds` Lloyd
-    * refinements, and `rerank` > 0 for an exact-cosine re-rank of the
-    * ADC shortlist (output scores become `cos`). Defaults reproduce the
-    * q_ann_pq shape exactly. */
+    * The PRODUCTION dials are arguments of the one PQ pipeline
+    * ([[graft.queries.Similarity.pqSearch]], gated as the ann_pq_256*
+    * telemetry keys): `centroids` per subspace codebook
+    * ([[Tuning.pqCentroids]] — 256 in production; the default 16 is the
+    * q_ann_pq shape), `rounds` Lloyd refinements, and `rerank` > 0 for
+    * an exact-cosine re-rank of the ADC shortlist (output scores become
+    * `cos`). */
   def pqTopK(vectors: DataFrame, queries: DataFrame, k: Int = 3,
       id: String = "vec_id", vec: String = "embedding",
       centroids: Int = 16, rounds: Int = 0, rerank: Int = 0,
-      excludeSelf: Boolean = true): DataFrame =
-    (if (centroids == 16 && rounds == 0 && rerank == 0)
-      graft.queries.Similarity.pqSearch(
-        canon(vectors, id, vec), canon(queries, id, vec), k, excludeSelf)
-    else
-      graft.queries.Similarity.pqSearchProduction(
-        canon(vectors, id, vec), canon(queries, id, vec), k,
-        centroids, rounds, rerank, excludeSelf))
-      .withColumnRenamed("q_id", "query_id")
+      excludeSelf: Boolean = true): DataFrame = {
+    require(centroids > 0, s"centroids must be positive: $centroids")
+    require(rounds >= 0 && rerank >= 0, "rounds/rerank must be >= 0")
+    val base = S.canonical(vectors, id, vec)
+    S.pqSearch(base, S.canonical(queries, id, vec), S.pqLowest(base, centroids),
+      rounds, k, rerank, excludeSelf).withColumnRenamed("q_id", "query_id")
+  }
 
   /** Johnson-Lindenstrauss sign projection 64 → 16 for any
     * (id, Array[Float]) frame: milli-scaled exact-integer dot products

@@ -49,11 +49,22 @@ object Similarity {
   private def l2s(a: Column, b: Column): Column =
     graft.functions.GraftL2(a, b)
 
-  /** Integer-scaled vectors + squared norm, the shared scan. */
-  private def vecs(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"), ivec(col("embedding")).as("v"))
+  /** Canonical (vid, v, n2) rows of any (id, float-vector) frame: the
+    * integer-scaled vector and its squared norm. Every search below
+    * reads this shape; `graft.api.Vectors` canonicalizes through it. */
+  private[graft] def canonical(df: DataFrame, id: String,
+      vec: String): DataFrame =
+    df.select(col(id).cast("long").as("vid"), ivec(col(vec)).as("v"))
       .withColumn("n2", dot(col("v"), col("v")))
+
+  /** The test corpus in canonical form, the shared scan. */
+  private def corpus(s: SparkSession, dir: String): DataFrame =
+    canonical(Tables.embeddings(s, dir), "vec_id", "embedding")
+
+  /** The query set of every query form pinned to the test corpus: its
+    * 20 lowest ids. */
+  private def testQueries(base: DataFrame): DataFrame =
+    base.filter(col("vid") < 20)
 
   /** cos(a, b) from exact integer dot and norms. */
   private def cosine(d: Column, n2a: Column, n2b: Column): Column =
@@ -85,25 +96,127 @@ object Similarity {
   private val ivecSql =
     "[CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT) for x in embedding]"
 
+  // ------------------------------------------------------- retrieval core
+  //
+  // Every search below is a candidate generator — brute force, LSH
+  // buckets, IVF cells, PQ codes — feeding the one ranking step, [[topK]].
+  // Query rows are (q_id, qv, qn2) and broadcast; base rows are
+  // canonical (vid, v, n2); a candidate is (q_id, neighbor_id, score).
+
+  /** The per-query ranking every search ends in: rows of `cands`
+    * (q_id, neighbor_id, …) ranked within each q_id by `order`, the
+    * neighbor id breaking ties last, ranks ≤ k kept. Emits (q_id,
+    * rank: long, neighbor_id) followed by the remaining candidate
+    * columns (the score, or what a probe leg carries). */
+  private def topK(cands: DataFrame, k: Int,
+      order: Column*): DataFrame = {
+    require(k > 0, s"k must be positive: $k")
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(order :+ col("neighbor_id"): _*)
+    val rest = cands.columns.filterNot(Set("q_id", "neighbor_id")).map(col)
+    cands.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(Seq(col("q_id"), col("rank").cast("long").as("rank"),
+        col("neighbor_id")) ++ rest: _*)
+  }
+
+  /** Query rows (q_id, qv, qn2) of canonical `queries`. */
+  private def qside(queries: DataFrame): DataFrame =
+    queries.select(col("vid").as("q_id"), col("v").as("qv"),
+      col("n2").as("qn2"))
+
+  /** The candidate filter dropping "the query finding itself". */
+  private def notSelf(excludeSelf: Boolean): Column =
+    if (excludeSelf) col("vid") =!= col("q_id") else lit(true)
+
+  /** Exact-cosine candidates (q_id, neighbor_id, cos) of joined
+    * (q_id, qv, qn2) × (vid, v, n2) pairs. */
+  private def scored(pairs: DataFrame): DataFrame =
+    pairs.select(col("q_id"), col("vid").as("neighbor_id"),
+      cosine(dot(col("v"), col("qv")), col("n2"), col("qn2")).as("cos"))
+
+  /** The oracle's (q_id, rank, neighbor_id) columns of a ranked search. */
+  private def ids(ranked: DataFrame): DataFrame =
+    ranked.select("q_id", "rank", "neighbor_id")
+
+  /** Exact cosine top-k over canonical base/query frames: every query
+    * against every base row, the query side broadcast so the base
+    * streams once with no shuffle. The exactness baseline every index
+    * is measured against; [[knnBrute]] pins it to the test corpus and
+    * `Vectors.cosineTopK` exposes it. */
+  private[graft] def exactSearch(base: DataFrame, queries: DataFrame,
+      k: Int, excludeSelf: Boolean = true): DataFrame =
+    topK(scored(base.join(broadcast(qside(queries)), notSelf(excludeSelf))),
+      k, col("cos").desc)
+
+  /** Exact-cosine re-rank of a (q_id, neighbor_id) shortlist (the FAISS
+    * IndexRefine stage): codes find the neighborhood, a few exact
+    * cosines per query fix the order quantization scrambled. The
+    * shortlist streams and keeps its q_id partitioning, so the final
+    * rank needs no second shuffle. */
+  private def exactRerank(short: DataFrame, base: DataFrame,
+      queries: DataFrame, k: Int): DataFrame =
+    topK(scored(short.select(col("q_id"), col("neighbor_id").as("vid"))
+      .join(base.select(col("vid"), col("v"), col("n2")), "vid")
+      .join(broadcast(qside(queries)), "q_id")), k, col("cos").desc)
+
+  // ------------------------------------------------------- coarse centres
+
+  /** Centres (cid, cv) seeded from the rows with vid < n: the dense-id
+    * seed of the test corpus. */
+  private def firstCenters(base: DataFrame, n: Int): DataFrame =
+    base.filter(col("vid") < n).select(col("vid").as("cid"), col("v").as("cv"))
+
+  /** Centres seeded from the n lowest ids (sort-limit, so sparse ids
+    * are safe). */
+  private[graft] def lowestCenters(base: DataFrame, n: Int): DataFrame =
+    base.orderBy(col("vid")).limit(n)
+      .select(col("vid").as("cid"), col("v").as("cv"))
+
+  /** ⌈√n⌉ centres — the production cell dial (`Tuning.ivfCells`) — with
+    * the count derived IN-PLAN as a 1-row broadcast aggregate, so sizing
+    * costs no driver-side action. Dense-id contract: seeds are the rows
+    * with vid < ⌈√n⌉. */
+  private[graft] def sqrtNCenters(base: DataFrame): DataFrame = {
+    val kDf = base.agg(
+      ceil(sqrt(count(lit(1)).cast("double"))).cast("long").as("kcells"))
+    base.crossJoin(broadcast(kDf))
+      .filter(col("vid") < col("kcells"))
+      .select(col("vid").as("cid"), col("v").as("cv"))
+  }
+
+  /** One integer-exact Lloyd update: each centre named by `keys` moves
+    * to the per-dim truncated mean of its members' `vec` arrays (both
+    * engines truncate integer division identically, negatives
+    * included), rebuilt in dim order as `cv`. A centre that loses all
+    * members drops out, exactly like k-means. The one update behind IVF
+    * training, SemDeDup and PQ codebook training. */
+  private def lloydStep(members: DataFrame, vec: String,
+      keys: String*): DataFrame = {
+    val k = keys.map(col)
+    members.select(k :+ posexplode(col(vec)): _*)
+      .groupBy(k :+ col("pos"): _*)
+      .agg(expr("SUM(col) DIV COUNT(*)").as("cx"))
+      .groupBy(k: _*)
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
+        e => e.getField("cx")).as("cv"))
+  }
+
+  /** `seed` centres after one Lloyd update over canonical `points`,
+    * members assigned on the fused kernel. */
+  private[graft] def lloydCenters(points: DataFrame,
+      seed: DataFrame): DataFrame =
+    lloydStep(nearestAssign(points.select(col("vid"), col("v")), seed, "cid"),
+      "v", "cid")
+
   // ------------------------------------------------------------ brute kNN
 
-  /** Brute-force cosine top-5 for each query vector (vec_id < 20). The
-    * query set is broadcast, so the big side streams once with no shuffle;
-    * ranking is a per-query-partition window. At scale this is the
-    * exact-search baseline the ANN variant is measured against. */
+  /** Brute-force cosine top-5 for each test query: [[exactSearch]] on
+    * the test corpus. At scale this is the exact-search baseline the ANN
+    * variants are measured against. */
   def knnBrute(s: SparkSession, dir: String): DataFrame = {
-    val all = vecs(s, dir)
-    val q = all.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn2"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    all.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        cosine(dot(col("v"), col("qv")), col("n2"), col("qn2")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"))
+    val base = corpus(s, dir)
+    ids(exactSearch(base, testQueries(base), 5))
   }
 
   private[queries] val knnBruteSql =
@@ -135,14 +248,6 @@ object Similarity {
     java.lang.Long.parseLong(hex.substring(0, 15), 16) % 2001 - 1000
   }
 
-  /** LSH-bucketed approximate nearest neighbors: 6 random-hyperplane sign
-    * bits (wider at real scale — bits sized so buckets hold ~n/2^bits candidates) form a bucket id; candidates are bucket-mates only, ranked by
-    * exact cosine, top-3 per query. The bucket join is an equi-join Spark
-    * hash-partitions — at 100 TB each bucket holds ~n/2^16 vectors and no
-    * cross-bucket pair is ever considered (vs the O(n·q) brute scan). */
-  def annLsh(s: SparkSession, dir: String): DataFrame =
-    annLshVecs(vecs(s, dir), AnnBucketCap)
-
   /** Hot-bucket guard for the ANN path: buckets beyond this population are
     * excluded from candidate generation. Benign corpora never hit it (the
     * synthetic embeddings max out at 64/bucket at sf0.1, and production
@@ -151,95 +256,128 @@ object Similarity {
     * turn the bucket join into an O(n·q) scan. Mirrored in the oracle. */
   private[graft] val AnnBucketCap = 512
 
-  /** Vectors + their sign-bit LSH bucket id, lazily cached: the bucket
-    * column feeds the size guard and both join sides, and the cache makes
-    * that one signature computation instead of three. `persist` (not an
-    * eager checkpoint) keeps construction side-effect free — plan-only
-    * callers (explain, schema probes, plan-shape specs) never trigger a
-    * Spark job — and the blocks are reclaimed by the context cleaner once
-    * the plan is unreachable. */
-  private def lshBucketed(all: DataFrame, bits: Int = LSH_BITS): DataFrame = {
-    val bucketBits = (0 until bits).map { b =>
-      val w = array((1 to DIM).map(d => lit(lshWeight(b, d))): _*)
-      when(dot(w, col("v")) > 0, 1L << b).otherwise(0L)
-    }
-    all.withColumn("bucket", bucketBits.reduce(_ + _)).trackedPersist()
+  /** Sign-bit LSH signatures, one (t, bucket) row per table and input
+    * row: table t hashes `v` with hyperplanes t·bits + b (b < bits), so
+    * table 0 at 6 bits IS the [[annLsh]] index and a wider signature
+    * refines its buckets rather than re-shuffling the space. The one
+    * signature builder of every LSH path. */
+  private def lshSigned(df: DataFrame, bits: Int,
+      tables: Int = 1): DataFrame = {
+    val sigs = array((0 until tables).map { t =>
+      val bs = (0 until bits).map { b =>
+        val w = array((1 to DIM).map(d => lit(lshWeight(t * bits + b, d))): _*)
+        when(dot(w, col("v")) > 0, 1L << b).otherwise(0L)
+      }
+      struct(lit(t.toLong).as("t"), (lit(0L) +: bs).reduce(_ + _).as("bucket"))
+    }: _*)
+    df.select(col("*"), explode(sigs).as("x"))
+      .select(df.columns.map(col) :+ col("x.t").as("t") :+
+        col("x.bucket").as("bucket"): _*)
   }
 
-  /** Drop over-cap buckets — see [[AnnBucketCap]]. The guard anti-joins
-    * the OVER-cap bucket list (tiny by construction: at most n/cap ids),
-    * which broadcasts, instead of inner-joining the full bucket census. */
-  private def guardBuckets(bucketed: DataFrame, cap: Int): DataFrame = {
-    val hotBuckets = bucketed.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > cap)
-      .select(col("bucket"))
-    bucketed.join(hotBuckets, Seq("bucket"), "left_anti")
+  /** The OVER-cap (t, bucket) list — see [[AnnBucketCap]]. Anti-joined
+    * rather than inner-joining the full census: it is tiny by
+    * construction (at most n/cap ids per table), so it broadcasts. */
+  private def lshHot(sig: DataFrame, cap: Long): DataFrame =
+    sig.groupBy(col("t"), col("bucket")).agg(count(lit(1)).as("bn"))
+      .filter(col("bn") > cap)
+      .select(col("t"), col("bucket"))
+
+  /** Exact-cosine top-k over each probe's bucket-mates: `index` rows
+    * (vid, v, n2, t, bucket) meet the broadcast probe rows (q_id, qv,
+    * qn2, qt, qbucket) on an equi-join. Across several tables a pair can
+    * meet more than once, so it is deduplicated AFTER scoring (one
+    * double per pair, never a vector payload); one table's buckets are
+    * disjoint, Hamming probes included, and need no dedup shuffle. */
+  private def lshRank(index: DataFrame, probes: DataFrame, k: Int,
+      dedup: Boolean, excludeSelf: Boolean): DataFrame = {
+    val cands = scored(index.join(broadcast(probes),
+      col("t") === col("qt") && col("bucket") === col("qbucket") &&
+        notSelf(excludeSelf)))
+    topK(if (dedup) cands.groupBy(col("q_id"), col("neighbor_id"))
+      .agg(max(col("cos")).as("cos")) else cands, k, col("cos").desc)
   }
 
-  /** [[annLsh]] over explicit vectors with an explicit cap (spec surface). */
-  private[graft] def annLshVecs(all: DataFrame, cap: Int): DataFrame =
-    annLshVecsBits(all, cap, LSH_BITS)
+  /** Generic LSH top-k search over canonical (vid, v, n2) base/query
+    * frames — the (bits, tables, Hamming-probes) production dial as ONE
+    * search under every LSH query form. The base is signed once (a
+    * tables-element struct-array explode, lazily cached: it feeds the
+    * guard and the candidate join), over-cap buckets are dropped, and
+    * each query probes its own bucket plus, with `hamming = 1`, the
+    * `bits` buckets one sign flip away (Lv et al., "Multi-Probe LSH",
+    * VLDB 2007) — probes cost query work where tables cost index memory.
+    * A query whose own bucket is over the cap probes nothing from that
+    * table, not even its Hamming neighbours: the oracle draws queries
+    * from the guarded index. `bits = 0` degenerates to exact brute-force
+    * search (single bucket 0) — the spec law anchoring the index to the
+    * exact baseline. Vectors must be 64-dim (the engine's fixed
+    * hyperplane family); the query side broadcasts (tables ×
+    * (1 + bits·hamming) probe rows per query). */
+  private[graft] def lshSearch(base: DataFrame, queries: DataFrame,
+      k: Int, bits: Int, tables: Int, hamming: Int, cap: Long,
+      excludeSelf: Boolean = true): DataFrame = {
+    require(bits >= 0 && bits <= 32, s"bits out of range: $bits")
+    require(tables > 0, s"tables must be positive: $tables")
+    require(hamming >= 0 && hamming <= 1, s"hamming ∈ {0, 1}: $hamming")
+    def signed(df: DataFrame) =
+      lshSigned(df.select(col("vid"), col("v"), col("n2")), bits, tables)
+    val sig = signed(base).trackedPersist()
+    val hot = lshHot(sig, cap)
+    def guarded(df: DataFrame) = df.join(hot, Seq("t", "bucket"), "left_anti")
+    val flips = lit(0L) +:
+      (if (hamming >= 1) (0 until bits).map(b => lit(1L << b)) else Nil)
+    val probes = guarded(signed(queries))
+      .select(col("vid").as("q_id"), col("v").as("qv"), col("n2").as("qn2"),
+        col("t").as("qt"), col("bucket").as("qb0"),
+        explode(array(flips: _*)).as("flip"))
+      .select(col("q_id"), col("qv"), col("qn2"), col("qt"),
+        col("qb0").bitwiseXOR(col("flip")).as("qbucket"))
+    lshRank(guarded(sig), probes, k, dedup = tables > 1, excludeSelf)
+  }
 
-  /** The BITS axis of the (bits, tables) LSH dial — SURVEY §10's
-    * "6 bits at sf0.1 → 16+ at 100 TB" scaling knob, demonstrated rather
-    * than asserted: [[annLshWide]] runs this at [[LSH_BITS_WIDE]] bits,
-    * and [[lshOccupancy]] censuses how mean bucket occupancy falls
-    * ∝ 2^-bits while single-table recall falls with it — the recall that
-    * [[annLshMulti]]'s table union then buys back. The reference's
-    * analogous ship-tuned load-balance knob is the hashed-boundary
-    * partition count (`HashedBoundaryListPartitionFunction.cc:9-33`). */
-  private[graft] def annLshVecsBits(all: DataFrame, cap: Int, bits: Int): DataFrame = {
-    val guarded = guardBuckets(lshBucketed(all, bits), cap)
-    val q = guarded.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("n2").as("qn2"), col("bucket").as("qbucket"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    guarded.join(broadcast(q),
-        col("bucket") === col("qbucket") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        cosine(dot(col("v"), col("qv")), col("n2"), col("qn2")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"))
+  /** LSH-bucketed approximate nearest neighbors: 6 random-hyperplane sign
+    * bits (wider at real scale — bits sized so buckets hold ~n/2^bits
+    * candidates) form a bucket id; candidates are bucket-mates only,
+    * ranked by exact cosine, top-3 per query. The bucket join is an
+    * equi-join — at 100 TB each bucket holds ~n/2^16 vectors and no
+    * cross-bucket pair is ever considered (vs the O(n·q) brute scan). */
+  def annLsh(s: SparkSession, dir: String): DataFrame =
+    annLshAt(s, dir, LSH_BITS, tables = 1, hamming = 0)
+
+  /** [[lshSearch]] on the test corpus at the oracle's cap, top-3. */
+  private def annLshAt(s: SparkSession, dir: String, bits: Int,
+      tables: Int, hamming: Int): DataFrame = {
+    val base = corpus(s, dir)
+    ids(lshSearch(base, testQueries(base), 3, bits, tables, hamming,
+      AnnBucketCap))
   }
 
   /** [[annLsh]] served FROM A PERSISTED INDEX — the [[annPqServed]]
     * build-once/serve-many contract on the LSH axis: the guarded
-    * (vec_id, bucket) table — 16 bytes per vector, the whole index —
+    * (vid, bucket) table — 16 bytes per vector, the whole index —
     * is written to parquet inside a deferred sink→source stage and read
     * back for serving; candidate vectors are fetched by id equi-join
     * against the live vector table (the posting-fetch a real serving
-    * tier does) and scored by exact cosine as in the live build. The
-    * oracle is DELIBERATELY the [[annLsh]] SQL — persistence must not
-    * change a row, and the hash gate proves it. */
+    * tier does) and ranked as in the live build. The oracle is
+    * DELIBERATELY the [[annLsh]] SQL — persistence must not change a
+    * row, and the hash gate proves it. */
   def annLshServed(s: SparkSession, dir: String): DataFrame = {
     val out = graft.core.Scratch.dir("lshidx", dir)
-    val idx = graft.plans.DeferredIngest(s, "vec_id BIGINT, bucket BIGINT") {
-      guardBuckets(lshBucketed(vecs(s, dir)), AnnBucketCap)
-        .select(col("vec_id"), col("bucket"))
+    val idx = graft.plans.DeferredIngest(s, "vid BIGINT, bucket BIGINT") {
+      val sig = lshSigned(corpus(s, dir), LSH_BITS).trackedPersist()
+      sig.join(lshHot(sig, AnnBucketCap), Seq("t", "bucket"), "left_anti")
+        .select(col("vid"), col("bucket"))
         .write.mode("overwrite").parquet(out)
-      s.read.parquet(out).select(col("vec_id"), col("bucket"))
+      s.read.parquet(out).select(col("vid"), col("bucket"))
     }
-    val live = vecs(s, dir).select(col("vec_id").as("lid"), col("v"),
-      col("n2"))
-    val bucketed = Caches.tracked(
-      idx.join(live, col("vec_id") === col("lid")).drop("lid"))
-    val q = bucketed.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("n2").as("qn2"), col("bucket").as("qbucket"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    bucketed.join(broadcast(q),
-        col("bucket") === col("qbucket") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        cosine(dot(col("v"), col("qv")), col("n2"), col("qn2")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"))
+    val live = corpus(s, dir).withColumnRenamed("vid", "lid")
+    val index = Caches.tracked(
+      idx.join(live, col("vid") === col("lid")).drop("lid"))
+      .withColumn("t", lit(0L))
+    val probes = testQueries(index).select(col("vid").as("q_id"),
+      col("v").as("qv"), col("n2").as("qn2"), col("t").as("qt"),
+      col("bucket").as("qbucket"))
+    ids(lshRank(index, probes, 3, dedup = false, excludeSelf = true))
   }
 
   private def annLshSqlFor(bits: Int) =
@@ -278,13 +416,17 @@ object Similarity {
     * right way on a real corpus. */
   private val LSH_BITS_WIDE = 12
 
-  /** Single-table LSH ANN at [[LSH_BITS_WIDE]] bits — the bits axis made
-    * runnable (see [[annLshVecsBits]]). Hyperplanes are the same
-    * deterministic family (`lshWeight(b, d)`, b < 12), so the first six
-    * bits ARE the [[annLsh]] signature: each 12-bit bucket is a refinement
-    * of a 6-bit bucket, never a re-shuffle of the space. */
+  /** Single-table LSH ANN at [[LSH_BITS_WIDE]] bits — the BITS axis of
+    * the (bits, tables) dial (SURVEY §10's "6 bits at sf0.1 → 16+ at
+    * 100 TB"), demonstrated rather than asserted: [[lshOccupancy]]
+    * censuses how mean bucket occupancy falls ∝ 2^-bits while
+    * single-table recall falls with it — the recall [[annLshMulti]]'s
+    * table union buys back. The first six hyperplanes ARE the [[annLsh]]
+    * signature, so each 12-bit bucket refines a 6-bit one. The
+    * reference's analogous load-balance knob is the hashed-boundary
+    * partition count (`HashedBoundaryListPartitionFunction.cc:9-33`). */
   def annLshWide(s: SparkSession, dir: String): DataFrame =
-    annLshVecsBits(vecs(s, dir), AnnBucketCap, LSH_BITS_WIDE)
+    annLshAt(s, dir, LSH_BITS_WIDE, tables = 1, hamming = 0)
 
   private val annLshWideSql = annLshSqlFor(LSH_BITS_WIDE)
 
@@ -303,32 +445,11 @@ object Similarity {
     *
     * Scale shape: the probe explosion rides the BROADCAST query side
     * (queries × (bits+1) rows — metadata-sized at any corpus); the index
-    * side is the same guarded bucketed frame annLsh joins, scanned once.
+    * side is the same guarded signed frame annLsh joins, scanned once.
     * Sign-LSH buckets are disjoint, so multi-probe candidates never
     * duplicate and need no dedup agg (unlike the multi-table union). */
   def annLshMultiProbe(s: SparkSession, dir: String): DataFrame =
-    annLshMultiProbeVecs(vecs(s, dir), AnnBucketCap)
-
-  private[graft] def annLshMultiProbeVecs(all: DataFrame, cap: Int): DataFrame = {
-    val guarded = guardBuckets(lshBucketed(all), cap)
-    val flips = array((lit(0L) +: (0 until LSH_BITS).map(b => lit(1L << b))): _*)
-    val q = guarded.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("n2").as("qn2"), col("bucket").as("qbucket"),
-        explode(flips).as("flip"))
-      .select(col("q_id"), col("qv"), col("qn2"),
-        expr("qbucket ^ flip").as("pbucket"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    guarded.join(broadcast(q),
-        col("bucket") === col("pbucket") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        cosine(dot(col("v"), col("qv")), col("n2"), col("qn2")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"))
-  }
+    annLshAt(s, dir, LSH_BITS, tables = 1, hamming = 1)
 
   private val annLshMultiProbeSql =
     s"""WITH iv AS (
@@ -375,7 +496,7 @@ object Similarity {
     * production ANN stack next to LSH (bits/tables/probes) and IVF
     * (cells/probes/training): vectors compress to [[PQ_M]] codebook codes
     * (one per [[PQ_SUB]]-dim subspace, [[PQ_K]] centroids each, codebook =
-    * the subvectors of 16 hash-order pivot vectors, the untrained-seed
+    * the subvectors of the 16 lowest-id pivot vectors, the untrained-seed
     * convention [[annIvf]] uses), and queries score candidates by
     * asymmetric distance (ADC): a per-query LUT of exact subspace
     * distances to every centroid, summed over the candidate's 8 codes —
@@ -391,104 +512,10 @@ object Similarity {
     * 256-byte vectors — the bandwidth win that makes exhaustive ADC scans
     * viable where float scans are not; composing with the IVF cell filter
     * (scan only probed cells) is the same join with `cell` added to the
-    * code key. */
-  /** Per-(vector, subspace) views and the codebook over them. */
-  private def pqSub(all: DataFrame): DataFrame = {
-    val subIdx = posexplode(expr(
-      s"transform(sequence(0, ${PQ_M - 1}), m -> slice(v, m * $PQ_SUB + 1, $PQ_SUB))"))
-    all.select(col("vec_id"), subIdx)
-      .select(col("vec_id"), col("pos").as("m"), col("col").as("vm"))
-  }
-
-  private def pqCodebook(sv: DataFrame): DataFrame =
-    sv.filter(col("vec_id") < PQ_K)
-      .select(col("m").as("cm"), col("vec_id").as("cid"), col("vm").as("cv"))
-
-  /** Slice-L2² on the fused native kernel — value-identical to the
-    * aggregate(zip_with) composition (VectorKernelSpec parity), and the
-    * difference matters here: code assignment evaluates this on
-    * n·M·K rows (the 100× drive caught the interpreted composition
-    * burning ~10 min/pass at 205k vectors where the codegen'd kernel is
-    * seconds — ZipWith is CodegenFallback, and it also forced the
-    * enclosing aggregation onto the SortAggregate path). */
-  private def pqD2 = l2s(col("vm"), col("cv"))
-
-  /** (vec_id, m, code) nibble codes — the compressed index (spec surface). */
-  private[graft] def pqCodesVecs(all: DataFrame): DataFrame = {
-    val sv = pqSub(all)
-    // struct-MIN argmin (partial-aggregable; ties on cid) — identical
-    // to the row_number(ORDER BY dist, cid) = 1 form it replaces
-    sv.join(broadcast(pqCodebook(sv)), col("m") === col("cm"))
-      .select(col("vec_id"), col("m"), col("cid"), pqD2.as("dist"))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min(struct(col("dist"), col("cid"))).as("best"))
-      .select(col("vec_id"), col("m"), col("best.cid").as("code"))
-  }
-
-  private[graft] def pqCodes(s: SparkSession, dir: String): DataFrame =
-    pqCodesVecs(vecs(s, dir))
-
-  /** Generic PQ/ADC top-k search over canonical (vid, v) base/query
-    * frames — codebooks from the base's 16 lowest-id pivots, candidates
-    * scored by the 8-add ADC sum, ties and ranks fully deterministic.
-    * The [[graft.api.Vectors.pqTopK]] surface; [[annPq]] is this shape
-    * pinned to the testdata and the oracle. */
-  private[graft] def pqSearch(base: DataFrame, queries: DataFrame,
-      k: Int, excludeSelf: Boolean = true): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
-    val subIdx = posexplode(expr(
-      s"transform(sequence(0, ${PQ_M - 1}), m -> slice(v, m * $PQ_SUB + 1, $PQ_SUB))"))
-    def subs(df: DataFrame, idAs: String): DataFrame =
-      df.select(col("vid"), subIdx)
-        .select(col("vid").as(idAs), col("pos").as("m"), col("col").as("vm"))
-    val sv = subs(base, "vec_id")
-    val cb = sv
-      .join(broadcast(base.orderBy(col("vid")).limit(PQ_K)
-        .select(col("vid").as("pivot"))), col("vec_id") === col("pivot"))
-      .select(col("m").as("cm"), col("vec_id").as("cid"), col("vm").as("cv"))
-    val codes = sv.join(broadcast(cb), col("m") === col("cm"))
-      .select(col("vec_id"), col("m"), col("cid"), pqD2.as("dist"))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min(struct(col("dist"), col("cid"))).as("best"))
-      .select(col("vec_id"), col("m"), col("best.cid").as("code"))
-    val lut = subs(queries, "q_id")
-      .join(broadcast(cb), col("m") === col("cm"))
-      .select(col("q_id"), col("m").as("lm"), col("cid").as("lcid"),
-        pqD2.as("lutd"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc"), col("vec_id"))
-    codes.join(broadcast(lut),
-        col("m") === col("lm") && col("code") === col("lcid"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("lutd")).as("adc"))
-      .filter(if (excludeSelf) col("vec_id") =!= col("q_id") else lit(true))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"), col("adc"))
-  }
-
+    * code key ([[annIvfPq]]). */
   def annPq(s: SparkSession, dir: String): DataFrame = {
-    val all = vecs(s, dir)
-    val sv = pqSub(all)
-    val cb = pqCodebook(sv)
-    val d2 = pqD2
-    val codes = pqCodesVecs(all)
-    val lut = sv.filter(col("vec_id") < 20)
-      .join(broadcast(cb), col("m") === col("cm"))
-      .select(col("vec_id").as("q_id"), col("m").as("lm"),
-        col("cid").as("lcid"), d2.as("lutd"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc"), col("vec_id"))
-    codes.join(broadcast(lut),
-        col("m") === col("lm") && col("code") === col("lcid"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("lutd")).as("adc"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"))
+    val base = corpus(s, dir)
+    ids(pqSearch(base, testQueries(base), pqPivots, rounds = 0, k = 3))
   }
 
   private val annPqSql =
@@ -521,6 +548,118 @@ object Similarity {
       |SELECT q_id, CAST(rank AS BIGINT) AS rank, vec_id AS neighbor_id
       |FROM ranked WHERE rank <= 3""".stripMargin
 
+  /** Per-(row, subspace) views (…, m, vm) of the vector `v`; every other
+    * column of `df` is kept as a key. */
+  private def pqSub(df: DataFrame): DataFrame = {
+    val keys = df.columns.filter(_ != "v").map(col)
+    df.select(keys :+ posexplode(expr(
+      s"transform(sequence(0, ${PQ_M - 1}), m -> slice(v, m * $PQ_SUB + 1, $PQ_SUB))")): _*)
+      .select(keys :+ col("pos").as("m") :+ col("col").as("vm"): _*)
+  }
+
+  private def asCodebook(sv: DataFrame): DataFrame =
+    sv.select(col("m").as("cm"), col("vid").as("cid"), col("vm").as("cv"))
+
+  /** The test corpus' seed codebook (cm, cid, cv): the subvectors of its
+    * [[PQ_K]] lowest (dense) ids. */
+  private def pqPivots(sv: DataFrame): DataFrame =
+    asCodebook(sv.filter(col("vid") < PQ_K))
+
+  /** A seed codebook from the `n` lowest ids of `base` (sort-limit, so
+    * sparse ids are safe) — the `Vectors.pqTopK` seed. */
+  private[graft] def pqLowest(base: DataFrame, n: Int): DataFrame => DataFrame =
+    sv => asCodebook(sv.join(broadcast(base.orderBy(col("vid")).limit(n)
+      .select(col("vid").as("pivot"))), col("vid") === col("pivot")))
+
+  /** Slice-L2² on the fused native kernel — value-identical to the
+    * aggregate(zip_with) composition (VectorKernelSpec parity), and the
+    * difference matters here: code assignment evaluates this on
+    * n·M·K rows (the 100× drive caught the interpreted composition
+    * burning ~10 min/pass at 205k vectors where the codegen'd kernel is
+    * seconds — ZipWith is CodegenFallback, and it also forced the
+    * enclosing aggregation onto the SortAggregate path). */
+  private def pqD2 = l2s(col("vm"), col("cv"))
+
+  /** Nearest-centroid codes (…, m, code) of the subvector rows `sv`
+    * against codebook `cb` — the compressed index. The argmin is an
+    * aggregated struct-MIN (partial-aggregable, ties on cid), so no
+    * (vector, subspace) row sorts its K distances. */
+  private def pqEncode(sv: DataFrame, cb: DataFrame): DataFrame = {
+    val keys = sv.columns.filter(_ != "vm").map(col)
+    sv.join(broadcast(cb), col("m") === col("cm"))
+      .groupBy(keys: _*)
+      .agg(min(struct(pqD2.as("dist"), col("cid"))).as("best"))
+      .select(keys :+ col("best.cid").as("code"): _*)
+  }
+
+  /** (vid, m, code) nibble codes of the test corpus under the pivot
+    * codebook — the index [[annPqServed]] persists (spec surface). */
+  private[graft] def pqCodes(s: SparkSession, dir: String): DataFrame = {
+    val sv = pqSub(corpus(s, dir).select(col("vid"), col("v")))
+    pqEncode(sv, pqPivots(sv))
+  }
+
+  /** ADC candidates (q_id, neighbor_id, adc): the LUT rows (…, m, code,
+    * lutd) of every query subvector row `qsv` against codebook `cb`
+    * broadcast into the code rows on every column the two share (m and
+    * code, plus cell for IVF-PQ), and each candidate's M looked-up
+    * distances summed. */
+  private def pqAdc(codes: DataFrame, qsv: DataFrame, cb: DataFrame,
+      excludeSelf: Boolean): DataFrame = {
+    val keys = qsv.columns.filter(_ != "vm").map(col)
+    val lut = qsv.join(broadcast(cb), col("m") === col("cm"))
+      .select(keys :+ col("cid").as("code") :+ pqD2.as("lutd"): _*)
+    codes.join(broadcast(lut), codes.columns.filter(lut.columns.contains).toSeq)
+      .groupBy(col("q_id"), col("vid"))
+      .agg(sum(col("lutd")).as("adc"))
+      .filter(notSelf(excludeSelf))
+      .select(col("q_id"), col("vid").as("neighbor_id"), col("adc"))
+  }
+
+  /** The serving half of the PQ pipeline: ADC top-k of `codes` for
+    * `queries` against codebook `cb`; with `rerank` > 0 the ADC
+    * top-max(rerank, k) shortlist is re-ranked by exact cosine
+    * ([[exactRerank]]) and the score column is `cos` instead of `adc`. */
+  private def pqRank(codes: DataFrame, cb: DataFrame, base: DataFrame,
+      queries: DataFrame, k: Int, rerank: Int,
+      excludeSelf: Boolean): DataFrame = {
+    val adc = pqAdc(codes,
+      pqSub(queries.select(col("vid").as("q_id"), col("v"))), cb, excludeSelf)
+    if (rerank > 0)
+      exactRerank(topK(adc, math.max(rerank, k), col("adc")), base, queries, k)
+    else topK(adc, k, col("adc"))
+  }
+
+  /** Generic PQ/ADC top-k search over canonical (vid, v, n2) base/query
+    * frames — the one pipeline under every PQ form: subvectors →
+    * codebook (`seed`, refined by `rounds` integer-exact Lloyd updates,
+    * [[lloydStep]] per subspace) → codes → per-query LUT → ADC top-k →
+    * optional exact re-rank ([[pqRank]]). The production dials are
+    * arguments: seed size (256 = the k* = 2⁸ the PQ paper standardizes
+    * on; the code widens nibble → byte; [[graft.api.Tuning.pqCentroids]]
+    * picks it from corpus size), rounds, and `rerank`. The PLANS do not
+    * change with the dials — only the broadcast tables grow (codebook
+    * M × centroids subvectors, LUT queries × M × centroids rows, ≈ 0.5 MB
+    * per 20 queries at 256). Training is integer-exact with ties on
+    * (dist, cid), so runs are deterministic on any cluster layout. The
+    * subvectors and each round's codebook are cached: the tables are
+    * tiny but anchor a corpus-sized assignment pass, and an uncached
+    * chain would recompute round r−1 inside round r. `queries` must be
+    * broadcast-sized (the LUT and shortlist key on it). Recall at the
+    * 256-centroid dial is gated as ann_pq_256* next to the 16-centroid
+    * keys (BenchGate). */
+  private[graft] def pqSearch(base: DataFrame, queries: DataFrame,
+      seed: DataFrame => DataFrame, rounds: Int, k: Int, rerank: Int = 0,
+      excludeSelf: Boolean = true): DataFrame = {
+    val sv = Caches.tracked(pqSub(base.select(col("vid"), col("v"))))
+    val cb = (0 until rounds).foldLeft(seed(sv)) { (c, _) =>
+      Caches.tracked(lloydStep(sv.join(pqEncode(sv, c), Seq("vid", "m")),
+        "vm", "m", "code")
+        .select(col("m").as("cm"), col("code").as("cid"), col("cv")))
+    }
+    pqRank(pqEncode(sv, cb), cb, base, queries, k, rerank, excludeSelf)
+  }
+
   /** [[annPq]] served FROM A PERSISTED INDEX: the nibble codes are
     * written to parquet — the 4-bytes-per-vector index file a build job
     * ships — inside a deferred sink→source stage
@@ -534,178 +673,27 @@ object Similarity {
   def annPqServed(s: SparkSession, dir: String): DataFrame = {
     val out = graft.core.Scratch.dir("pqidx", dir)
     val codes = graft.plans.DeferredIngest(s,
-      "vec_id BIGINT, m INT, code BIGINT") {
+        "vid BIGINT, m INT, code BIGINT") {
       pqCodes(s, dir).write.mode("overwrite").parquet(out)
-      s.read.parquet(out).select(col("vec_id"), col("m"), col("code"))
+      s.read.parquet(out).select(col("vid"), col("m"), col("code"))
     }
-    val sv = pqSub(vecs(s, dir))
-    val cb = pqCodebook(sv)
-    val lut = sv.filter(col("vec_id") < 20)
-      .join(broadcast(cb), col("m") === col("cm"))
-      .select(col("vec_id").as("q_id"), col("m").as("lm"),
-        col("cid").as("lcid"), pqD2.as("lutd"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc"), col("vec_id"))
-    codes.join(broadcast(lut),
-        col("m") === col("lm") && col("code") === col("lcid"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("lutd")).as("adc"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"))
+    val base = corpus(s, dir)
+    val cb = pqPivots(pqSub(base.select(col("vid"), col("v"))))
+    ids(pqRank(codes, cb, base, testQueries(base), 3, rerank = 0,
+      excludeSelf = true))
   }
 
   /** PQ with TRAINED codebooks — the [[annIvf]] → [[annIvfTrained]] lift
     * applied to the quantization axis: the pivot codebooks of [[annPq]]
-    * are refined by ONE integer-exact Lloyd update per subspace (per-dim
-    * truncated-mean of each code's assigned subvectors — the k-means step
-    * real PQ training iterates), then vectors re-encode and queries score
-    * by ADC against the refined centroids. Everything stays integer-exact
-    * (both engines truncate integer division identically, negatives
-    * included), so the oracle replays train+encode+LUT+rank bit-for-bit.
-    *
-    * Scale shape: identical to [[annPq]] plus one (PQ_M×PQ_K×PQ_SUB)-row
-    * training agg — the update costs one pass over the (vector, subspace)
-    * rows and produces a table that still broadcasts at any corpus size;
-    * more Lloyd rounds repeat the same two-step plan. The refined-distance
-    * frame is computed ONCE and shared by re-encoding and the query LUT. */
+    * are refined by ONE integer-exact Lloyd update per subspace (the
+    * k-means step real PQ training iterates), then vectors re-encode and
+    * queries score by ADC against the refined centroids; the oracle
+    * replays train+encode+LUT+rank bit-for-bit. Scale shape: [[annPq]]
+    * plus one (PQ_M×PQ_K×PQ_SUB)-row training agg whose table still
+    * broadcasts at any corpus size. */
   def annPqTrained(s: SparkSession, dir: String): DataFrame = {
-    val sv = Caches.tracked(pqSub(vecs(s, dir)))
-    val codes0 = sv.join(broadcast(pqCodebook(sv)), col("m") === col("cm"))
-      .select(col("vec_id"), col("m"), col("cid"), pqD2.as("dist"))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min(struct(col("dist"), col("cid"))).as("best"))
-      .select(col("vec_id"), col("m"), col("best.cid").as("code"))
-    val cb1 = sv.join(codes0, Seq("vec_id", "m"))
-      .select(col("m"), col("code"), posexplode(col("vm")))
-      .groupBy(col("m"), col("code"), col("pos"))
-      .agg(expr("SUM(col) DIV COUNT(*)").as("cx"))
-      .groupBy(col("m"), col("code"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-        e => e.getField("cx")).as("cv"))
-      .select(col("m").as("cm"), col("code").as("cid"), col("cv"))
-    val dists1 = Caches.tracked(
-      sv.join(broadcast(cb1), col("m") === col("cm"))
-        .select(col("vec_id"), col("m"), col("cid"), pqD2.as("dist")))
-    val codes1 = dists1
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min(struct(col("dist"), col("cid"))).as("best"))
-      .select(col("vec_id"), col("m"), col("best.cid").as("code"))
-    val lut = dists1.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("m").as("lm"),
-        col("cid").as("lcid"), col("dist").as("lutd"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc"), col("vec_id"))
-    codes1.join(broadcast(lut),
-        col("m") === col("lm") && col("code") === col("lcid"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("lutd")).as("adc"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"))
-  }
-
-  /** PQ at the PRODUCTION dial — [[annPqTrained]]'s machinery with the
-    * three knobs a real deployment turns, as arguments instead of
-    * constants: `centroids` per subspace codebook (256 = the k* = 2⁸ the
-    * PQ paper standardizes on; the code widens nibble → byte), `rounds`
-    * full Lloyd refinements instead of one, and an exact-cosine re-rank
-    * of the ADC top-`rerank` shortlist (the IndexRefine stage —
-    * [[annIvfPq]]'s [[PQ_RERANK]], here on the flat index). The PLANS are
-    * the 16-centroid plans unchanged — only the broadcast tables grow
-    * (codebook m × centroids subvectors, LUT queries × m × centroids
-    * rows; at 256 centroids ≈ 2 k rows and ≈ 0.5 MB per 20 queries —
-    * broadcast-sized at any corpus scale, which is the entire point of
-    * PQ). Training is integer-exact (truncated-mean Lloyd, ties on
-    * (dist, cid)), so runs are deterministic on any cluster layout; a
-    * centroid that loses all members drops out of the codebook, exactly
-    * like k-means. Each round's codebook is cached: the tables are tiny
-    * but anchor a corpus-sized assignment pass, and an uncached chain
-    * would recompute round r−1 inside round r.
-    *
-    * `queries` must be broadcast-sized (the LUT and shortlist key on it)
-    * — the same serving convention as [[lshSearch]]. Recall is measured
-    * and GATED as ann_pq_256 / ann_pq_256_refined next to the
-    * 16-centroid keys (BenchGate), so the centroid axis is a telemetry
-    * curve, not prose; [[graft.api.Tuning.pqCentroids]] picks the dial
-    * from corpus size. */
-  private[graft] def pqSearchProduction(base: DataFrame, queries: DataFrame,
-      k: Int, centroids: Int, rounds: Int, rerank: Int,
-      excludeSelf: Boolean = true): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
-    require(centroids > 0, s"centroids must be positive: $centroids")
-    require(rounds >= 0 && rerank >= 0, "rounds/rerank must be >= 0")
-    val subIdx = posexplode(expr(
-      s"transform(sequence(0, ${PQ_M - 1}), m -> slice(v, m * $PQ_SUB + 1, $PQ_SUB))"))
-    def subs(df: DataFrame, idAs: String): DataFrame =
-      df.select(col("vid"), subIdx)
-        .select(col("vid").as(idAs), col("pos").as("m"), col("col").as("vm"))
-    val sv = Caches.tracked(subs(base, "vec_id"))
-    val seed = sv
-      .join(broadcast(base.orderBy(col("vid")).limit(centroids)
-        .select(col("vid").as("pivot"))), col("vec_id") === col("pivot"))
-      .select(col("m").as("cm"), col("vec_id").as("cid"), col("vm").as("cv"))
-    // nearest-centroid codes via an AGGREGATED argmin (min of
-    // (dist, cid) structs) — at 256 centroids a per-(vector, subspace)
-    // rank window would sort 256 rows per cell for one survivor
-    def assign(cb: DataFrame): DataFrame =
-      sv.join(broadcast(cb), col("m") === col("cm"))
-        .select(col("vec_id"), col("m"), col("cid"), pqD2.as("dist"))
-        .groupBy(col("vec_id"), col("m"))
-        .agg(min(struct(col("dist"), col("cid"))).as("best"))
-        .select(col("vec_id"), col("m"), col("best.cid").as("code"))
-    val cb = (0 until rounds).foldLeft(seed) { (c, _) =>
-      Caches.tracked(sv.join(assign(c), Seq("vec_id", "m"))
-        .select(col("m"), col("code"), posexplode(col("vm")))
-        .groupBy(col("m"), col("code"), col("pos"))
-        .agg(expr("SUM(col) DIV COUNT(*)").as("cx"))
-        .groupBy(col("m"), col("code"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-          e => e.getField("cx")).as("cv"))
-        .select(col("m").as("cm"), col("code").as("cid"), col("cv")))
-    }
-    val codes = assign(cb)
-    val lut = subs(queries, "q_id")
-      .join(broadcast(cb), col("m") === col("cm"))
-      .select(col("q_id"), col("m").as("lm"), col("cid").as("lcid"),
-        pqD2.as("lutd"))
-    val wAdc = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc"), col("vec_id"))
-    val adc = codes.join(broadcast(lut),
-        col("m") === col("lm") && col("code") === col("lcid"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("lutd")).as("adc"))
-      .filter(if (excludeSelf) col("vec_id") =!= col("q_id") else lit(true))
-    if (rerank <= 0) {
-      adc.withColumn("rank", row_number().over(wAdc))
-        .filter(col("rank") <= k)
-        .select(col("q_id"), col("rank").cast("long").as("rank"),
-          col("vec_id").as("neighbor_id"), col("adc"))
-    } else {
-      // IndexRefine: codes find the neighborhood, `rerank` exact
-      // cosines per query fix the order quantization scrambled; the
-      // queries×rerank shortlist broadcasts against the vector table
-      val short = adc.withColumn("srank", row_number().over(wAdc))
-        .filter(col("srank") <= math.max(rerank, k))
-        .select(col("q_id"), col("vec_id"))
-      val q = queries.select(col("vid").as("q_id"), col("v").as("qv"),
-        col("n2").as("qn2"))
-      val wCos = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      base.select(col("vid").as("vec_id"), col("v"), col("n2"))
-        .join(broadcast(short), "vec_id")
-        .join(broadcast(q), "q_id")
-        .select(col("q_id"), col("vec_id"),
-          cosine(dot(col("v"), col("qv")), col("n2"), col("qn2")).as("cos"))
-        .withColumn("rank", row_number().over(wCos))
-        .filter(col("rank") <= k)
-        .select(col("q_id"), col("rank").cast("long").as("rank"),
-          col("vec_id").as("neighbor_id"), col("cos"))
-    }
+    val base = corpus(s, dir)
+    ids(pqSearch(base, testQueries(base), pqPivots, rounds = 1, k = 3))
   }
 
   private val annPqTrainedSql =
@@ -760,84 +748,34 @@ object Similarity {
     * query's residual against THAT center. Candidates are scored only
     * inside probed cells (the IVF pruning) by 8 integer LUT adds (the PQ
     * compression), and the ADC top-[[PQ_RERANK]] shortlist is re-ranked
-    * by exact cosine (the FAISS IndexRefine stage — codes find the
-    * neighborhood, ten exact distances per query fix the order
-    * quantization error scrambled): the full composed production serving
-    * path, integer-exact so the oracle replays it bit-for-bit.
+    * by exact cosine: the full composed production serving path on the
+    * shared encode/ADC/re-rank steps, integer-exact so the oracle
+    * replays it bit-for-bit.
     *
     * Scale shape: [[annIvf]]'s pruning (work ∝ probed cells, not corpus)
     * × [[annPq]]'s bandwidth (4-byte codes, broadcast codebooks + LUTs);
     * the candidate join carries (cell, m, code) keys only. Per-candidate
     * dedup is structural — a vector lives in ONE cell. */
   def annIvfPq(s: SparkSession, dir: String): DataFrame = {
-    val all = Caches.tracked(vecs(s, dir))
-    val cc = all.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("ccid"), col("v").as("ccv"))
-    val dCell = l2s(col("v"), col("ccv"))
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("ccid"))
-    val residual = zip_with(col("v"), col("ccv"), (x, y) => x - y)
+    val base = Caches.tracked(corpus(s, dir))
+    val queries = testQueries(base)
+    val cc = firstCenters(base, 8)
+    def residual(v: String) = zip_with(col(v), col("cv"), (x, y) => x - y)
     // coarse assignment on the fused kernel, then ONE broadcast
     // equi-join on the winning cell recovers that center for the
-    // residual — n×1 rows, the ivfDriftCensusOf shape
-    val assigned = nearestAssign(all.select(col("vec_id"), col("v")),
-        cc.select(col("ccid").as("cid"), col("ccv").as("cv")), "cell")
-      .join(broadcast(cc), col("cell") === col("ccid"))
-      .select(col("vec_id"), col("cell"), residual.as("r"))
-    val subIdx = posexplode(expr(
-      s"transform(sequence(0, ${PQ_M - 1}), m -> slice(r, m * $PQ_SUB + 1, $PQ_SUB))"))
-    // referenced twice (codebook filter + encode join) — cache so the
-    // assign+residual+subvector chain runs once per action
-    val sv = assigned.select(col("vec_id"), col("cell"), subIdx)
-      .select(col("vec_id"), col("cell"), col("pos").as("m"), col("col").as("vm"))
+    // residual — n×1 rows, the ivfDriftCensusOf shape; referenced twice
+    // (codebook filter + encode join), so cached
+    val sv = pqSub(nearestAssign(base.select(col("vid"), col("v")), cc, "cell")
+      .join(broadcast(cc), col("cell") === col("cid"))
+      .select(col("vid"), col("cell"), residual("v").as("v")))
       .trackedPersist()
-    val cb = sv.filter(col("vec_id") < PQ_K)
-      .select(col("m").as("cm"), col("vec_id").as("cid"), col("vm").as("cv"))
-    // encode argmin via struct-MIN (partial-aggregable, no per-(vec, m)
-    // window sort of the n·M·K distance rows) — ties break on cid
-    // exactly like the row_number(ORDER BY dist, cid) = 1 form it
-    // replaces (the engine-wide argmin discipline)
-    val codes = sv.join(broadcast(cb), col("m") === col("cm"))
-      .groupBy(col("vec_id"), col("cell"), col("m"))
-      .agg(min(struct(pqD2.as("dist"), col("cid"))).as("best"))
-      .select(col("vec_id"), col("cell"), col("m"), col("best.cid").as("code"))
-    // per probed cell, the query's residual against THAT center — a
-    // top-2 window over the 20-query side only
-    val qsv = all.filter(col("vec_id") < 20).join(broadcast(cc))
-      .select(col("vec_id"), col("v"), col("ccid"), col("ccv"),
-        dCell.as("dist"))
-      .withColumn("rn", row_number().over(wAssign)).filter(col("rn") <= 2)
-      .select(col("vec_id").as("q_id"), col("ccid").as("qcell"), residual.as("r"))
-      .select(col("q_id"), col("qcell"), subIdx)
-      .select(col("q_id"), col("qcell"), col("pos").as("m"), col("col").as("vm"))
-    val lut = qsv.join(broadcast(cb), col("m") === col("cm"))
-      .select(col("q_id"), col("qcell"), col("m").as("lm"),
-        col("cid").as("lcid"), pqD2.as("lutd"))
-    val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("vec_id"))
-    val shortlist = codes.join(broadcast(lut),
-        col("cell") === col("qcell") && col("m") === col("lm") &&
-          col("code") === col("lcid"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("lutd")).as("adc"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("arn", row_number().over(wAdc))
-      .filter(col("arn") <= PQ_RERANK)
-      .select(col("q_id"), col("vec_id"))
-    // refine: exact-cosine re-rank of the ADC shortlist (FAISS
-    // IndexRefine) — the codes find the neighborhood, 10 exact
-    // distances per query fix the order quantization error scrambled
-    val qv = all.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn2"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    shortlist
-      .join(all.select(col("vec_id"), col("v"), col("n2")), "vec_id")
-      .join(broadcast(qv), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        cosine(dot(col("v"), col("qv")), col("n2"), col("qn2")).as("cos"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"))
+    val cb = pqPivots(sv)
+    // per probed cell, the query's residual against THAT center
+    val qsv = pqSub(ivfProbes(queries, cc, 2)
+      .select(col("q_id"), col("neighbor_id").as("cell"),
+        residual("qv").as("v")))
+    val adc = pqAdc(pqEncode(sv, cb), qsv, cb, excludeSelf = true)
+    ids(exactRerank(topK(adc, PQ_RERANK, col("adc")), base, queries, 3))
   }
 
   /** ADC shortlist size the exact refine pass re-ranks. */
@@ -920,20 +858,22 @@ object Similarity {
     * guard would absorb. One row per bit width; exact integer census
     * with a single final double divide, so the oracle matches bit-for-bit. */
   def lshOccupancy(s: SparkSession, dir: String): DataFrame = {
-    val all = Caches.tracked(vecs(s, dir))
-    def one(bits: Int): DataFrame =
-      lshBucketed(all, bits)
-        .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).as("n_buckets"),
-          sum(col("n")).as("n_vectors"),
-          max(col("n")).as("max_occupancy"))
-        .select(lit(bits.toLong).as("bits"), col("n_buckets"),
-          col("n_vectors"),
-          (col("n_vectors").cast("double") / col("n_buckets").cast("double"))
-            .as("mean_occupancy"),
-          col("max_occupancy"))
-    one(LSH_BITS).unionByName(one(LSH_BITS_WIDE))
+    val all = Caches.tracked(corpus(s, dir))
+    occupancy(all, LSH_BITS).unionByName(occupancy(all, LSH_BITS_WIDE))
   }
+
+  /** One occupancy census row of `all` signed at `bits`. */
+  private def occupancy(all: DataFrame, bits: Int): DataFrame =
+    lshSigned(all, bits)
+      .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
+      .agg(count(lit(1)).as("n_buckets"),
+        sum(col("n")).as("n_vectors"),
+        max(col("n")).as("max_occupancy"))
+      .select(lit(bits.toLong).as("bits"), col("n_buckets"),
+        col("n_vectors"),
+        (col("n_vectors").cast("double") / col("n_buckets").cast("double"))
+          .as("mean_occupancy"),
+        col("max_occupancy"))
 
   private def lshOccSqlFor(bits: Int) =
     s"""SELECT CAST($bits AS BIGINT) AS bits, COUNT(*) AS n_buckets,
@@ -980,107 +920,7 @@ object Similarity {
     * store instead of carrying `v` through the explode; the bucket
     * structure is unchanged. */
   def annLshMulti(s: SparkSession, dir: String): DataFrame =
-    annLshMultiVecs(vecs(s, dir), AnnBucketCap)
-
-  private[graft] def annLshMultiVecs(all: DataFrame, cap: Int): DataFrame = {
-    val tb = array((0 until LSH_TABLES).map { t =>
-      val bits = (0 until LSH_BITS).map { b =>
-        val wgt = array((1 to DIM).map(d =>
-          lit(lshWeight(t * LSH_BITS + b, d))): _*)
-        when(dot(wgt, col("v")) > 0, 1L << b).otherwise(0L)
-      }
-      struct(lit(t.toLong).as("t"), bits.reduce(_ + _).as("bucket"))
-    }: _*)
-    val sig = all.select(col("vec_id"), col("v"), col("n2"),
-        explode(tb).as("x"))
-      .select(col("vec_id"), col("v"), col("n2"),
-        col("x.t").as("t"), col("x.bucket").as("bucket"))
-      .trackedPersist()
-    val hot = sig.groupBy(col("t"), col("bucket"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > cap)
-      .select(col("t"), col("bucket"))
-    val guarded = sig.join(hot, Seq("t", "bucket"), "left_anti")
-    val q = guarded.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("n2").as("qn2"), col("t").as("qt"), col("bucket").as("qbucket"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    guarded.join(broadcast(q),
-        col("t") === col("qt") && col("bucket") === col("qbucket") &&
-          col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        cosine(dot(col("v"), col("qv")), col("n2"), col("qn2")).as("cos"))
-      // cross-table dedup AFTER scoring: the agg dedupes (q, candidate)
-      // carrying one double, not 64-long vectors (cos is identical on
-      // every duplicate, so max is just "pick one")
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(max(col("cos")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"))
-  }
-
-  /** Generic LSH top-k search over arbitrary canonical (vid, v, n2)
-    * base/query frames — the (bits, tables, Hamming-probes) production
-    * dial as ONE library surface, sharing the hyperplane family, the
-    * hot-bucket guard, and the score-then-dedup shape every
-    * oracle-checked ANN query pins. `bits = 0` degenerates to exact
-    * brute-force search (single bucket 0, no pruning) — the spec law
-    * anchoring the index to the exact baseline. Vectors must be 64-dim
-    * (the engine's fixed hyperplane family); the query side broadcasts
-    * (tables × (1 + bits·hamming) probe rows per query). */
-  private[graft] def lshSearch(base: DataFrame, queries: DataFrame,
-      k: Int, bits: Int, tables: Int, hamming: Int, cap: Long,
-      excludeSelf: Boolean = true): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
-    require(bits >= 0 && bits <= 32, s"bits out of range: $bits")
-    require(tables > 0, s"tables must be positive: $tables")
-    require(hamming >= 0 && hamming <= 1, s"hamming ∈ {0, 1}: $hamming")
-    val sigExpr = array((0 until tables).map { t =>
-      val bs = (0 until bits).map { b =>
-        val wgt = array((1 to DIM).map(d => lit(lshWeight(t * bits + b, d))): _*)
-        when(dot(wgt, col("v")) > 0, 1L << b).otherwise(0L)
-      }
-      struct(lit(t.toLong).as("t"),
-        (lit(0L) +: bs).reduce(_ + _).as("bucket"))
-    }: _*)
-    val sig = base.select(col("vid"), col("v"), col("n2"), explode(sigExpr).as("x"))
-      .select(col("vid"), col("v"), col("n2"),
-        col("x.t").as("t"), col("x.bucket").as("bucket"))
-      .trackedPersist()
-    val hot = sig.groupBy(col("t"), col("bucket"))
-      .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > cap)
-      .select(col("t"), col("bucket"))
-    val guarded = sig.join(hot, Seq("t", "bucket"), "left_anti")
-    val flips = lit(0L) +:
-      (if (hamming >= 1) (0 until bits).map(b => lit(1L << b)) else Nil)
-    val qs = queries
-      .select(col("vid").as("q_id"), col("v"), col("n2").as("qn2"),
-        explode(sigExpr).as("x"))
-      .select(col("q_id"), col("v").as("qv"), col("qn2"),
-        col("x.t").as("qt"), col("x.bucket").as("qb0"))
-      .select(col("q_id"), col("qv"), col("qn2"), col("qt"), col("qb0"),
-        explode(array(flips: _*)).as("flip"))
-      .select(col("q_id"), col("qv"), col("qn2"), col("qt"),
-        expr("qb0 ^ flip").as("qbucket"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vid"))
-    guarded.join(broadcast(qs),
-        col("t") === col("qt") && col("bucket") === col("qbucket") &&
-          (if (excludeSelf) col("vid") =!= col("q_id") else lit(true)))
-      .select(col("q_id"), col("vid"),
-        cosine(dot(col("v"), col("qv")), col("n2"), col("qn2")).as("cos"))
-      // dedup across tables/probes AFTER scoring (one double per pair)
-      .groupBy(col("q_id"), col("vid"))
-      .agg(max(col("cos")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vid").as("neighbor_id"), col("cos"))
-  }
+    annLshAt(s, dir, LSH_BITS, LSH_TABLES, hamming = 0)
 
   private val annLshMultiSql =
     s"""WITH iv AS (
@@ -1129,34 +969,8 @@ object Similarity {
     * axis. */
   private[graft] def annIvfProbes(s: SparkSession, dir: String,
       nprobe: Int): DataFrame = {
-    val all = vecs(s, dir)
-    val c = all.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    // corpus-side assignment on the fused kernel (n×8 was survivable,
-    // but one argmin form engine-wide beats two); the probe leg keeps
-    // its top-nprobe window over the 20-query side, with the query
-    // filter pushed BELOW the center join
-    val assigned = nearestAssign(
-      all.select(col("vec_id"), col("v"), col("n2")), c, "cell")
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("cid"))
-    val probes = all.filter(col("vec_id") < 20).join(broadcast(c))
-      .select(col("vec_id"), col("v"), col("n2"), col("cid"),
-        l2s(col("v"), col("cv")).as("dist"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("n2").as("qn2"), col("cid").as("cell"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    assigned.join(broadcast(probes),
-        Seq("cell"), "inner")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        cosine(dot(col("v"), col("qv")), col("n2"), col("qn2")).as("cos"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"))
+    val base = corpus(s, dir)
+    ids(ivfSearch(base, testQueries(base), firstCenters(base, 8), 3, nprobe))
   }
 
   /** The shipped default: nprobe=2 of 8 cells. */
@@ -1168,94 +982,37 @@ object Similarity {
   def annIvfNprobe4(s: SparkSession, dir: String): DataFrame =
     annIvfProbes(s, dir, 4)
 
-  /** IVF top-k over arbitrary canonical (vid, v: array<bigint>, n2)
-    * base/query frames — the (cells, nprobe) production dial the
-    * oracle-checked q_ann_ivf / q_ann_ivf_nprobe4 pin at (8, 2|4),
-    * generalized for `Vectors.ivfTopK`. Coarse centers seed from the
-    * base's `cells` lowest-vid vectors (the annIvf contract, made
-    * id-sparse-safe via sort-limit instead of a `vid < cells` filter);
-    * assignment and probing are exact integer-L2 argmins; candidates
-    * rank by exact cosine with the cosineTopK tie-break, so at
-    * nprobe = cells the result IS the brute-force answer row for row. */
-  private[graft] def ivfSearch(base: DataFrame, queries: DataFrame,
-      k: Int, cells: Int, nprobe: Int,
-      excludeSelf: Boolean = true): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
-    require(cells > 0, s"cells must be positive: $cells")
-    require(nprobe > 0 && nprobe <= cells,
-      s"nprobe must be in 1..$cells: $nprobe")
-    val c = base.orderBy(col("vid")).limit(cells)
-      .select(col("vid").as("cid"), col("v").as("cv"))
-    // base-side assignment on the fused kernel: at the production dial
-    // (cells = ⌈√n⌉, ann_ivf_sqrtn / Vectors.ivfTopK) the join+window
-    // form this replaces planned an n×√n-row distance frame through a
-    // map-side sort — the exact O(n^1.5) shape whose removal measured
-    // q_semdedup 160 → 33 s at the r13 100× drive. The probe leg below
-    // keeps the window form: it needs top-NPROBE cells (the kernel is
-    // argmin-1) and runs on the queries-sized side only.
-    val assigned = nearestAssign(
-      base.select(col("vid"), col("v"), col("n2")), c, "cell")
-    val wQ = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("cid"))
-    val probes = queries.join(broadcast(c))
-      .select(col("vid").as("q_id"), col("v").as("qv"),
-        col("n2").as("qn2"), col("cid"),
-        l2s(col("v"), col("cv")).as("dist"))
-      .withColumn("rn", row_number().over(wQ))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("qv"), col("qn2"), col("cid").as("cell"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vid"))
-    assigned.join(broadcast(probes), Seq("cell"))
-      .filter(if (excludeSelf) col("vid") =!= col("q_id") else lit(true))
-      .select(col("q_id"), col("vid"),
-        cosine(dot(col("v"), col("qv")), col("n2"), col("qn2")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vid").as("neighbor_id"), col("cos"))
-  }
+  /** Each query's `nprobe` nearest centres by exact integer L2: (q_id,
+    * rank, neighbor_id = the centre's cid, dist, qv, qn2, cv). A top-n
+    * over the queries-sized side only — the fused kernel is argmin-1. */
+  private def ivfProbes(queries: DataFrame, centers: DataFrame,
+      nprobe: Int): DataFrame =
+    topK(qside(queries).join(broadcast(centers))
+      .select(col("q_id"), col("cid").as("neighbor_id"),
+        l2s(col("qv"), col("cv")).as("dist"), col("qv"), col("qn2"),
+        col("cv")), nprobe, col("dist"))
 
-  /** [[ivfSearch]] at the PRODUCTION cell dial — cells = ⌈√n⌉ — with the
-    * count derived IN-PLAN as a 1-row broadcast aggregate (the
-    * q_semdedup trick), so sizing the codebook costs no separate
-    * driver-side action per run. Centers seed from `vid < kcells`
-    * (dense-id contract, same as [[semAssignedOf]]'s seed: the canonical
-    * embeddings frame numbers vec_ids densely from 0; callers with
-    * sparse ids use [[ivfSearch]]'s sort-limit seed and pass cells
-    * explicitly). Assignment is the fused kernel; probes take the
-    * top-min(nprobeCap, kcells) cells per query — the row_number filter
-    * needs no explicit min, rn cannot exceed the center count. Output
-    * and ranking identical to [[ivfSearch]] at the same (cells, nprobe),
-    * which is how the ann_ivf_sqrtn recall band stays banked. */
-  private[graft] def ivfSearchSqrtN(base: DataFrame, queries: DataFrame,
-      k: Int, nprobeCap: Int, excludeSelf: Boolean = true): DataFrame = {
-    require(k > 0, s"k must be positive: $k")
-    require(nprobeCap > 0, s"nprobeCap must be positive: $nprobeCap")
-    val kDf = base.agg(
-      ceil(sqrt(count(lit(1)).cast("double"))).cast("long").as("kcells"))
-    val c = base.crossJoin(broadcast(kDf))
-      .filter(col("vid") < col("kcells"))
-      .select(col("vid").as("cid"), col("v").as("cv"))
+  /** Generic IVF top-k over canonical (vid, v, n2) base/query frames —
+    * the (cells, nprobe) production dial under every IVF form. The
+    * centre table (cid, cv) is the caller's seed: the first 8 test
+    * vectors ([[annIvf]]), the sort-limit lowest ids (`Vectors.ivfTopK`),
+    * the in-plan ⌈√n⌉ ([[sqrtNCenters]], ann_ivf_sqrtn) or Lloyd-trained
+    * ([[annIvfTrained]]). Base rows assign to their nearest centre on
+    * the fused kernel — never an n×cells distance frame, O(n^1.5) rows
+    * at the ⌈√n⌉ dial — each query
+    * probes its `nprobe` nearest cells ([[ivfProbes]]), and the probed
+    * cells' members rank by exact cosine with the exact-search
+    * tie-break, so probing every cell IS the brute-force answer row for
+    * row (SimilaritySpec and CorpusApiSpec pin that identity). */
+  private[graft] def ivfSearch(base: DataFrame, queries: DataFrame,
+      centers: DataFrame, k: Int, nprobe: Int,
+      excludeSelf: Boolean = true): DataFrame = {
     val assigned = nearestAssign(
-      base.select(col("vid"), col("v"), col("n2")), c, "cell")
-    val wQ = Window.partitionBy(col("q_id")).orderBy(col("dist"), col("cid"))
-    val probes = queries.join(broadcast(c))
-      .select(col("vid").as("q_id"), col("v").as("qv"),
-        col("n2").as("qn2"), col("cid"),
-        l2s(col("v"), col("cv")).as("dist"))
-      .withColumn("rn", row_number().over(wQ))
-      .filter(col("rn") <= nprobeCap)
-      .select(col("q_id"), col("qv"), col("qn2"), col("cid").as("cell"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vid"))
-    assigned.join(broadcast(probes), Seq("cell"))
-      .filter(if (excludeSelf) col("vid") =!= col("q_id") else lit(true))
-      .select(col("q_id"), col("vid"),
-        cosine(dot(col("v"), col("qv")), col("n2"), col("qn2")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vid").as("neighbor_id"), col("cos"))
+      base.select(col("vid"), col("v"), col("n2")), centers, "cell")
+    val probes = ivfProbes(queries, centers, nprobe)
+      .select(col("q_id"), col("qv"), col("qn2"), col("neighbor_id").as("cell"))
+    topK(scored(assigned.join(broadcast(probes), Seq("cell"))
+      .filter(notSelf(excludeSelf))), k, col("cos").desc)
   }
 
   private[queries] def annIvfSqlFor(nprobe: Int): String =
@@ -1298,25 +1055,16 @@ object Similarity {
     * equi-join, and the query count comes from the rank-1 probe rows so
     * a query whose probed cells hold only itself still counts. */
   def ivfProbeCost(s: SparkSession, dir: String): DataFrame = {
-    val all = vecs(s, dir)
-    val c = all.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    // corpus-side assignment on the fused kernel (the last per-vid
-    // window assignment leg, closed in r14 for engine-wide consistency);
-    // probe ranks stay a window over the 20-query side
-    val assigned = nearestAssign(
-        all.select(col("vec_id"), col("v")), c, "cell")
-      .select(col("vec_id"), col("cell"))
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("cid"))
-    val probes = all.filter(col("vec_id") < 20).join(broadcast(c))
-      .select(col("vec_id"), col("cid"), l2s(col("v"), col("cv")).as("dist"))
-      .withColumn("prn", row_number().over(wAssign))
-      .filter(col("prn") <= 4)
-      .select(col("vec_id").as("q_id"), col("prn"), col("cid").as("cell"))
+    val base = corpus(s, dir)
+    val c = firstCenters(base, 8)
+    val assigned = nearestAssign(base.select(col("vid"), col("v")), c, "cell")
+      .select(col("vid"), col("cell"))
+    val probes = ivfProbes(testQueries(base), c, 4)
+      .select(col("q_id"), col("rank").as("prn"), col("neighbor_id").as("cell"))
     val nq = probes.filter(col("prn") === 1)
       .agg(count(lit(1)).cast("double").as("nq"))
     assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
+      .filter(notSelf(true))
       .agg(
         sum(when(col("prn") <= 1, 1.0).otherwise(0.0)).as("c1"),
         sum(when(col("prn") <= 2, 1.0).otherwise(0.0)).as("c2"),
@@ -1378,13 +1126,13 @@ object Similarity {
   def ivfAppend(s: SparkSession, dir: String): DataFrame = {
     // split in-plan, then share the census path with
     // Vectors.ivfDriftCensus — the query and the facade cannot drift
-    val all = vecs(s, dir)
-    val tDf = all.agg(expr("MAX(vec_id)*4 DIV 5").as("t"))
-    val tagged = all.crossJoin(broadcast(tDf))
-    def side(p: org.apache.spark.sql.Column) = tagged.filter(p)
-      .select(col("vec_id").as("vid"), col("v"), col("n2"))
-    ivfDriftCensusOf(side(col("vec_id") < col("t")),
-      side(col("vec_id") >= col("t")), cells = 8)
+    val all = corpus(s, dir)
+    val tagged = all.crossJoin(
+      broadcast(all.agg(expr("MAX(vid)*4 DIV 5").as("t"))))
+    def side(p: Column) =
+      tagged.filter(p).select(col("vid"), col("v"), col("n2"))
+    ivfDriftCensusOf(side(col("vid") < col("t")),
+      side(col("vid") >= col("t")), cells = 8)
   }
 
   /** [[ivfAppend]]'s census over arbitrary canonical (vid, v, n2)
@@ -1396,13 +1144,11 @@ object Similarity {
   private[graft] def ivfDriftCensusOf(resident: DataFrame,
       arriving: DataFrame, cells: Int): DataFrame = {
     require(cells > 0, s"cells must be positive: $cells")
-    val c = resident.orderBy(col("vid")).limit(cells)
-      .select(col("vid").as("cid"), col("v").as("cv"))
+    val c = lowestCenters(resident, cells)
     // both populations assign on the fused kernel (no n×cells frame at
     // caller-chosen center counts), then ONE broadcast equi-join on the
     // winning cell recovers that cell's center so the census distance is
-    // computed n×1, not n×cells — the window form this replaces sorted
-    // the full distance frame per vid
+    // computed n×1, not n×cells
     val both = resident.select(col("vid"), col("v"),
         lit(false).as("is_batch"))
       .unionByName(arriving.select(col("vid"), col("v"),
@@ -1455,49 +1201,10 @@ object Similarity {
     * aggregation. */
   def annIvfTrained(s: SparkSession, dir: String): DataFrame = {
     // lazily cached: the scaled vector table anchors both argmin passes
-    // and the Lloyd update join (3 full references)
-    val all = vecs(s, dir).trackedPersist()
-    // both corpus-wide argmin passes (seed assignment feeding the Lloyd
-    // update, final assignment against the trained centers) ride the
-    // fused kernel — at caller/dial-derived center counts the join+window
-    // form planned the O(n·k) distance frame this engine banned from
-    // every other assignment path in r13/r14
-    def argmin(centers: DataFrame): DataFrame =
-      nearestAssign(all.select(col("vec_id"), col("v"), col("n2")),
-        centers, "cid")
-    val c0 = all.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val a1 = argmin(c0).select(col("vec_id"), col("cid"))
-    // one Lloyd update: per-dim integer mean, arrays rebuilt in dim order
-    val c1 = all.join(a1, "vec_id")
-      .select(col("cid"), posexplode(col("v")))
-      .groupBy(col("cid"), col("pos"))
-      .agg(expr("SUM(col) DIV COUNT(*)").as("cx"))
-      .groupBy(col("cid"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-        e => e.getField("cx")).as("cv"))
-    val assigned = argmin(c1)
-      .select(col("vec_id"), col("v"), col("n2"), col("cid").as("cell"))
-    // probe leg: top-2 trained cells per query — a window by necessity
-    // (the kernel is argmin-1), over the 20-query side only, with the
-    // query filter below the center join
-    val wAssign = Window.partitionBy(col("vec_id"))
-      .orderBy(col("dist"), col("cid"))
-    val probes = all.filter(col("vec_id") < 20).join(broadcast(c1))
-      .select(col("vec_id"), col("v"), col("n2"), col("cid"),
-        l2s(col("v"), col("cv")).as("dist"))
-      .withColumn("rn", row_number().over(wAssign)).filter(col("rn") <= 2)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("n2").as("qn2"), col("cid").as("cell"))
-    val wRank = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    assigned.join(broadcast(probes), Seq("cell"), "inner")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        cosine(dot(col("v"), col("qv")), col("n2"), col("qn2")).as("cos"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("vec_id").as("neighbor_id"))
+    // and the probe leg
+    val base = corpus(s, dir).trackedPersist()
+    ids(ivfSearch(base, testQueries(base),
+      lloydCenters(base, firstCenters(base, 10)), 3, nprobe = 2))
   }
 
   // list-comprehension distances + MATERIALIZED CTEs (the q_semdedup r12
@@ -1573,11 +1280,11 @@ object Similarity {
     * distinct candidate pairs then re-join the cached vectors for the
     * exact cosine check. Per-band over-cap buckets are dropped first. */
   def embedNeardup(s: SparkSession, dir: String): DataFrame = {
-    val sig = lshBucketed(vecs(s, dir))
-    val bands = sig.select(col("vec_id"),
+    val sig = lshSigned(corpus(s, dir), LSH_BITS).trackedPersist()
+    val bands = sig.select(col("vid"),
       explode(array((0 until ND_BANDS).map(j => struct(lit(j).as("band"),
         expr(s"shiftright(bucket, ${2 * j}) % 4").as("bkey"))): _*)).as("bb"))
-      .select(col("vec_id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
+      .select(col("vid"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
     val hot = bands.groupBy(col("band"), col("bkey"))
       .agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") > AnnBucketCap)
@@ -1585,13 +1292,13 @@ object Similarity {
     val guarded = bands.join(hot, Seq("band", "bkey"), "left_anti")
     val pairs = guarded.as("a").join(guarded.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
+          col("a.vid") < col("b.vid"))
+      .select(col("a.vid").as("vec_a"), col("b.vid").as("vec_b"))
       .distinct()
     pairs
-      .join(sig.select(col("vec_id").as("vec_a"), col("v").as("va"),
+      .join(sig.select(col("vid").as("vec_a"), col("v").as("va"),
         col("n2").as("n2a")), "vec_a")
-      .join(sig.select(col("vec_id").as("vec_b"), col("v").as("vb"),
+      .join(sig.select(col("vid").as("vec_b"), col("v").as("vb"),
         col("n2").as("n2b")), "vec_b")
       .select(col("vec_a"), col("vec_b"),
         cosine(dot(col("va"), col("vb")), col("n2a"), col("n2b")).as("cos"))
@@ -1634,14 +1341,11 @@ object Similarity {
     * broadcast centers (the first 10 vectors) by exact integer squared-L2;
     * reports per-center population and an id checksum. */
   def kmeansAssign(s: SparkSession, dir: String): DataFrame = {
-    val all = vecs(s, dir)
-    val c = all.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    // assignment on the fused kernel (the shared argmin form of every
-    // nearest-center leg engine-wide as of r14)
-    nearestAssign(all.select(col("vec_id"), col("v")), c, "cid")
+    val base = corpus(s, dir)
+    nearestAssign(base.select(col("vid"), col("v")), firstCenters(base, 10),
+        "cid")
       .groupBy(col("cid"))
-      .agg(count(lit(1)).as("n_points"), sum(col("vec_id")).as("sum_vec_id"))
+      .agg(count(lit(1)).as("n_points"), sum(col("vid")).as("sum_vec_id"))
   }
 
   private val kmeansAssignSql =
@@ -1845,6 +1549,9 @@ object Similarity {
           count(lit(1))).as("recall_at_3"))
         .select(lit(variant).as("variant"), col("recall_at_3"))
     }
+    val base = corpus(s, dir)
+    val queries = testQueries(base)
+    val n = base.count()
     one("ann_lsh", annLsh(s, dir))
       .unionByName(one("ann_lsh_12bit", annLshWide(s, dir)))
       .unionByName(one("ann_lsh_multi", annLshMulti(s, dir)))
@@ -1852,75 +1559,36 @@ object Similarity {
       .unionByName(one("ann_pq", annPq(s, dir)))
       .unionByName(one("ann_pq_trained", annPqTrained(s, dir)))
       .unionByName(one("ann_ivfpq", annIvfPq(s, dir)))
-      .unionByName(one("ann_lsh_12bit_multi", {
-        // the production composition SURVEY §10 prescribes at high bit
-        // widths: 12-bit buckets (near-singleton occupancy) with the
-        // (tables=4, hamming=1) recall repair — measured here so the
-        // "bits up, tables/probes recover" claim is telemetry, not prose
-        val base = vecs(s, dir)
-          .select(col("vec_id").as("vid"), col("v"), col("n2"))
-        lshSearch(base, base.filter(col("vid") < 20), k = 3, bits = 12,
-          tables = 4, hamming = 1, cap = Long.MaxValue)
-          .select(col("q_id"), col("rank"), col("neighbor_id"))
-      }))
-      .unionByName(one("ann_pq_256", {
-        // the production centroid dial: 256/subspace, 3 Lloyd rounds —
-        // the climb off ann_pq_trained's 16-centroid floor, measured
-        val base = vecs(s, dir)
-          .select(col("vec_id").as("vid"), col("v"), col("n2"))
-        pqSearchProduction(base, base.filter(col("vid") < 20), k = 3,
-          centroids = 256, rounds = 3, rerank = 0)
-          .select(col("q_id"), col("rank"), col("neighbor_id"))
-      }))
-      .unionByName(one("ann_pq_256_refined", {
-        // + the IndexRefine stage: exact re-rank of the ADC top-10
-        val base = vecs(s, dir)
-          .select(col("vec_id").as("vid"), col("v"), col("n2"))
-        pqSearchProduction(base, base.filter(col("vid") < 20), k = 3,
-          centroids = 256, rounds = 3, rerank = 10)
-          .select(col("q_id"), col("rank"), col("neighbor_id"))
-      }))
-      .unionByName(one("ann_ivf_sqrtn", {
-        // the production cell dial: Tuning.ivfCells = ceil(sqrt(n))
-        // cells at CONSTANT nprobe 8, so candidates/query ∝ 8·√n —
-        // sublinear in corpus size, the scaling the fixed-8-cell oracle
-        // queries (candidates ∝ n/4) deliberately do not have. Measured
-        // here so the §9 "k grows with n" posture is a gated number.
-        // cells = ⌈√n⌉ derived IN-PLAN (ivfSearchSqrtN) — no separate
-        // count() action per bench run; Tuning.ivfCells stays the
-        // advisory formula, TuningSpec pins the two equal
-        val base = vecs(s, dir)
-          .select(col("vec_id").as("vid"), col("v"), col("n2"))
-        ivfSearchSqrtN(base, base.filter(col("vid") < 20), k = 3,
-          nprobeCap = 8)
-          .select(col("q_id"), col("rank"), col("neighbor_id"))
-      }))
-      .unionByName(one("ann_lsh_tuned", {
-        // the lshBits(n) dial end-to-end: bit width from the executable
-        // Tuning formula (target occupancy 32/bucket) with the
-        // production (tables=4, hamming=1) recall repair — the LSH twin
-        // of ann_ivf_sqrtn, so BOTH dial formulas are gated numbers,
-        // not prose (the 10x replica shifts the width, the recall band
-        // must hold)
-        val base = vecs(s, dir)
-          .select(col("vec_id").as("vid"), col("v"), col("n2"))
-        val bits = graft.api.Tuning.lshBits(base.count())
-        lshSearch(base, base.filter(col("vid") < 20), k = 3, bits = bits,
-          tables = 4, hamming = 1, cap = Long.MaxValue)
-          .select(col("q_id"), col("rank"), col("neighbor_id"))
-      }))
-      .unionByName(one("ann_pq_tuned", {
-        // the pqCentroids(n) dial: min(256, ceil(n/8)) centroids per
-        // subspace + exact top-10 refine — the floor keeps codebooks
-        // trainable at test corpora; at production sizes this IS the
-        // 256-centroid byte-code dial
-        val base = vecs(s, dir)
-          .select(col("vec_id").as("vid"), col("v"), col("n2"))
-        val cents = graft.api.Tuning.pqCentroids(base.count())
-        pqSearchProduction(base, base.filter(col("vid") < 20), k = 3,
-          centroids = cents, rounds = 3, rerank = 10)
-          .select(col("q_id"), col("rank"), col("neighbor_id"))
-      }))
+      // the production composition SURVEY §10 prescribes at high bit
+      // widths: 12-bit buckets (near-singleton occupancy) with the
+      // (tables=4, hamming=1) recall repair — "bits up, tables/probes
+      // recover" as telemetry, not prose
+      .unionByName(one("ann_lsh_12bit_multi", lshSearch(base, queries, k = 3,
+        bits = 12, tables = 4, hamming = 1, cap = Long.MaxValue)))
+      // the production centroid dial: 256/subspace, 3 Lloyd rounds — the
+      // climb off ann_pq_trained's 16-centroid floor — then + the exact
+      // re-rank of the ADC top-10
+      .unionByName(one("ann_pq_256", pqSearch(base, queries,
+        pqLowest(base, 256), rounds = 3, k = 3)))
+      .unionByName(one("ann_pq_256_refined", pqSearch(base, queries,
+        pqLowest(base, 256), rounds = 3, k = 3, rerank = 10)))
+      // the production cell dial: ⌈√n⌉ cells (derived in-plan; TuningSpec
+      // pins it to the advisory Tuning.ivfCells) at CONSTANT nprobe 8, so
+      // candidates/query ∝ 8·√n — sublinear in corpus size, the scaling
+      // the fixed-8-cell oracle queries deliberately do not have
+      .unionByName(one("ann_ivf_sqrtn",
+        ivfSearch(base, queries, sqrtNCenters(base), k = 3, nprobe = 8)))
+      // the two dial formulas end to end: lshBits(n) (target occupancy
+      // 32/bucket) with the (tables=4, hamming=1) repair, and
+      // pqCentroids(n) = min(256, ⌈n/8⌉) with the exact top-10 refine,
+      // so both are gated numbers (the 10× replica shifts the widths,
+      // the recall bands must hold)
+      .unionByName(one("ann_lsh_tuned", lshSearch(base, queries, k = 3,
+        bits = graft.api.Tuning.lshBits(n), tables = 4, hamming = 1,
+        cap = Long.MaxValue)))
+      .unionByName(one("ann_pq_tuned", pqSearch(base, queries,
+        pqLowest(base, graft.api.Tuning.pqCentroids(n)), rounds = 3, k = 3,
+        rerank = 10)))
       .unionByName(one("ann_ivf", annIvf(s, dir)))
       .unionByName(one("ann_ivf_nprobe1", annIvfProbes(s, dir, 1)))
       .unionByName(one("ann_ivf_nprobe4", annIvfProbes(s, dir, 4)))
@@ -1935,18 +1603,8 @@ object Similarity {
     * buckets) at ANY corpus size — BenchGate enforces the law itself,
     * not a per-corpus constant. */
   def lshOccupancyTuned(s: SparkSession, dir: String): DataFrame = {
-    val all = Caches.tracked(vecs(s, dir))
-    val bits = graft.api.Tuning.lshBits(all.count())
-    lshBucketed(all, bits)
-      .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_buckets"),
-        sum(col("n")).as("n_vectors"),
-        max(col("n")).as("max_occupancy"))
-      .select(lit(bits.toLong).as("bits"), col("n_buckets"),
-        col("n_vectors"),
-        (col("n_vectors").cast("double") / col("n_buckets").cast("double"))
-          .as("mean_occupancy"),
-        col("max_occupancy"))
+    val all = Caches.tracked(corpus(s, dir))
+    occupancy(all, graft.api.Tuning.lshBits(all.count()))
   }
 
   // ---------------------------------------------- semantic dedup (SemDeDup)
@@ -2096,36 +1754,16 @@ object Similarity {
     * census and [[graft.SkewCensus]]'s sem_hot guard-fire report. */
   private[graft] def semAssignedOf(s: SparkSession, dir: String): DataFrame = {
     // the vector table anchors the count, the seed filter, both argmin
-    // passes and the Lloyd join — cache it once for the whole pipeline
-    val all = Caches.tracked(vecs(s, dir))
-    // k = ceil(sqrt(n)) as a 1-row broadcast: the k-grows-with-n contract
-    // without a driver-side count() at construction time
-    val kDf = all.agg(
-      ceil(sqrt(count(lit(1)).cast("double"))).cast("long").as("kcells"))
-    val c0 = all.crossJoin(broadcast(kDf))
-      .filter(col("vec_id") < col("kcells"))
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    // scan-local argmin on the fused kernel ([[nearestAssign]]): never
-    // materializes the n×k distance frame the join+window form pushed
-    // through map-side sorts (93M rows at the r13 drive; O(n^1.5) at
-    // k=⌈√n⌉)
-    def argmin(centers: DataFrame): DataFrame =
-      nearestAssign(all.select(col("vec_id"), col("v"), col("n2")),
-        centers, "cid")
-    // one Lloyd update over the seed assignment: per-dim integer mean,
-    // arrays rebuilt in dim order (identical to the annIvfTrained step)
-    val a1 = argmin(c0).select(col("vec_id"), col("cid"))
-    val c1 = all.join(a1, "vec_id")
-      .select(col("cid"), posexplode(col("v")))
-      .groupBy(col("cid"), col("pos"))
-      .agg(expr("SUM(col) DIV COUNT(*)").as("cx"))
-      .groupBy(col("cid"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-        e => e.getField("cx")).as("cv"))
-    // assignment against the TRAINED centers feeds both pair-join sides
-    // and the census — cache so the k-way argmin runs once
-    Caches.tracked(argmin(c1)
-      .select(col("vec_id"), col("v"), col("n2"), col("cid").as("cell")))
+    // passes and the Lloyd update — cache it once for the whole pipeline
+    val all = Caches.tracked(corpus(s, dir))
+    // k = ⌈√n⌉ seeds from a 1-row broadcast (no driver-side count), one
+    // Lloyd update, then the assignment against the TRAINED centers —
+    // all on the fused kernel, which never materializes the n×k distance
+    // frame (93M rows at the r13 drive; O(n^1.5) at k = ⌈√n⌉). It feeds
+    // both pair-join sides and the census, so it is cached too
+    Caches.tracked(
+      nearestAssign(all, lloydCenters(all, sqrtNCenters(all)), "cell")
+        .withColumnRenamed("vid", "vec_id"))
   }
 
   // centroid DISTANCES stay in list form (one n×cells row per pair, a

@@ -680,7 +680,7 @@ object TextPipeline {
     * column-pruned count it also emits as telemetry) rather than a
     * per-call `docs.count()` action here — the width picks between two
     * PLAN SHAPES (32- vs 64-bit block tables), so unlike
-    * ivfSearchSqrtN's ⌈√n⌉ literal it cannot fold into the plan as a
+    * sqrtNCenters' ⌈√n⌉ count it cannot fold into the plan as a
     * column; hoisting the action is the honest equivalent. */
   def simhashTuned(s: SparkSession, dir: String, nDocs: Long): DataFrame = {
     val bits = graft.api.Tuning.simBits(nDocs)

@@ -35,11 +35,50 @@ class LshGuardSpec extends SparkSpec {
 
   test("ann guard drops the degenerate all-identical bucket") {
     val all = (0L until 60L)
-      .map(i => (i, "x", Seq.fill(64)(1000L)))
-      .toDF("vec_id", "label", "v")
+      .map(i => (i, Seq.fill(64)(1000L)))
+      .toDF("vid", "v")
       .withColumn("n2", lit(64L * 1000 * 1000))
-    assert(Similarity.annLshVecs(all, cap = 16).count() == 0)
+    def annLsh(cap: Long) = Similarity.lshSearch(all,
+      all.filter(col("vid") < 20), k = 3, bits = 6, tables = 1, hamming = 0,
+      cap = cap)
+    assert(annLsh(cap = 16).count() == 0)
     // under a permissive cap the same corpus yields top-3 per query
-    assert(Similarity.annLshVecs(all, cap = 512).count() == 20 * 3)
+    assert(annLsh(cap = 512).count() == 20 * 3)
+  }
+
+  test("a query in an over-cap bucket probes nothing, not even its cold Hamming-1 neighbour") {
+    // the oracle draws multi-probe queries from the GUARDED index: a
+    // query whose own bucket is over the cap is dropped before its
+    // probes fan out. Plant an over-cap bucket (30 copies of u) one sign
+    // flip away from a cold bucket (3 copies of u'), found on the driver
+    // with the engine's hyperplanes
+    def scaled(x: Float) = math.floor(x.toDouble * 1000000).toLong
+    def bucket(e: Array[Float]) = (0 until 6).map { b =>
+      val d = (1 to 64).map(i =>
+        Similarity.lshWeight(b, i) * scaled(e(i - 1))).sum
+      if (d > 0) 1L << b else 0L
+    }.sum
+    val rnd = new scala.util.Random(7)
+    val pool = Seq.fill(64)(Array.fill(64)((rnd.nextInt(2001) - 1000) / 1000f))
+    val (u, u2) = (for (a <- pool; b <- pool
+      if java.lang.Long.bitCount(bucket(a) ^ bucket(b)) == 1) yield (a, b)).head
+    val vectors = ((0L until 30L).map(i => (i, u)) ++
+      (100L until 103L).map(i => (i, u2))).toDF("vec_id", "embedding")
+    val queries = vectors.filter(col("vec_id") === 0L || col("vec_id") === 100L)
+    def neighbors(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
+      try df.collect().map(r => (r.getLong(0), r.getLong(2)))
+        .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+      finally graft.core.Caches.release()
+    val multiprobe = neighbors(Similarity.lshSearch(
+      Similarity.canonical(vectors, "vec_id", "embedding"),
+      Similarity.canonical(queries, "vec_id", "embedding"),
+      k = 3, bits = 6, tables = 1, hamming = 1, cap = 16))
+    val facade = neighbors(graft.api.Vectors.lshTopK(vectors, queries, k = 3,
+      bits = 6, tables = 1, hamming = 1, bucketCap = 16))
+    Seq(multiprobe, facade).foreach { got =>
+      // the hot-bucket query is gone; the cold query still finds its
+      // bucket-mates (its Hamming-1 probe into the hot bucket finds none)
+      assert(got == Map(100L -> Set(101L, 102L)), s"got $got")
+    }
   }
 }

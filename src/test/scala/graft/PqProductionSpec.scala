@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.api.{Corpus, Tuning, Vectors}
 
-/** The production PQ dial (Similarity.pqSearchProduction behind
+/** The production PQ dial (Similarity.pqSearch behind
   * Vectors.pqTopK): wider codebooks, multi-round Lloyd training, and the
   * exact-cosine IndexRefine stage. Recall movement is gated at sf0.1 by
   * BenchGate (ann_pq_256*); this spec pins the mechanics on synthetic

@@ -326,7 +326,7 @@ class ScaleShapeSpec extends SparkSpec {
   }
 
   test("dial-k IVF assignment rides the fused kernel, never a per-vid window") {
-    // the r13 `weak`: ivfSearch / ivfSearchSqrtN / ivfDriftCensusOf fed
+    // the r13 `weak`: IVF search / the ⌈√n⌉ dial / ivfDriftCensusOf fed
     // the production dials (cells = ⌈√n⌉) an n×k distance frame sorted
     // per vid — O(n^1.5) rows by design. All corpus-side assignment now
     // rides GraftNearestCell; the only windows left partition by q_id
@@ -352,14 +352,14 @@ class ScaleShapeSpec extends SparkSpec {
       assert(vidWindows.isEmpty,
         s"$what plans a per-vid window over the corpus side:\n$p")
     }
+    val S = graft.queries.Similarity
     assertNoVidWindow(
-      graft.queries.Similarity.ivfSearch(base, queries, k = 3,
-        cells = 50, nprobe = 8),
+      S.ivfSearch(base, queries, S.lowestCenters(base, 50), k = 3,
+        nprobe = 8),
       "ivfSearch at a dial-derived cell count")
     assertNoVidWindow(
-      graft.queries.Similarity.ivfSearchSqrtN(base, queries, k = 3,
-        nprobeCap = 8),
-      "ivfSearchSqrtN (the ann_ivf_sqrtn production path)")
+      S.ivfSearch(base, queries, S.sqrtNCenters(base), k = 3, nprobe = 8),
+      "ivfSearch on the in-plan ⌈√n⌉ seed (the ann_ivf_sqrtn production path)")
     assertNoVidWindow(
       graft.queries.Similarity.ivfDriftCensusOf(
         base.filter(col("vid") % 2 === 0), base.filter(col("vid") % 2 === 1),

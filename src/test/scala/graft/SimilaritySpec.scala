@@ -225,6 +225,41 @@ class SimilaritySpec extends SparkSpec {
       s"candidate cost not increasing: $cost")
   }
 
+  test("recall and NDCG summaries at sf0.01 hold their recorded values") {
+    // every ANN variant the bench telemetry reports, including the six
+    // that no oracle query checks (ann_lsh_12bit_multi, ann_pq_256,
+    // ann_pq_256_refined, ann_ivf_sqrtn, ann_lsh_tuned, ann_pq_tuned),
+    // pinned exactly so a search refactor cannot move one silently
+    val dir = sfDir.replace("sf0.001", "sf0.01")
+    def table(df: org.apache.spark.sql.DataFrame): Map[String, Double] =
+      try df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      finally graft.core.Caches.release()
+    val recall = table(Similarity.recallSummary(spark, dir))
+    val ndcg = table(Similarity.ndcgSummary(spark, dir))
+    assert(recall === Map(
+      "ann_ivf" -> 0.65,
+      "ann_ivf_nprobe1" -> 0.5166666666666667,
+      "ann_ivf_nprobe4" -> 0.8833333333333333,
+      "ann_ivf_sqrtn" -> 0.9666666666666667,
+      "ann_ivf_trained" -> 0.7,
+      "ann_ivfpq" -> 0.2833333333333333,
+      "ann_lsh" -> 0.06666666666666667,
+      "ann_lsh_12bit" -> 0.0,
+      "ann_lsh_12bit_multi" -> 0.05,
+      "ann_lsh_multi" -> 0.13333333333333333,
+      "ann_lsh_multiprobe" -> 0.3333333333333333,
+      "ann_lsh_tuned" -> 0.95,
+      "ann_pq" -> 0.11666666666666667,
+      "ann_pq_256" -> 0.45,
+      "ann_pq_256_refined" -> 0.8,
+      "ann_pq_trained" -> 0.25,
+      "ann_pq_tuned" -> 0.5833333333333334))
+    assert(ndcg === Map(
+      "ann_ivf" -> 716626.4,
+      "ann_ivf_nprobe4" -> 907750.4,
+      "ann_lsh_multi" -> 164126.0))
+  }
+
   test("kmeans assignment covers every vector exactly once") {
     val rows = Similarity.kmeansAssign(spark, sfDir).collect()
     val total = rows.map(_.getLong(1)).sum
