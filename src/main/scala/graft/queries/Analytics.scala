@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.{Caches, Fixpoint, GQuery, LoopWidth, Tables}
+import graft.core.{Caches, Fixpoint, GQuery, HotKeys, LoopWidth, Tables}
 import graft.core.Caches.TrackedOps
 import Qdsl._
 
@@ -441,16 +441,8 @@ object Analytics {
   private[graft] def winsorizeGuardedOf(e0: DataFrame,
       cap: Long = GroupHotCap): DataFrame = {
     val e = e0.trackedPersist()
-    // membership is NULL-SAFE (<=>): a hot all-NULL group must divert
-    // like any other — an equi-join would silently leave it on the
-    // window leg, exactly the straggler the guard exists to prevent
-    val hotGroups = e.groupBy(col("grp")).agg(count(lit(1)).as("__gn"))
-      .filter(col("__gn") > cap)
-      .select(col("grp").as("__hg"))
-    val cold = e.join(broadcast(hotGroups), col("grp") <=> col("__hg"),
-      "left_anti")
-    val hot = e.join(broadcast(hotGroups), col("grp") <=> col("__hg"),
-      "left_semi")
+    val (cold, hot) = HotKeys.divert(e, HotKeys.census(e, Seq("grp"), cap),
+      Seq("grp"))
     winsorizeOf(cold).unionByName(winsorizeHotOf(hot))
   }
 

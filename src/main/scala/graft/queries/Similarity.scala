@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, GQuery, Tables}
+import graft.core.{Caches, GQuery, HotKeys, Tables}
 import graft.core.Caches.TrackedOps
 import Qdsl._
 
@@ -275,14 +275,6 @@ object Similarity {
         col("x.bucket").as("bucket"): _*)
   }
 
-  /** The OVER-cap (t, bucket) list — see [[AnnBucketCap]]. Anti-joined
-    * rather than inner-joining the full census: it is tiny by
-    * construction (at most n/cap ids per table), so it broadcasts. */
-  private def lshHot(sig: DataFrame, cap: Long): DataFrame =
-    sig.groupBy(col("t"), col("bucket")).agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > cap)
-      .select(col("t"), col("bucket"))
-
   /** Exact-cosine top-k over each probe's bucket-mates: `index` rows
     * (vid, v, n2, t, bucket) meet the broadcast probe rows (q_id, qv,
     * qn2, qt, qbucket) on an equi-join. Across several tables a pair can
@@ -322,7 +314,7 @@ object Similarity {
     def signed(df: DataFrame) =
       lshSigned(df.select(col("vid"), col("v"), col("n2")), bits, tables)
     val sig = signed(base).trackedPersist()
-    val hot = lshHot(sig, cap)
+    val hot = HotKeys.census(sig, Seq("t", "bucket"), cap)
     def guarded(df: DataFrame) = df.join(hot, Seq("t", "bucket"), "left_anti")
     val flips = lit(0L) +:
       (if (hamming >= 1) (0 until bits).map(b => lit(1L << b)) else Nil)
@@ -365,7 +357,8 @@ object Similarity {
     val out = graft.core.Scratch.dir("lshidx", dir)
     val idx = graft.plans.DeferredIngest(s, "vid BIGINT, bucket BIGINT") {
       val sig = lshSigned(corpus(s, dir), LSH_BITS).trackedPersist()
-      sig.join(lshHot(sig, AnnBucketCap), Seq("t", "bucket"), "left_anti")
+      val key = Seq("t", "bucket")
+      HotKeys.divert(sig, HotKeys.census(sig, key, AnnBucketCap), key)._1
         .select(col("vid"), col("bucket"))
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out).select(col("vid"), col("bucket"))
@@ -1285,11 +1278,9 @@ object Similarity {
       explode(array((0 until ND_BANDS).map(j => struct(lit(j).as("band"),
         expr(s"shiftright(bucket, ${2 * j}) % 4").as("bkey"))): _*)).as("bb"))
       .select(col("vid"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    val hot = bands.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > AnnBucketCap)
-      .select(col("band"), col("bkey"))
-    val guarded = bands.join(hot, Seq("band", "bkey"), "left_anti")
+    val bandKey = Seq("band", "bkey")
+    val (guarded, _) = HotKeys.divert(bands,
+      HotKeys.census(bands, bandKey, AnnBucketCap), bandKey)
     val pairs = guarded.as("a").join(guarded.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.vid") < col("b.vid"))
@@ -1659,18 +1650,17 @@ object Similarity {
     * time the pair-enumeration layer separately from the distinct. */
   private[graft] def semDroppedRaw(assigned: DataFrame, minCos: Double,
       cap: Long = SemCellCap, blockRows: Long = SemBlockRows): DataFrame = {
-    // cell ids are argmin outputs — never null, so plain === joins
-    val hotCells = assigned.groupBy(col("cell")).agg(count(lit(1)).as("__cn"))
-      .filter(col("__cn") > cap)
-      .select(col("cell").as("__hc"), col("__cn"))
+    val hotCells = HotKeys.census(assigned, Seq("cell"), cap)
     // each leg is SELF-JOINED below — uncached, the anti/inner join
     // over the assigned cache plans once per side (and the assigned
     // cache's consumers serialize behind its block-compute lock)
     val cold = Caches.tracked(
-      assigned.join(broadcast(hotCells.select(col("__hc"))),
-        col("cell") === col("__hc"), "left_anti"))
+      HotKeys.divert(assigned, hotCells, Seq("cell"))._1)
+    // the hot leg needs each cell's population for its block count, so
+    // it inner-joins the census (cell ids are argmin outputs, never null)
     val hot = Caches.tracked(
-      assigned.join(broadcast(hotCells), col("cell") === col("__hc"))
+      assigned.join(broadcast(hotCells.select(col("cell").as("__hc"),
+          col("n").as("__cn"))), col("cell") === col("__hc"))
         .withColumn("__b",
           ceil(col("__cn").cast("double") / lit(blockRows.toDouble)).cast("long"))
         .withColumn("__blk", pmod(xxhash64(col("vec_id")), col("__b")))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, GQuery, Tables}
+import graft.core.{Caches, GQuery, HotKeys, Tables}
 import graft.core.Caches.TrackedOps
 import Qdsl._
 
@@ -82,15 +82,8 @@ object Temporal {
   private[graft] def asofGuardedOf(ev0: DataFrame,
       cap: Long = 1000000L): DataFrame = {
     val ev = ev0.trackedPersist()
-    // NULL-SAFE membership: a hot all-NULL key diverts like any other
-    val hotUsers = ev.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > cap)
-      .select(col("user_id").as("__hu"))
-    val cold = ev.join(broadcast(hotUsers), col("user_id") <=> col("__hu"),
-      "left_anti")
-    val hot = ev.join(broadcast(hotUsers), col("user_id") <=> col("__hu"),
-      "left_semi")
+    val (cold, hot) = HotKeys.divert(ev,
+      HotKeys.census(ev, Seq("user_id"), cap), Seq("user_id"))
     asofWindowOf(cold).unionByName(asofSegmentedOf(hot))
   }
 
@@ -351,17 +344,10 @@ object Temporal {
   private[graft] def funnelStagesGuardedN(ev0: DataFrame,
       kinds: Seq[String], cap: Long): DataFrame = {
     val ev = ev0.trackedPersist()
-    // NULL-SAFE membership: a hot all-NULL key diverts like any other
-    // (the segmented leg is join-free on the key — groupBy and the fold
-    // handle NULL groups natively)
-    val hotUsers = ev.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > cap)
-      .select(col("user_id").as("__hu"))
-    val cold = ev.join(broadcast(hotUsers), col("user_id") <=> col("__hu"),
-      "left_anti")
-    val hot = ev.join(broadcast(hotUsers), col("user_id") <=> col("__hu"),
-      "left_semi")
+    // a hot NULL user diverts too: the segmented leg is join-free on the
+    // key — groupBy and the fold handle NULL groups natively
+    val (cold, hot) = HotKeys.divert(ev,
+      HotKeys.census(ev, Seq("user_id"), cap), Seq("user_id"))
     funnelStagesWindowN(cold, kinds)
       .unionByName(funnelSegmentedN(hot, kinds))
   }
@@ -747,15 +733,8 @@ object Temporal {
   private[graft] def scd2GuardedOf(ev0: DataFrame,
       cap: Long = 1000000L): DataFrame = {
     val ev = ev0.trackedPersist()
-    // NULL-SAFE membership: a hot all-NULL key diverts like any other
-    val hotUsers = ev.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > cap)
-      .select(col("user_id").as("__hu"))
-    val cold = ev.join(broadcast(hotUsers), col("user_id") <=> col("__hu"),
-      "left_anti")
-    val hot = ev.join(broadcast(hotUsers), col("user_id") <=> col("__hu"),
-      "left_semi")
+    val (cold, hot) = HotKeys.divert(ev,
+      HotKeys.census(ev, Seq("user_id"), cap), Seq("user_id"))
     scd2WindowOf(cold).unionByName(scd2SegmentedOf(hot))
   }
 

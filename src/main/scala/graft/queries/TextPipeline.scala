@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, Fixpoint, GQuery, LoopWidth, Tables, Widen}
+import graft.core.{Caches, Fixpoint, GQuery, HotKeys, LoopWidth, Tables, Widen}
 import graft.core.Caches.TrackedOps
 import Qdsl._
 
@@ -56,6 +56,21 @@ object TextPipeline {
   private val minhashAB: Seq[(Int, Int)] =
     Seq((2, 1), (3, 7), (5, 11), (7, 19), (11, 23), (13, 31), (17, 43), (19, 57))
 
+  /** The band-bucket key of a band row: band i holds slots (m2i, m2i+1). */
+  private val BandKey = Seq("band", "x", "y")
+
+  /** The signature columns m0..m7 of a band row. */
+  private def sigCols: Seq[Column] = minhashAB.indices.map(i => col(s"m$i"))
+
+  /** Oracle twin of the signature: one `MIN((a*h+b) % p) AS m<i>` per
+    * permutation over a shingle-hash column `h`. */
+  private val minsSql = minhashAB.zipWithIndex.map { case ((a, b), i) =>
+    s"MIN(($a*h+$b) % 1000000007) AS m$i" }.mkString(", ")
+
+  /** Oracle twin of `n_match`: slot agreement of signatures `a` and `b`. */
+  private val eqsSql = minhashAB.indices.map(i =>
+    s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END").mkString(" + ")
+
   /** Band buckets bigger than this are dropped before the pair self-join.
     * A degenerate bucket of size m (boilerplate text, adversarial spam, an
     * all-identical corpus) would contribute O(m²) pairs — the exact blowup
@@ -66,94 +81,92 @@ object TextPipeline {
     * 64 trims only the degenerate tail. Mirrored in the oracle SQL. */
   private[graft] val LshBucketCap = 64
 
-  /** Per-doc MinHash signature over distinct word-2-gram shingles,
-    * computed entirely SCAN-LOCAL: the shingle array and its hash60
-    * array are each projected once per row (referencing a lambda-built
-    * expression in later lambdas would re-evaluate it per element —
-    * the quadratic-per-row trap measured at 2.5× in r4), then the 8
-    * signature mins are `array_min` folds over the materialized hash
-    * array. No explode, no exchange: the old explode + hash-agg form
-    * shuffled a row per document just to re-assemble what each row
-    * already held, and at 100 TB the shingle-hash traffic IS the cost
-    * of the signature stage. Docs with < 2 tokens have no shingles and
-    * carry no signature (same as the exploded form's dropped groups). */
   /** Distinct word-2-gram shingles of a token array — the set the
     * MinHash signature sketches (shared with the calibration census). */
   private def shingleArr(w: Column): Column =
     array_distinct(transform(sequence(lit(1), size(w) - 1),
       i => concat(element_at(w, i), lit(" "), element_at(w, i + 1))))
 
-  private def minhashSig(docs: DataFrame): DataFrame = {
+  /** The ONE MinHash band builder: per-doc signature over distinct
+    * word-2-gram shingles, exploded into the persisted index schema
+    * (band, x, y, doc_id, m0..m7) — 4 bands of 2 slots, every row
+    * carrying the full signature so pair agreement needs no lookup join.
+    * Pairs, index, census, merge, serve and fuzzy decontamination all
+    * read this frame; it is tracked once, so one corpus's bands are
+    * built once per action whichever of them ask (Caches dedupes by
+    * plan).
+    *
+    * The signature is computed entirely SCAN-LOCAL: the shingle array and
+    * its hash60 array are each projected once per row (referencing a
+    * lambda-built expression in later lambdas would re-evaluate it per
+    * element — the quadratic-per-row trap measured at 2.5× in r4), then
+    * the 8 signature mins are fused affine-min folds over the materialized
+    * hash array (the same Long math the oracle spells, MIN((a*h+b) % p),
+    * with no per-(doc, permutation) intermediate array). No exchange: at
+    * 100 TB the shingle-hash traffic IS the cost of the signature stage.
+    * Docs with < 2 tokens have no shingles and carry no band rows. */
+  private def minhashBands(docs: DataFrame): DataFrame = {
     val w = col("w")
-    // fused affine-min kernel per permutation: same Long math the oracle
-    // spells (MIN((a*h+b) % p)), no per-(doc, permutation) intermediate
-    // array — the composition form it replaced is what the SQL mirrors
     val mins = minhashAB.zipWithIndex.map { case ((a, b), i) =>
       graft.functions.GraftAffineMin(col("hs"), a, b, P).as(s"m$i")
     }
+    val bandKeys = array((0 until 4).map(i => struct(lit(i).as("band"),
+      col(s"m${2 * i}").as("x"), col(s"m${2 * i + 1}").as("y"))): _*)
     docs.select(col("doc_id"), ws.as("w"))
       .filter(size(w) >= 2)
       .select(col("doc_id"), shingleArr(w).as("sh"))
       .select(col("doc_id"), transform(col("sh"), s => hashMod(s)).as("hs"))
       .select(col("doc_id") +: mins: _*)
+      .select(col("doc_id") +: sigCols :+ explode(bandKeys).as("bk"): _*)
+      .select(BandKey.map(k => col(s"bk.$k").as(k)) ++
+        (col("doc_id") +: sigCols): _*)
+      .trackedPersist()
   }
 
-  /** MinHash + LSH near-dup candidates: 8-hash signature, 4 bands of 2,
-    * bucket self-join, per-pair signature agreement count. The band
-    * explode keeps the join key small; the self-join is an equi-join on
-    * the band struct, so Spark hash-partitions buckets across the cluster
-    * — no O(n²) pair enumeration ever materializes. */
-  def dedupMinhash(s: SparkSession, dir: String): DataFrame =
-    dedupMinhashDocs(Tables.documents(s, dir), LshBucketCap)
+  /** The hot-bucket guard of a band frame: (index, census) — the band
+    * rows outside over-cap buckets, and the over-cap buckets themselves
+    * as (band, x, y, bucket_n), the persisted tombstone schema. */
+  private def bandIndex(bands: DataFrame, cap: Int): (DataFrame, DataFrame) = {
+    val hot = HotKeys.census(bands, BandKey, cap)
+      .withColumnRenamed("n", "bucket_n")
+    (HotKeys.divert(bands, hot, BandKey)._1, hot)
+  }
 
-  /** [[dedupMinhash]] over an explicit corpus with an explicit bucket cap
-    * (spec surface — the adversarial-corpus guard test drives this). */
-  private[graft] def dedupMinhashDocs(docs: DataFrame, cap: Int): DataFrame = {
-    // the signature table feeds the band explode on both join sides;
-    // lazily cache it so the shingle/md5 scan runs once per action while
-    // plan-only callers (explain/schema probes) still trigger no job
-    val sig = minhashSig(docs).trackedPersist()
-    // each band row carries the full signature, so pair agreement is
-    // computed inline on the bucket join — no second lookup join, and the
-    // duplicate candidates from multi-band collisions collapse in the
-    // final (doc_a, doc_b) aggregation (one shuffle)
-    val bandKeys = array((0 until 4).map(i => struct(lit(i).as("band"),
-      col(s"m${2 * i}").as("x"), col(s"m${2 * i + 1}").as("y"))): _*)
-    val bands = sig.select(col("doc_id"),
-      struct(minhashAB.indices.map(i => col(s"m$i")): _*).as("sig"),
-      explode(bandKeys).as("bk"))
-    // hot-bucket guard: count over slim (doc_id, bk) rows (map-side
-    // combined), keep only the OVER-cap buckets — a list that is tiny by
-    // construction (at most n/cap entries, a handful in practice) — and
-    // anti-join it against the band rows. Anti-joining the tiny hot list
-    // broadcasts; inner-joining the huge ok list would shuffle the heavy
-    // signature-carrying band rows a second time.
-    val hotBuckets = sig.select(col("doc_id"), explode(bandKeys).as("bk"))
-      .groupBy(col("bk"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > cap)
-      .select(col("bk"))
-    // the self-join references `guarded` twice (l/r) — uncached, the
-    // whole bands+hot-census subtree plans (and the sig cache is locked)
-    // once PER SIDE; one lazy cache computes it once per action
-    val guarded = bands.join(hotBuckets, Seq("bk"), "left_anti")
-      .trackedPersist()
+  /** The ONE band join: `probe` band rows meet `index` band rows on
+    * (band, x, y) under the extra condition `cond` (over aliases `l` =
+    * index, `r` = probe); each meeting scores its signature agreement and
+    * multi-band collisions collapse to (doc_a = index doc, doc_b = probe
+    * doc, max agreement `n_match`) in one aggregation. The equi-join
+    * hash-partitions buckets across the cluster — no O(n²) pair
+    * enumeration ever materializes. */
+  private def bandJoin(probe: DataFrame, index: DataFrame,
+      cond: Column = lit(true)): DataFrame = {
     val nMatch = minhashAB.indices.map(i =>
-      when(col(s"l.sig.m$i") === col(s"r.sig.m$i"), 1).otherwise(0))
+      when(col(s"l.m$i") === col(s"r.m$i"), 1).otherwise(0))
       .reduce(_ + _).cast("long")
-    guarded.as("l").join(guarded.as("r"),
-        col("l.bk") === col("r.bk") && col("l.doc_id") < col("r.doc_id"))
+    index.as("l").join(probe.as("r"),
+        BandKey.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _) && cond)
       .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
         nMatch.as("m"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(max(col("m")).as("n_match"))
   }
 
-  private val dedupMinhashSql = {
-    val mins = minhashAB.zipWithIndex.map { case ((a, b), i) =>
-      s"MIN(($a*h+$b) % 1000000007) AS m$i" }.mkString(", ")
-    val eqs = minhashAB.indices.map(i =>
-      s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END").mkString(" + ")
+  /** MinHash + LSH near-dup candidates: 8-hash signature, 4 bands of 2,
+    * bucket self-join, per-pair signature agreement count. */
+  def dedupMinhash(s: SparkSession, dir: String): DataFrame =
+    dedupMinhashDocs(Tables.documents(s, dir), LshBucketCap)
+
+  /** [[dedupMinhash]] over an explicit corpus with an explicit bucket cap
+    * (spec surface — the adversarial-corpus guard test drives this). The
+    * guarded band rows feed both sides of the self-join — one lazy cache
+    * computes them once per action instead of once per side. */
+  private[graft] def dedupMinhashDocs(docs: DataFrame, cap: Int): DataFrame = {
+    val guarded = Caches.tracked(bandIndex(minhashBands(docs), cap)._1)
+    bandJoin(guarded, guarded, col("l.doc_id") < col("r.doc_id"))
+  }
+
+  private val dedupMinhashSql =
     s"""WITH ws AS (
       |  SELECT doc_id, list_filter(string_split(translate(regexp_replace(text, '\\n', ' n', 'g'), '".,/()?;', '        '), ' '), w -> w != '') AS w FROM documents),
       |sh AS (
@@ -161,7 +174,7 @@ object TextPipeline {
       |  FROM ws WHERE len(w) >= 2),
       |h AS (
       |  SELECT doc_id, CAST('0x' || substring(md5(sh),1,15) AS BIGINT) % 1000000007 AS h FROM sh),
-      |sig AS (SELECT doc_id, $mins FROM h GROUP BY doc_id),
+      |sig AS (SELECT doc_id, $minsSql FROM h GROUP BY doc_id),
       |bands AS (
       |  SELECT doc_id, unnest([[0,m0,m1],[1,m2,m3],[2,m4,m5],[3,m6,m7]]) AS bk FROM sig),
       |okb AS (
@@ -170,9 +183,8 @@ object TextPipeline {
       |pairs AS (
       |  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
       |  FROM guarded l JOIN guarded r ON l.bk = r.bk AND l.doc_id < r.doc_id)
-      |SELECT doc_a, doc_b, CAST($eqs AS BIGINT) AS n_match
+      |SELECT doc_a, doc_b, CAST($eqsSql AS BIGINT) AS n_match
       |FROM pairs JOIN sig a ON doc_a = a.doc_id JOIN sig b ON doc_b = b.doc_id""".stripMargin
-  }
 
   // --------------------------------------------- incremental dedup serve
 
@@ -182,42 +194,8 @@ object TextPipeline {
     * BUILD time — boilerplate buckets are an index-construction decision,
     * not a per-batch one (re-censusing history per increment would cost a
     * corpus scan, the thing the index exists to avoid). */
-  /** UNGUARDED flat band rows (band, x, y, doc_id, m0..m7) of a doc
-    * frame — the raw material both index legs share. */
-  private def bandRowsOf(docs: DataFrame): DataFrame =
-    bandRowsOfSig(minhashSig(docs).trackedPersist())
-
-  /** The band explode alone, over an already-built signature frame —
-    * split out (r17) so [[dedupIncremental]] can derive BOTH its index
-    * leg and its serve leg from one shared sig cache (per-doc signatures
-    * are slice-independent, so sig(docs).filter(pred) ≡ sig(docs where
-    * pred) exactly). */
-  private def bandRowsOfSig(sig: DataFrame): DataFrame = {
-    val bandKeys = array((0 until 4).map(i => struct(lit(i).as("band"),
-      col(s"m${2 * i}").as("x"), col(s"m${2 * i + 1}").as("y"))): _*)
-    sig.select(
-        col("doc_id") +: minhashAB.indices.map(i => col(s"m$i"))
-          :+ explode(bandKeys).as("bk"): _*)
-      .select(col("bk.band").as("band") +: col("bk.x").as("x")
-        +: col("bk.y").as("y") +: col("doc_id")
-        +: minhashAB.indices.map(i => col(s"m$i")): _*)
-  }
-
   private[graft] def minhashIndex(docs: DataFrame, cap: Int): DataFrame =
-    minhashIndexRows(Caches.tracked(bandRowsOf(docs)), cap)
-
-  /** Hot-bucket-guarded index over a band-rows frame the CALLER already
-    * tracked-persisted — `rows` is referenced twice (hot census +
-    * anti-join); uncached, the sig build under the band explode runs
-    * once per reference (measured as two lock-serialized ~640 ms stages
-    * in the q_dedup_incremental index construction). */
-  private def minhashIndexRows(rows: DataFrame, cap: Int): DataFrame = {
-    val hotKeys = rows.groupBy(col("band"), col("x"), col("y"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > cap)
-      .select(col("band"), col("x"), col("y"))
-    rows.join(hotKeys, Seq("band", "x", "y"), "left_anti")
-  }
+    bandIndex(minhashBands(docs), cap)._1
 
   /** The tombstone side of the index: (band, x, y, bucket_n) for every
     * bucket the build EXCLUDED — tiny by construction (≤ 4n/cap rows).
@@ -225,10 +203,7 @@ object TextPipeline {
     * hot at build time has no rows left to count, so a later increment
     * would resurrect it below cap. Persist it next to the index. */
   private[graft] def minhashHotCensus(docs: DataFrame, cap: Int): DataFrame =
-    bandRowsOf(docs)
-      .groupBy(col("band"), col("x"), col("y"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > cap)
+    bandIndex(minhashBands(docs), cap)._2
 
   /** Index MAINTENANCE: merge an arriving batch into a prebuilt
     * (index, hot census) pair without rescanning history. The merged
@@ -254,20 +229,17 @@ object TextPipeline {
     * stays ∝ batch, not ∝ index). */
   private[graft] def minhashIndexMerge(idx: DataFrame, hot: DataFrame,
       batch: DataFrame, cap: Int): (DataFrame, DataFrame) = {
-    val allRows = idx.unionByName(bandRowsOf(batch)).trackedPersist()
+    val allRows = idx.unionByName(minhashBands(batch)).trackedPersist()
     val mergedCounts = allRows
-      .groupBy(col("band"), col("x"), col("y"))
+      .groupBy(BandKey.map(col): _*)
       .agg(count(lit(1)).as("n_present"))
-      .join(hot.select(col("band"), col("x"), col("y"),
-        col("bucket_n").as("n_tomb")), Seq("band", "x", "y"), "full_outer")
+      .join(hot.select(BandKey.map(col) :+ col("bucket_n").as("n_tomb"): _*),
+        BandKey, "full_outer")
       .select(col("band"), col("x"), col("y"),
         (coalesce(col("n_present"), lit(0L)) +
           coalesce(col("n_tomb"), lit(0L))).as("bucket_n"))
     val newHot = mergedCounts.filter(col("bucket_n") > cap).trackedPersist()
-    val mergedIdx = allRows.join(
-      newHot.select(col("band"), col("x"), col("y")),
-      Seq("band", "x", "y"), "left_anti")
-    (mergedIdx, newHot)
+    (HotKeys.divert(allRows, newHot, BandKey)._1, newHot)
   }
 
   /** Incremental near-dup detection: dedup a NEW document batch against a
@@ -295,62 +267,31 @@ object TextPipeline {
     val out = graft.core.Scratch.dir("mhidx", dir)
     val idxSchema = "band INT, x BIGINT, y BIGINT, doc_id BIGINT, " +
       minhashAB.indices.map(i => s"m$i BIGINT").mkString(", ")
-    // ONE sig build over the full corpus, shared by the index leg and
-    // the serve leg (r17): signatures are per-doc, so slicing the sig
-    // table at t is exactly sig-of-the-slice — previously each leg ran
-    // its own 1-wide tokenize+shingle pass over its slice of the same
-    // scan (258 ms + 124 ms profiled at sf0.1)
-    val sig = minhashSig(docs).trackedPersist()
+    // ONE band build over the full corpus, shared by the index leg and
+    // the serve leg: signatures are per-doc, so slicing the bands at t is
+    // exactly the bands of the slice
+    val split = minhashBands(docs).crossJoin(broadcast(tDf))
     val idx = graft.plans.DeferredIngest(s, idxSchema) {
-      val histRows = Caches.tracked(bandRowsOfSig(
-        sig.crossJoin(broadcast(tDf)).filter(col("doc_id") < col("t"))
-          .drop("t")))
-      minhashIndexRows(histRows, LshBucketCap)
+      bandIndex(split.filter(col("doc_id") < col("t")).drop("t"),
+          LshBucketCap)._1
         .write.mode("overwrite").parquet(out)
-      s.read.parquet(out).select(col("band") +: col("x") +: col("y")
-        +: col("doc_id") +: minhashAB.indices.map(i => col(s"m$i")): _*)
+      s.read.parquet(out)
+        .select(BandKey.map(col) ++ (col("doc_id") +: sigCols): _*)
     }
-    val batchSig = sig.crossJoin(broadcast(tDf))
-      .filter(col("doc_id") >= col("t")).drop("t")
-    serveAgainstIndexSig(idx, batchSig)
+    bandJoin(split.filter(col("doc_id") >= col("t")).drop("t"), idx)
   }
 
   /** The serve leg alone: near-dup candidates of `batch` docs against a
     * prebuilt band index (live [[minhashIndex]] output or the same rows
-    * read back from storage). Factored out so [[dedupIncremental]] (the
-    * oracle-checked query) and `Corpus.dedupAgainstIndex` (the library
-    * facade, including its foreachBatch streaming use) share one code
-    * path — the semDedup-drift lesson. */
+    * read back from storage) — the `Corpus.dedupAgainstIndex` facade,
+    * including its foreachBatch streaming use. It is [[bandJoin]] over
+    * the batch's bands, the same path the oracle-checked
+    * [[dedupIncremental]] serves through — the semDedup-drift lesson. */
   private[graft] def serveAgainstIndex(idx: DataFrame,
       batch: DataFrame): DataFrame =
-    serveAgainstIndexSig(idx, minhashSig(batch))
+    bandJoin(minhashBands(batch), idx)
 
-  /** [[serveAgainstIndex]] from an already-built batch signature frame
-    * (r17 split, so [[dedupIncremental]] can feed its shared sig cache
-    * here instead of paying a second tokenize pass). */
-  private def serveAgainstIndexSig(idx: DataFrame,
-      batchSig: DataFrame): DataFrame = {
-    val bandKeys = array((0 until 4).map(i => struct(lit(i).as("band"),
-      col(s"m${2 * i}").as("x"), col(s"m${2 * i + 1}").as("y"))): _*)
-    val bandsNew = batchSig.select(col("doc_id").as("doc_b"),
-      struct(minhashAB.indices.map(i => col(s"m$i")): _*).as("sig"),
-      explode(bandKeys).as("bk"))
-    val nMatch = minhashAB.indices.map(i =>
-      when(col(s"sig.m$i") === col(s"m$i"), 1).otherwise(0))
-      .reduce(_ + _).cast("long")
-    idx.join(bandsNew,
-        col("band") === col("bk.band") && col("x") === col("bk.x") &&
-          col("y") === col("bk.y"))
-      .select(col("doc_id").as("doc_a"), col("doc_b"), nMatch.as("m"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(max(col("m")).as("n_match"))
-  }
-
-  private val dedupIncrementalSql = {
-    val mins = minhashAB.zipWithIndex.map { case ((a, b), i) =>
-      s"MIN(($a*h+$b) % 1000000007) AS m$i" }.mkString(", ")
-    val eqs = minhashAB.indices.map(i =>
-      s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END").mkString(" + ")
+  private val dedupIncrementalSql =
     s"""WITH ws AS (
       |  SELECT doc_id, list_filter(string_split(translate(regexp_replace(text, '\\n', ' n', 'g'), '".,/()?;', '        '), ' '), w -> w != '') AS w FROM documents),
       |sh AS (
@@ -358,7 +299,7 @@ object TextPipeline {
       |  FROM ws WHERE len(w) >= 2),
       |h AS (
       |  SELECT doc_id, CAST('0x' || substring(md5(sh),1,15) AS BIGINT) % 1000000007 AS h FROM sh),
-      |sig AS (SELECT doc_id, $mins FROM h GROUP BY doc_id),
+      |sig AS (SELECT doc_id, $minsSql FROM h GROUP BY doc_id),
       |t AS (SELECT MAX(doc_id)*4 // 5 AS t FROM documents),
       |bands AS (
       |  SELECT doc_id, unnest([[0,m0,m1],[1,m2,m3],[2,m4,m5],[3,m6,m7]]) AS bk FROM sig),
@@ -372,9 +313,8 @@ object TextPipeline {
       |pairs AS (
       |  SELECT DISTINCT i.doc_id AS doc_a, nb.doc_id AS doc_b
       |  FROM idx i JOIN newb nb ON i.bk = nb.bk)
-      |SELECT doc_a, doc_b, CAST($eqs AS BIGINT) AS n_match
+      |SELECT doc_a, doc_b, CAST($eqsSql AS BIGINT) AS n_match
       |FROM pairs JOIN sig a ON doc_a = a.doc_id JOIN sig b ON doc_b = b.doc_id""".stripMargin
-  }
 
   /** Merge-equals-rebuild, proven against an independent engine: Spark
     * builds (index, hot census) over HISTORY only, MERGES the batch in
@@ -390,9 +330,8 @@ object TextPipeline {
       .filter(col("doc_id") < col("t")).drop("t")
     val batch = docs.crossJoin(broadcast(tDf))
       .filter(col("doc_id") >= col("t")).drop("t")
-    val (mIdx, mHot) = minhashIndexMerge(
-      minhashIndex(hist, LshBucketCap),
-      minhashHotCensus(hist, LshBucketCap), batch, LshBucketCap)
+    val (hIdx, hHot) = bandIndex(minhashBands(hist), LshBucketCap)
+    val (mIdx, mHot) = minhashIndexMerge(hIdx, hHot, batch, LshBucketCap)
     val idxAgg = mIdx.groupBy(col("band").cast("long").as("band"))
       .agg(count(lit(1)).as("n_rows"),
         count_distinct(col("x"), col("y")).as("n_buckets"),
@@ -409,9 +348,7 @@ object TextPipeline {
         coalesce(col("hot_n_sum"), lit(0L)).as("hot_n_sum"))
   }
 
-  private val dedupIndexMergeSql = {
-    val mins = minhashAB.zipWithIndex.map { case ((a, b), i) =>
-      s"MIN(($a*h+$b) % 1000000007) AS m$i" }.mkString(", ")
+  private val dedupIndexMergeSql =
     s"""WITH ws AS (
       |  SELECT doc_id, list_filter(string_split(translate(regexp_replace(text, '\\n', ' n', 'g'), '".,/()?;', '        '), ' '), w -> w != '') AS w FROM documents),
       |sh AS (
@@ -419,7 +356,7 @@ object TextPipeline {
       |  FROM ws WHERE len(w) >= 2),
       |h AS (
       |  SELECT doc_id, CAST('0x' || substring(md5(sh),1,15) AS BIGINT) % 1000000007 AS h FROM sh),
-      |sig AS (SELECT doc_id, $mins FROM h GROUP BY doc_id),
+      |sig AS (SELECT doc_id, $minsSql FROM h GROUP BY doc_id),
       |bands AS (
       |  SELECT doc_id, unnest([[0,m0,m1],[1,m2,m3],[2,m4,m5],[3,m6,m7]]) AS bk FROM sig),
       |bc AS (
@@ -440,7 +377,6 @@ object TextPipeline {
       |  COALESCE(hot_buckets, 0) AS hot_buckets,
       |  COALESCE(hot_n_sum, 0) AS hot_n_sum
       |FROM cold c FULL JOIN hot ON c.band = hot.band""".stripMargin
-  }
 
   // --------------------------------------------- minhash calibration
 
@@ -489,11 +425,7 @@ object TextPipeline {
           .as("mean_jaccard"),
         (col("n_match").cast("double") / 8.0).as("est_jaccard"))
 
-  private val minhashCalibrationSql = {
-    val mins = minhashAB.zipWithIndex.map { case ((a, b), i) =>
-      s"MIN(($a*h+$b) % 1000000007) AS m$i" }.mkString(", ")
-    val eqs = minhashAB.indices.map(i =>
-      s"CASE WHEN a.m$i = b.m$i THEN 1 ELSE 0 END").mkString(" + ")
+  private val minhashCalibrationSql =
     s"""WITH ws AS (
       |  SELECT doc_id, list_filter(string_split(translate(regexp_replace(text, '\\n', ' n', 'g'), '".,/()?;', '        '), ' '), w -> w != '') AS w FROM documents),
       |shl AS (
@@ -502,7 +434,7 @@ object TextPipeline {
       |hh AS (
       |  SELECT doc_id, CAST('0x' || substring(md5(t.s),1,15) AS BIGINT) % 1000000007 AS h
       |  FROM shl, unnest(sh) AS t(s)),
-      |sig AS (SELECT doc_id, $mins FROM hh GROUP BY doc_id),
+      |sig AS (SELECT doc_id, $minsSql FROM hh GROUP BY doc_id),
       |bands AS (
       |  SELECT doc_id, unnest([[0,m0,m1],[1,m2,m3],[2,m4,m5],[3,m6,m7]]) AS bk FROM sig),
       |okb AS (
@@ -512,7 +444,7 @@ object TextPipeline {
       |  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
       |  FROM guarded l JOIN guarded r ON l.bk = r.bk AND l.doc_id < r.doc_id),
       |pm AS (
-      |  SELECT doc_a, doc_b, CAST($eqs AS BIGINT) AS n_match
+      |  SELECT doc_a, doc_b, CAST($eqsSql AS BIGINT) AS n_match
       |  FROM pairs JOIN sig a ON doc_a = a.doc_id JOIN sig b ON doc_b = b.doc_id),
       |j AS (
       |  SELECT pm.n_match,
@@ -525,13 +457,12 @@ object TextPipeline {
       |  CAST(SUM(ninter) AS DOUBLE) / CAST(SUM(nsum - ninter) AS DOUBLE) AS mean_jaccard,
       |  CAST(n_match AS DOUBLE) / 8.0 AS est_jaccard
       |FROM j GROUP BY n_match""".stripMargin
-  }
 
   // -------------------------------------------------------------- simhash
 
   /** 32-bit SimHash per document over the word multiset: per-word md5-hash,
     * ±1 vote per bit position weighted by occurrence, majority sign forms
-    * the fingerprint. Computed SCAN-LOCAL like [[minhashSig]]: the word
+    * the fingerprint. Computed SCAN-LOCAL like [[minhashBands]]: the word
     * hashes are projected once per row, then each bit's vote balance is
     * an `aggregate` fold over that array — no ×32 bit explode, no
     * (doc, bit) exchange; the fingerprint never leaves its scan task.
@@ -759,13 +690,6 @@ object TextPipeline {
 
   // -------------------------------------------------- n-gram jaccard dedup
 
-  /** Candidate pairs + exact word-set Jaccard verification. The block key
-    * is the guarded MinHash band bucket (never a raw attribute like
-    * (lang, source): raw-attribute blocks grow linearly with the corpus,
-    * so the in-block pair join grows quadratically — the LSH bucket stays
-    * O(1)-ish per band by construction, and over-cap buckets are dropped).
-    * Candidates are then exactly verified: distinct-word intersection /
-    * union as exact integers, one IEEE division, keep ≥ 0.8. */
   /** Guarded-LSH candidate pairs joined back to their distinct word sets
     * with the exact intersection and both set sizes — the ONE shared
     * verification scaffold the symmetric (Jaccard) and asymmetric
@@ -792,6 +716,13 @@ object TextPipeline {
         size(col("b.w")).cast("long").as("nb"))
   }
 
+  /** Candidate pairs + exact word-set Jaccard verification. The block key
+    * is the guarded MinHash band bucket (never a raw attribute like
+    * (lang, source): raw-attribute blocks grow linearly with the corpus,
+    * so the in-block pair join grows quadratically — the LSH bucket stays
+    * O(1)-ish per band by construction, and over-cap buckets are dropped).
+    * Candidates are then exactly verified: distinct-word intersection /
+    * union as exact integers, one IEEE division, keep ≥ 0.8. */
   def jaccardNeardup(s: SparkSession, dir: String): DataFrame =
     verifiedPairs(s, dir)
       .select(col("doc_a"), col("doc_b"), col("n_inter"),
@@ -803,9 +734,7 @@ object TextPipeline {
   /** Shared oracle CTE chain: documents → word lists (`d`), MinHash
     * signatures, guarded band buckets, candidate pairs (`cand`) — the
     * DuckDB mirror of [[dedupMinhashDocs]]'s candidate generation. */
-  private def lshCandSql: String = {
-    val mins = minhashAB.zipWithIndex.map { case ((a, b), i) =>
-      s"MIN(($a*h+$b) % 1000000007) AS m$i" }.mkString(", ")
+  private def lshCandSql: String =
     s"""d AS (
       |  SELECT doc_id, lang, source,
       |    list_filter(string_split(translate(regexp_replace(text, '\\n', ' n', 'g'), '".,/()?;', '        '), ' '), w -> w != '') AS w
@@ -815,7 +744,7 @@ object TextPipeline {
       |  FROM d WHERE len(w) >= 2),
       |hh AS (
       |  SELECT doc_id, CAST('0x' || substring(md5(sh),1,15) AS BIGINT) % 1000000007 AS h FROM shng),
-      |sig AS (SELECT doc_id, $mins FROM hh GROUP BY doc_id),
+      |sig AS (SELECT doc_id, $minsSql FROM hh GROUP BY doc_id),
       |bands AS (
       |  SELECT doc_id, unnest([[0,m0,m1],[1,m2,m3],[2,m4,m5],[3,m6,m7]]) AS bk FROM sig),
       |okb AS (SELECT bk FROM bands GROUP BY bk HAVING COUNT(*) <= $LshBucketCap),
@@ -823,7 +752,6 @@ object TextPipeline {
       |cand AS (
       |  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
       |  FROM guarded l JOIN guarded r ON l.bk = r.bk AND l.doc_id < r.doc_id)""".stripMargin
-  }
 
   /** Exact verification clause over `cand` + `d`: intersection size and
     * both distinct-set sizes (the DuckDB mirror of [[verifiedPairs]],
@@ -1083,12 +1011,20 @@ object TextPipeline {
     * rounds of the identical per-round shape). Output is the cluster
     * census, singletons included: the canonicalization step a dedup
     * pipeline runs to pick one representative per duplicate group. */
-  def dupClusters(s: SparkSession, dir: String): DataFrame = {
+  def dupClusters(s: SparkSession, dir: String): DataFrame =
+    dupClusterCensus(s, dir, hashMinComponents(_, _, iters = 5))
+
+  /** The cluster census shared by the three component variants: strong
+    * near-dup pairs (agreement ≥ 6 of 8) → `components(nodes, pairs)`'s
+    * (doc_id, lbl) labels → (cluster_rep, n_docs, id_sum) per label,
+    * singletons included. */
+  private def dupClusterCensus(s: SparkSession, dir: String,
+      components: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val pairs = dedupMinhash(s, dir)
       .filter(col("n_match") >= 6)
       .select(col("doc_a"), col("doc_b"))
     val nodes = Tables.documents(s, dir).select(col("doc_id"))
-    hashMinComponents(nodes, pairs, iters = 5)
+    components(nodes, pairs)
       .groupBy(col("lbl"))
       .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"))
       .select(col("lbl").as("cluster_rep"), col("n_docs"), col("id_sum"))
@@ -1317,16 +1253,8 @@ object TextPipeline {
   /** [[dupClusters]] computed by star rewriting — census-identical to
     * the other two variants at any diameter, oracle = the exact
     * transitive closure (shared with [[dupClustersConverged]]). */
-  def dupClustersStar(s: SparkSession, dir: String): DataFrame = {
-    val pairs = dedupMinhash(s, dir)
-      .filter(col("n_match") >= 6)
-      .select(col("doc_a"), col("doc_b"))
-    val nodes = Tables.documents(s, dir).select(col("doc_id"))
-    starComponents(nodes, pairs)
-      .groupBy(col("lbl"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"))
-      .select(col("lbl").as("cluster_rep"), col("n_docs"), col("id_sum"))
-  }
+  def dupClustersStar(s: SparkSession, dir: String): DataFrame =
+    dupClusterCensus(s, dir, starComponents(_, _))
 
   /** [[dupClusters]] computed by the converging production variant.
     * Its oracle is NOT the 5-round unrolling (that would silently
@@ -1334,16 +1262,8 @@ object TextPipeline {
     * its minimum — exactly the case this variant exists for) but an
     * exact-at-any-diameter recursive transitive closure: min reachable
     * id per node. */
-  def dupClustersConverged(s: SparkSession, dir: String): DataFrame = {
-    val pairs = dedupMinhash(s, dir)
-      .filter(col("n_match") >= 6)
-      .select(col("doc_a"), col("doc_b"))
-    val nodes = Tables.documents(s, dir).select(col("doc_id"))
-    pointerDoublingComponents(nodes, pairs)
-      .groupBy(col("lbl"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("id_sum"))
-      .select(col("lbl").as("cluster_rep"), col("n_docs"), col("id_sum"))
-  }
+  def dupClustersConverged(s: SparkSession, dir: String): DataFrame =
+    dupClusterCensus(s, dir, pointerDoublingComponents(_, _))
 
   /** The 5-round hash-min label CTE chain shared by the cluster oracles
     * (l0 = every doc its own label, l5 = the settled labels).
@@ -1372,16 +1292,6 @@ object TextPipeline {
       |  CAST(SUM(doc_id) AS BIGINT) AS id_sum
       |FROM l5 GROUP BY lbl""".stripMargin
 
-  /** Keep-BEST near-dup canonicalization: the same dup clusters as
-    * q_dup_clusters (guarded MinHash pairs at agreement ≥ 6, hash-min
-    * labels), but each cluster's survivor is chosen by QUALITY — the
-    * hashed-feature classifier logit, ties by lowest doc_id — instead
-    * of lowest id. C4 keeps first; modern pipelines keep the best copy
-    * (a boilerplate dup often has a cleaner sibling). The census also
-    * counts survivors that DIFFER from the keep-first choice — the
-    * measurable value of the policy. Scale shape: one extra exchange
-    * over q_dup_clusters (the per-cluster argmax window on the label
-    * key); the logit is the scan-local classifier aggregate. */
   /** Row-level keep-best decisions over a canonical (doc_id, text)
     * frame: (doc_id, cluster, is_kept, logit) — shared by the
     * oracle-checked census query and `Corpus.dedupKeepBest` (a library
@@ -1401,6 +1311,16 @@ object TextPipeline {
         (col("rn") === 1).as("is_kept"), col("logit"))
   }
 
+  /** Keep-BEST near-dup canonicalization: the same dup clusters as
+    * q_dup_clusters (guarded MinHash pairs at agreement ≥ 6, hash-min
+    * labels), but each cluster's survivor is chosen by QUALITY — the
+    * hashed-feature classifier logit, ties by lowest doc_id — instead
+    * of lowest id. C4 keeps first; modern pipelines keep the best copy
+    * (a boilerplate dup often has a cleaner sibling). The census also
+    * counts survivors that DIFFER from the keep-first choice — the
+    * measurable value of the policy. Scale shape: one extra exchange
+    * over q_dup_clusters (the per-cluster argmax window on the label
+    * key); the logit is the scan-local classifier aggregate. */
   def dedupKeepBest(s: SparkSession, dir: String): DataFrame =
     keepBestRows(Tables.documents(s, dir), LshBucketCap, minAgreement = 6)
       .join(Tables.documents(s, dir).select(col("doc_id"), col("lang")),
@@ -1827,15 +1747,13 @@ object TextPipeline {
     val cs = carry.map(col)
     // referenced three times (key census + both paths)
     val wins = spanWindows(d, carry, oracleCap).trackedPersist()
-    val hotKeys = wins.groupBy(col("wkey")).agg(count(lit(1)).as("kcnt"))
-      .filter(col("kcnt") > cap)
-      .select(col("wkey"))
-    val cold = wins.join(hotKeys, Seq("wkey"), "left_anti")
+    val (cold, hot) = HotKeys.divert(wins,
+      HotKeys.census(wins, Seq("wkey"), cap), Seq("wkey"))
+    spanUnion(cold
       .withColumn("cnt", count(lit(1)).over(Window.partitionBy(col("wkey"))))
       .filter(col("cnt") >= 2)
       .drop("cnt")
-    val hot = wins.join(hotKeys, Seq("wkey"), "left_semi")
-    spanUnion(cold.unionByName(hot), cs)
+      .unionByName(hot), cs)
   }
 
   /** The diversion census for [[spanDupStatsGuarded]]: how many window
@@ -2254,13 +2172,8 @@ object TextPipeline {
   private[graft] def langCumsumGuardedOf(d0: DataFrame,
       cap: Long = PackHotCap): DataFrame = {
     val d = d0.trackedPersist()
-    val hotLangs = d.groupBy(col("lang")).agg(count(lit(1)).as("__gn"))
-      .filter(col("__gn") > cap)
-      .select(col("lang").as("__hl"))
-    val cold = d.join(broadcast(hotLangs), col("lang") <=> col("__hl"),
-      "left_anti")
-    val hot = d.join(broadcast(hotLangs), col("lang") <=> col("__hl"),
-      "left_semi")
+    val (cold, hot) = HotKeys.divert(d, HotKeys.census(d, Seq("lang"), cap),
+      Seq("lang"))
     langCumsumOf(cold).unionByName(langCumsumHotOf(hot))
   }
 
@@ -2447,7 +2360,7 @@ object TextPipeline {
     *
     * Scale shape: the eval side (signatures, bands, shingle sets) is
     * eval-suite-sized — it always broadcasts; corpus signatures are the
-    * scan-local [[minhashSig]]; the confirm join touches only candidate
+    * scan-local [[minhashBands]]; the confirm join touches only candidate
     * pairs. At 100 TB the shingle intersect runs on hash60 arrays
     * instead of strings — same plan, 8-byte elements. */
   def decontaminateFuzzy(s: SparkSession, dir: String): DataFrame =
@@ -2458,14 +2371,11 @@ object TextPipeline {
     * so the flag path is exercised on a planted corpus; sf0.1 carries a
     * real 0.99-Jaccard eval/corpus pair). */
   private[graft] def decontaminateFuzzyDocs(docs: DataFrame): DataFrame = {
-    val sig = minhashSig(docs).trackedPersist()
-    val bandKeys = array((0 until 4).map(i => struct(lit(i).as("band"),
-      col(s"m${2 * i}").as("x"), col(s"m${2 * i + 1}").as("y"))): _*)
-    val evalBands = sig.filter(col("doc_id") % 101 === 0)
-      .select(col("doc_id").as("e_id"), explode(bandKeys).as("bk"))
-    val corpBands = sig.filter(col("doc_id") % 101 =!= 0)
-      .select(col("doc_id"), explode(bandKeys).as("bk"))
-    val cands = corpBands.join(broadcast(evalBands), "bk")
+    val bands = minhashBands(docs).select(col("doc_id") +: BandKey.map(col): _*)
+    val evalBands = bands.filter(col("doc_id") % 101 === 0)
+      .withColumnRenamed("doc_id", "e_id")
+    val corpBands = bands.filter(col("doc_id") % 101 =!= 0)
+    val cands = corpBands.join(broadcast(evalBands), BandKey)
       .select(col("doc_id"), col("e_id")).distinct()
     val shing = docs.select(col("doc_id"), ws.as("w"))
       .filter(size(col("w")) >= 2)
@@ -2491,9 +2401,7 @@ object TextPipeline {
         sum(when(col("flag").isNotNull, col("doc_id"))).as("flagged_id_sum"))
   }
 
-  private val decontaminateFuzzySql = {
-    val mins = minhashAB.zipWithIndex.map { case ((a, b), i) =>
-      s"MIN(($a*h+$b) % 1000000007) AS m$i" }.mkString(", ")
+  private val decontaminateFuzzySql =
     s"""WITH ws0 AS (
       |  SELECT doc_id, lang, $wordsSqlDoc AS w FROM documents),
       |shs AS (
@@ -2502,7 +2410,7 @@ object TextPipeline {
       |h AS (
       |  SELECT doc_id, CAST('0x' || substring(md5(s.s),1,15) AS BIGINT) % 1000000007 AS h
       |  FROM (SELECT doc_id, unnest(sh) AS s FROM shs) s),
-      |sig AS (SELECT doc_id, $mins FROM h GROUP BY doc_id),
+      |sig AS (SELECT doc_id, $minsSql FROM h GROUP BY doc_id),
       |bands AS (
       |  SELECT doc_id, unnest([[0,m0,m1],[1,m2,m3],[2,m4,m5],[3,m6,m7]]) AS bk FROM sig),
       |eb AS (SELECT doc_id AS e_id, bk FROM bands WHERE doc_id % 101 = 0),
@@ -2520,7 +2428,6 @@ object TextPipeline {
       |FROM ws0 LEFT JOIN conf ON conf.doc_id = ws0.doc_id
       |WHERE ws0.doc_id % 101 != 0
       |GROUP BY lang""".stripMargin
-  }
 
   /** Leak-free train/val/test splitting — the assignment step every
     * training pipeline runs after dedup, with the leakage it exists to

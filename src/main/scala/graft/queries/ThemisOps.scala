@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, Row}
 import org.apache.spark.sql.functions._
 
 import graft.api.SortedGroups
-import graft.core.{GQuery, Tables}
+import graft.core.{GQuery, HotKeys, Tables}
 import graft.core.Caches.TrackedOps
 import Qdsl._
 
@@ -168,15 +168,8 @@ object ThemisOps {
   private[graft] def sessionizeGuardedOf(ev0: DataFrame,
       cap: Long = 1000000L, gapMs: Long = SessionGapMs): DataFrame = {
     val ev = ev0.trackedPersist()
-    // NULL-SAFE membership: a hot all-NULL key diverts like any other
-    val hotUsers = ev.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > cap)
-      .select(col("user_id").as("__hu"))
-    val cold = ev.join(broadcast(hotUsers), col("user_id") <=> col("__hu"),
-      "left_anti")
-    val hot = ev.join(broadcast(hotUsers), col("user_id") <=> col("__hu"),
-      "left_semi")
+    val (cold, hot) = HotKeys.divert(ev,
+      HotKeys.census(ev, Seq("user_id"), cap), Seq("user_id"))
     sessionizeWindowOf(cold, gapMs)
       .unionByName(sessionizeSegmentedOf(hot, gapMs))
   }

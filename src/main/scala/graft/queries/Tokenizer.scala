@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{GQuery, Tables}
+import graft.core.{GQuery, HotKeys, Tables}
 import Qdsl._
 
 /** Tokenizer-training operators over the `documents` corpus: BPE merge-pair
@@ -93,8 +93,8 @@ object Tokenizer {
       .distinct()
       .withColumn("blk", substring(col("w"), 1, 2))
     val blocks = vocab.groupBy(col("blk")).agg(count(lit(1)).as("bn"))
-    val hot = blocks.filter(col("bn") > FuzzyBlockCap).select(col("blk"))
-    val ok = vocab.join(hot, Seq("blk"), "left_anti")
+    val (ok, _) = HotKeys.divert(vocab,
+      HotKeys.census(vocab, Seq("blk"), FuzzyBlockCap), Seq("blk"))
     // the 3-arg threshold form runs the banded DP and early-exits past
     // distance 1 (returns -1), so comparison cost per pair is O(len)
     // instead of O(len²); at k=1 `levenshtein(a,b,1) = 1` is exactly

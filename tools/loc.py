@@ -17,6 +17,9 @@ SQL passing for simplification.
 Usage:
   python3 tools/loc.py FILE_OR_DIR ...          # per file, per definition
   python3 tools/loc.py --files FILE_OR_DIR ...  # per file only
+
+Any other option prints this text and exits 2; a path that does not
+exist prints one error line and exits 2.
 """
 import os
 import re
@@ -73,8 +76,12 @@ def row(label, counts):
 def main(argv):
     per_def = "--files" not in argv
     paths = [a for a in argv if a != "--files"]
-    if not paths:
+    if not paths or any(a.startswith("-") for a in paths):
         print(__doc__.strip(), file=sys.stderr)
+        return 2
+    missing = [a for a in paths if not os.path.exists(a)]
+    if missing:
+        print(f"loc.py: no such file or directory: {missing[0]}", file=sys.stderr)
         return 2
     print("".join(f"{c:>9}" for c in CLASSES) + "  file / definition")
     total = dict.fromkeys(CLASSES, 0)
