@@ -14,7 +14,12 @@ import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, Observation, Sp
   *    left to decide but still charges per-round overhead (at sf0.1:
   *    q_pagerank 4.27 → 1.80 s, q_sssp 2.30 → 1.03 s with it off). The
   *    caller's SQLConf is never written, and a probe's
-  *    `ObservationManager` lives and dies with the clone;
+  *    `ObservationManager` lives and dies with the clone. Clones share
+  *    the JVM's compiled classes: Spark's codegen cache is keyed by the
+  *    task's class loader, and with the artifact isolation
+  *    [[graft.functions.GraftExtensions]] turns off, a clone's tasks run
+  *    under the caller's loader, so a second call of a loop compiles
+  *    nothing;
   *  - rounds are checkpointed eagerly at the site's cadence, keeping each
   *    round's plan constant-size;
   *  - the `cached` invariants are unpersisted when the loop ends, normally

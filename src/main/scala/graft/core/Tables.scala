@@ -154,6 +154,13 @@ object Tables {
       }
     })
 
+  /** A TIMESTAMP(NANOS) file reads only under
+    * `spark.sql.legacy.parquet.nanosAsLong`, which the scan looks up in its
+    * session when it runs, so the legacy path sets it on `spark`; a native
+    * file leaves the session's conf as it was. */
+  private[graft] def readsNanos(spark: SparkSession, storage: TsStorage): Unit =
+    if (storage == TsNanosAsLong) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
   private[graft] def eventsTsDdl(storage: TsStorage): String = storage match {
     case TsNanosAsLong => "ts BIGINT"
     case TsNativeTimestamp(true) => "ts TIMESTAMP"
@@ -167,7 +174,7 @@ object Tables {
   def events(spark: SparkSession, dir: String): DataFrame = {
     val storage = probeTsStorage(s"$dir/events.parquet")
     val ddl = schemas("events").replace("ts BIGINT", eventsTsDdl(storage))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    readsNanos(spark, storage)
     val df = spark.read
       .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
       .parquet(s"$dir/events.parquet")

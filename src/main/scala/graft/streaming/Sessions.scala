@@ -104,8 +104,8 @@ object Sessions {
     * surface a uniform microsecond timestamp either way. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.Tables
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val storage = Tables.probeTsStorage(dir)
+    Tables.readsNanos(spark, storage)
     val tsDdl = Tables.eventsTsDdl(storage)
     val raw = spark.readStream
       .schema(s"event_id LONG, $tsDdl, user_id LONG, event_type STRING, value DOUBLE, props STRING")

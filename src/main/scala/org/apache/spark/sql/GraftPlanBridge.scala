@@ -1,11 +1,13 @@
 package org.apache.spark.sql
 
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The `private[sql]` doorways the engine needs: constructing a
   * DataFrame from a custom [[LogicalPlan]] (`Dataset.ofRows` is
-  * package-private) and cloning a session. Standard practice for Spark
-  * plan extensions that produce leaf nodes outside the SQL parser path.
+  * package-private), cloning a session and reaching the running
+  * context's live conf. Standard practice for Spark plan extensions that
+  * produce leaf nodes outside the SQL parser path.
   */
 object GraftPlanBridge {
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
@@ -19,4 +21,10 @@ object GraftPlanBridge {
     * SQLConf, functions and listeners; nothing set on it reaches `s`. */
   def cloneSession(s: SparkSession): SparkSession =
     s.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** The running SparkContext's own conf (not `getConf`'s copy): a key set
+    * on it before the first session's shared state exists is that
+    * session's default, static SQL confs included. None before any
+    * context starts. */
+  def activeContextConf: Option[SparkConf] = SparkContext.getActive.map(_.conf)
 }

@@ -21,6 +21,15 @@ class TablesTsSpec extends SparkSpec {
       Tables.TsNativeTimestamp(utcAdjusted = false))
   }
 
+  test("loading native-micros events leaves the session's conf as it was") {
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    Tables.events(s, "/root/testdata/sf0.01").count()
+    val after = s.conf.getAll
+    val written = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+    assert(written.isEmpty, s"Tables.events wrote the session's SQLConf: $written")
+  }
+
   test("probe falls back to legacy nanos for bare INT64 ts") {
     val dir = Files.createTempDirectory("events_nanos").toFile
     val path = s"${dir.getAbsolutePath}/events.parquet"
