@@ -24,7 +24,7 @@ class TablesTsSpec extends SparkSpec {
   test("loading native-micros events leaves the session's conf as it was") {
     val s = spark.newSession()
     val before = s.conf.getAll
-    Tables.events(s, "/root/testdata/sf0.01").count()
+    Tables.events(s, sfDir).count()
     val after = s.conf.getAll
     val written = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
     assert(written.isEmpty, s"Tables.events wrote the session's SQLConf: $written")
