@@ -1,23 +1,32 @@
 package graft
 
-/** Round-over-round gate for the index-quality telemetry Bench emits.
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.core.{Caches, Tables}
+import graft.queries.{Similarity, TextPipeline}
+
+/** Gate on the index-quality telemetry at sf0.1: recall, NDCG, IVF cost,
+  * MinHash calibration, the tuned LSH occupancy law and the tuned SimHash
+  * pair count.
   *
   * BENCH_r07 recorded recall@3 per ANN variant and the MinHash
   * calibration curve for the first time; this object turns those numbers
-  * from "visible" into "enforced": the current run's values must sit
-  * inside a tolerance band around the recorded r07 baseline or Bench
-  * exits nonzero. An IVF codebook or probe-count regression now FAILS the
-  * bench instead of silently shifting a telemetry field — the same stance
-  * the reference takes on partition quality, which BoundaryDecider
+  * from "visible" into "enforced": [[violations]] measures them on a
+  * corpus and every value must sit inside a tolerance band around its
+  * recorded baseline (`QualityGateSpec` runs it on sf0.1). An IVF
+  * codebook or probe-count regression FAILS the gate instead of silently
+  * shifting a telemetry field — the same stance the reference takes on
+  * partition quality, which BoundaryDecider
   * (`mapreduce/workers/boundarydecider/BoundaryDecider.cc:22-169`)
   * actively enforces rather than merely reports.
   *
-  * The baseline is tied to the driver's bench corpus (sf0.1): recall and
-  * the calibration posterior are corpus statistics, so Bench only applies
-  * the gate when it is pointed at that corpus. New telemetry keys (e.g. a
-  * new index variant) pass freely and become the next round's baseline;
-  * a DISAPPEARED baselined key is a violation — deleting an index is a
-  * regression too.
+  * The baseline is tied to the sf0.1 corpus: recall and the calibration
+  * posterior are corpus statistics, so the bands only hold there. New
+  * telemetry keys (e.g. a new index variant) pass freely and become the
+  * next round's baseline; a DISAPPEARED baselined key is a violation —
+  * deleting an index is a regression too.
   */
 object BenchGate {
 
@@ -92,7 +101,7 @@ object BenchGate {
   val occTunedHigh = 40.0
 
   /** The simBits(n) dial measured end-to-end at sf0.1: width 32 (the
-    * dial's test-scale end — 56k docs sits under the ~105k crossover)
+    * dial's test-scale end — 5,000 docs sit under the ~105k crossover)
     * and the exact Hamming-≤3 pair count at that width. Everything in
     * the pipeline is deterministic (md5-derived word hashes, integer
     * votes, exact bit_count), so the band is EXACT equality — any
@@ -143,8 +152,8 @@ object BenchGate {
       // absent-when-not-claimed passes freely, like every other
       // non-baselined telemetry family (the r11 regression hard-failed
       // every caller without the key, breaking the gate's own contract);
-      // Bench itself ALWAYS emits the key and additionally applies
-      // [[requireOccTuned]] so its own output cannot silently drop it
+      // [[violations]] ALWAYS measures the key and additionally applies
+      // [[requireOccTuned]] so its own run cannot silently drop it
       case None => Nil
       case Some((bits, mean)) if mean.isNaN ||
           mean <= occTunedLow || mean > occTunedHigh =>
@@ -154,7 +163,7 @@ object BenchGate {
     }
     val st = simTuned match {
       // absent-when-not-claimed passes freely (same contract as
-      // occTuned); Bench itself applies [[requireSimTuned]]
+      // occTuned); [[violations]] applies [[requireSimTuned]]
       case None => Nil
       case Some(v) if v != simTunedBaseline =>
         Seq(s"simhash_tuned (bits, n_pairs)=$v != banked " +
@@ -165,47 +174,72 @@ object BenchGate {
     r ++ c ++ ic ++ nd ++ ot ++ st
   }
 
-  /** Missing-when-expected check scoped to Bench's OWN output, the
+  /** Missing-when-expected check scoped to [[violations]]' OWN run, the
     * [[requireOccTuned]] twin for the SimHash width dial. */
   def requireSimTuned(simTuned: Option[(Long, Long)]): Seq[String] =
     simTuned match {
-      case None => Seq("simhash_tuned missing from Bench's own telemetry " +
+      case None => Seq("simhash_tuned missing from the gate's own telemetry " +
         s"(the simBits(n) dial must measure exactly $simTunedBaseline " +
         "at sf0.1)")
       case Some(_) => Nil
     }
 
-  /** Missing-when-expected check scoped to Bench's OWN output: Bench
-    * computes lsh_occupancy_tuned every run, so absence there means the
+  /** Missing-when-expected check scoped to [[violations]]' OWN run: it
+    * measures lsh_occupancy_tuned every time, so absence there means the
     * tuned-dial sweep silently vanished — a regression [[check]] must
     * not excuse for the producer even though it passes for arbitrary
     * telemetry consumers. */
   def requireOccTuned(occTuned: Option[(Long, Double)]): Seq[String] =
     occTuned match {
-      case None => Seq("lsh_occupancy_tuned missing from Bench's own " +
+      case None => Seq("lsh_occupancy_tuned missing from the gate's own " +
         s"telemetry (the lshBits(n) law must measure in ($occTunedLow, " +
         s"$occTunedHigh])")
       case Some(_) => Nil
     }
 
-  /** One violation per headline that threw: a failed query is a broken
+  /** One violation per query that threw: a failed query is a broken
     * query at every scale, so this check applies off sf0.1 too, where
     * the telemetry bands do not. */
   def requireNoFailures(failed: Seq[String]): Seq[String] =
     failed.map(q => s"headline $q failed")
 
-  /** JSON-safe number rendering: NaN/Infinity (e.g. a 0/0 recall from an
-    * empty truth set) become `null` instead of the bare literals JSON
-    * parsers reject. */
-  def jsonNum(v: Double): String =
-    if (v.isNaN || v.isInfinite) "null" else v.toString
-
-  /** Rounded variant for Bench's JSON line: full double reprs (e.g.
-    * 0.8666666666666667) bloated the one-line artifact past the
-    * driver's stdout capture buffer in r10. The gate always checks the
-    * unrounded in-memory values; only the rendering is truncated. */
-  def jsonNum(v: Double, dp: Int): String = {
-    val scale = math.pow(10, dp)
-    jsonNum(math.rint(v * scale) / scale)
+  /** The whole gate on the corpus at `dir`: measures every gated
+    * telemetry family, untimed, and returns the violations (empty =
+    * pass). Each query's tracked caches are released after it; a query
+    * that throws is named through [[requireNoFailures]], and its missing
+    * keys fail [[check]] as well. The corpus count the SimHash width dial
+    * needs is one column-pruned scan. */
+  def violations(spark: SparkSession, dir: String): Seq[String] = {
+    val failed = Seq.newBuilder[String]
+    def measure[A](name: String)(body: => A): Option[A] =
+      try Some(body)
+      catch { case NonFatal(e) => failed += s"$name (${e.getMessage})"; None }
+      finally Caches.release()
+    def pairs[K](df: DataFrame, value: Int): Map[K, Double] =
+      df.collect().map(r => r.getAs[K](0) -> r.getDouble(value)).toMap
+    val recall = measure("recallSummary")(
+      pairs[String](Similarity.recallSummary(spark, dir), 1))
+    val ndcg = measure("ndcgSummary")(
+      pairs[String](Similarity.ndcgSummary(spark, dir), 1))
+    val calib = measure("minhashCalibration")(
+      pairs[Long](TextPipeline.minhashCalibration(spark, dir), 4))
+    val occTuned = measure("lshOccupancyTuned") {
+      val r = Similarity.lshOccupancyTuned(spark, dir).head()
+      (r.getLong(0), r.getDouble(3))
+    }
+    val ivfCost = measure("ivfProbeCost")(
+      pairs[Long](Similarity.ivfProbeCost(spark, dir), 1))
+    val nDocs = measure("documents count")(
+      Tables.documents(spark, dir).select("doc_id").count())
+    val simTuned = nDocs.flatMap(n => measure("simhashTuned") {
+      val r = TextPipeline.simhashTuned(spark, dir, n).head()
+      (r.getLong(0), r.getLong(1))
+    })
+    requireNoFailures(failed.result()) ++
+      check(recall.getOrElse(Map.empty), calib.getOrElse(Map.empty),
+        ivfCost.getOrElse(Map.empty), ndcg.getOrElse(Map.empty), occTuned,
+        simTuned) ++
+      requireOccTuned(occTuned) ++
+      requireSimTuned(simTuned)
   }
 }

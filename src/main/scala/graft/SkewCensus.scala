@@ -81,7 +81,7 @@ object SkewCensus {
           max(col("c")).as("max_cell"),
           count(lit(1)).as("n_cells")).head()
 
-      // the one metrics consumer-visible line (the Bench convention)
+      // the one metrics consumer-visible line: one JSON object
       println(
         s"""{"metric":"skew_census","sf_dir":"$dir"""" +
           s""","span_hot":{"cap":${TextPipeline.SpanHotCap},"n_hot_keys":${span.getLong(0)},"n_hot_rows":${span.getLong(1)},"max_key_rows":${span.getLong(2)}}""" +

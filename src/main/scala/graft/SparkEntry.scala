@@ -130,10 +130,10 @@ object SparkEntry {
       graft.operators.RealCodec.imageDHashCensus _,
       Some(graft.operators.RealCodec.imageDHashOracle), headline = true)),
     // the crawl-vs-history serve shape on the perceptual fingerprint.
-    // headline: Bench's construction field splits the index build (the
+    // headline: perfbench's deferred_s splits the index build (the
     // one-time history decode inside the deferred stage) from the timed
     // serve leg, so "serve decode work ∝ batch" is a recorded number
-    // every round, not prose
+    // every run, not prose
     Seq(GQuery("q_image_dedup_serve",
       graft.operators.RealCodec.imageDedupServe _,
       Some(graft.operators.RealCodec.imageDedupServeOracle),
@@ -218,6 +218,6 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 
-  /** Names Bench times at sf0.1. */
+  /** Names perfbench times (each workload runs a subset). */
   def headlines: Seq[String] = registry.filter(_.headline).map(_.name)
 }

@@ -829,7 +829,7 @@ object Vectors {
     * `cells` lowest-id vectors and broadcast; assignment is a map-side
     * integer-L2 argmin; the probe join is an equi-join on cell id.
     * Recall climbs with nprobe (measured 0.58 → 0.75 → 0.87 at
-    * nprobe 1/2/4 of 8 at sf0.1, gated in Bench) while query cost grows
+    * nprobe 1/2/4 of 8 at sf0.1, gated by BenchGate) while query cost grows
     * ∝ nprobe/cells; at nprobe = cells the result is exactly
     * [[cosineTopK]] (CorpusApiSpec pins the identity). Output
     * (query_id, rank, neighbor_id, cos); vectors must be 64-dim. */

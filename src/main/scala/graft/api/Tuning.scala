@@ -18,8 +18,9 @@ object Tuning {
   /** Shuffle partition count for a stage expected to shuffle
     * `shuffleBytes`: ceil(bytes / targetPartitionBytes), floored at
     * one partition per available core (idle cores are pure waste) —
-    * the `spark.sql.shuffle.partitions` setting Bench fixes at 32 for
-    * local[32] and a 1000-executor run derives from its input census.
+    * the `spark.sql.shuffle.partitions` setting perfbench fixes at
+    * nproc for local[nproc] and a 1000-executor run derives from its
+    * input census.
     * AQE coalesces over-provisioned partitions at runtime; it cannot
     * invent parallelism that was never provisioned, so the floor is
     * the side to get right. */
@@ -118,8 +119,8 @@ object Tuning {
     * clique debt itself turns quadratic past ~10M docs. 64 is Manku's
     * production width. The 32-bit oracle rows (q_dedup_simhash /
     * q_simhash_pairs / q_simhash_calibration) deliberately pin the
-    * test-scale end for DuckDB bit-parity; the simhash_tuned Bench
-    * telemetry measures THIS formula end-to-end. */
+    * test-scale end for DuckDB bit-parity; the simhash_tuned gate
+    * telemetry ([[graft.BenchGate]]) measures THIS formula end-to-end. */
   def simBits(corpusRows: Long, targetCandidatesPerDoc: Long = 64L): Int = {
     require(corpusRows > 0 && targetCandidatesPerDoc > 0)
     if (20L * corpusRows <= (targetCandidatesPerDoc << 15)) 32 else 64

@@ -2,7 +2,9 @@ package graft.core
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Registry for persisted frames that must OUTLIVE their constructor.
   *
@@ -12,11 +14,12 @@ import org.apache.spark.sql.DataFrame
   * harness that ran the action knows when the plan is done. Iterative
   * operators that run their own actions keep using local try/finally
   * unpersist; everything else registers here and the harness drains the
-  * registry after each query's action ([[graft.Verify]] per query,
-  * [[graft.Bench]] after each query's timed passes). Library users
-  * embedding the facade in a long-lived session call [[release]] the same
-  * way — without it, repeated invocations accumulate cache-manager
-  * entries until the context cleaner catches up.
+  * registry after each query's action ([[graft.Verify]] and the
+  * perfbench harness per query, [[graft.BenchGate.violations]] per
+  * telemetry query). Library users embedding the facade in a long-lived
+  * session call [[release]] the same way — without it, repeated
+  * invocations accumulate cache-manager entries until the context
+  * cleaner catches up.
   *
   * `unpersist(blocking = false)` keeps release off the critical path; a
   * plan re-persisted before its async drop completes simply re-marks the
@@ -26,18 +29,20 @@ import org.apache.spark.sql.DataFrame
   * process-global, so [[release]] drains every tracked frame in the
   * JVM, including ones another thread or SparkSession is still
   * computing over (the result is a silent recompute, never a wrong
-  * answer — Spark re-evaluates the lineage).
+  * answer — Spark re-evaluates the lineage). A dropped loop checkpoint
+  * has no lineage to re-evaluate: a frame still reading it fails.
   * Embedders running concurrent queries in one JVM must serialize
   * query+release sequences on one thread, or scope their own
   * persist/unpersist instead of tracking here.
   */
 object Caches {
   private val live = new ConcurrentLinkedQueue[DataFrame]()
+  private val checkpoints = new ConcurrentLinkedQueue[RDD[_]]()
 
   /** `df.persist()`, registered for a later [[release]] sweep.
     *
     * Deduped by canonicalized plan: re-constructing the same query
-    * (Bench's second timed pass, a library caller rebuilding a plan)
+    * (a harness's second timed pass, a library caller rebuilding a plan)
     * re-tracks a frame whose plan Spark's cache manager would dedupe
     * anyway — calling persist() on it again only spams "Asked to cache
     * already cached data" warnings and, right after a [[release]],
@@ -72,13 +77,32 @@ object Caches {
     def trackedPersist(): DataFrame = tracked(df)
   }
 
-  /** Unpersist every tracked frame registered since the last drain. */
+  /** `df`, a local checkpoint, with the RDD it persisted registered for
+    * the next [[release]]. Spark frees a local checkpoint's blocks only
+    * once the context cleaner sees its RDD garbage-collected, so without
+    * this a [[Fixpoint]] loop's rounds outlived the query by however long
+    * the next GC took. */
+  def trackedCheckpoint(df: DataFrame): DataFrame = {
+    df.queryExecution.logical.foreach {
+      case l: LogicalRDD => checkpoints.add(l.rdd)
+      case _ =>
+    }
+    df
+  }
+
+  /** Unpersist every tracked frame and checkpoint registered since the
+    * last drain. */
   def release(): Unit = {
-    var d = live.poll()
-    while (d != null) {
-      try d.unpersist(blocking = false)
+    drain(live)(_.unpersist(blocking = false))
+    drain(checkpoints)(_.unpersist(blocking = false))
+  }
+
+  private def drain[A](q: ConcurrentLinkedQueue[A])(drop: A => Unit): Unit = {
+    var x = q.poll()
+    while (x != null) {
+      try drop(x)
       catch { case _: Throwable => () } // a stopped session has nothing to drop
-      d = live.poll()
+      x = q.poll()
     }
   }
 }

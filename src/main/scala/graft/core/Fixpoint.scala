@@ -21,7 +21,9 @@ import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, Observation, Sp
   *    under the caller's loader, so a second call of a loop compiles
   *    nothing;
   *  - rounds are checkpointed eagerly at the site's cadence, keeping each
-  *    round's plan constant-size;
+  *    round's plan constant-size; the checkpoints are registered with
+  *    [[Caches]], so the harness's [[Caches.release]] after the query's
+  *    action drops them;
   *  - the `cached` invariants are unpersisted when the loop ends, normally
   *    or not;
   *  - the result comes back bound to the caller's session, so the plans
@@ -48,7 +50,7 @@ object Fixpoint {
     /** `df` materialized now, lineage cut: a seed, or a frame the result
       * reads besides the loop state. */
     def checkpoint(df: DataFrame): DataFrame =
-      own(df, "checkpoint").localCheckpoint(eager = true)
+      cut(own(df, "checkpoint"))
 
     /** `rounds` applications of `step` to `seed`, checkpointing the state
       * after every `every`-th and the last round (lazy in between).
@@ -58,7 +60,7 @@ object Fixpoint {
       require(every >= 1, s"checkpoint cadence $every")
       (1 to rounds).scanLeft(seed) { (state, r) =>
         val next = own(step(state, r), s"round $r")
-        if (r % every == 0 || r == rounds) next.localCheckpoint(eager = true)
+        if (r % every == 0 || r == rounds) cut(next)
         else next
       }
     }
@@ -74,12 +76,15 @@ object Fixpoint {
       @tailrec def go(state: DataFrame, r: Int, last: Option[Map[String, Any]]): DataFrame = {
         require(r <= maxRounds, s"no fixpoint in $maxRounds rounds — raise the budget")
         val obs = Observation(s"fixpoint_round_$r")
-        val next = own(step(state), s"round $r")
-          .observe(obs, probe.head, probe.tail: _*).localCheckpoint(eager = true)
+        val next = cut(own(step(state), s"round $r")
+          .observe(obs, probe.head, probe.tail: _*))
         if (last.contains(obs.get)) next else go(next, r + 1, Some(obs.get))
       }
       go(seed, 1, None)
     }
+
+    private def cut(df: DataFrame): DataFrame =
+      Caches.trackedCheckpoint(df.localCheckpoint(eager = true))
 
     private def own(df: DataFrame, what: String): DataFrame = {
       require(df.sparkSession eq session, s"fixpoint $what: the frame " +

@@ -20,7 +20,7 @@ final case class GQuery(
     name: String,
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String] = None,
-    // headline queries are the ones Bench times at sf0.1
+    // headline queries are the ones perfbench times
     headline: Boolean = false)
 
 object GQuery {

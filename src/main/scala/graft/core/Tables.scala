@@ -59,8 +59,8 @@ object Tables {
     * driver-side file listing through the Hadoop FS API (works on any
     * scheme, no Spark job — construction stays job-free), cached per
     * path: the testdata tables are immutable for a process lifetime and
-    * Bench re-constructs each query 3×. A missing path sizes as 0 (the
-    * scan itself will fail loudly later if it matters). */
+    * a benchmark re-constructs each query every pass. A missing path
+    * sizes as 0 (the scan itself will fail loudly later if it matters). */
   def tableBytes(spark: SparkSession, dir: String, name: String): Long = {
     val p = s"$dir/$name.parquet"
     tableBytesCache.computeIfAbsent(p, { path =>

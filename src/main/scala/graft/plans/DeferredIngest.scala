@@ -46,9 +46,9 @@ object DeferredIngest {
 
   /** Seconds spent inside deferred bodies (the WRITE leg of a
     * write-then-read query) since the last [[resetBodyNanos]] —
-    * Bench reads this per query so the round-trip headlines report
-    * their construction cost as an explicit `construction` field next
-    * to the timed read leg, instead of a note in BENCH_LOCAL.md.
+    * perfbench reads this per query so the round-trip headlines report
+    * their write leg as an explicit `deferred_s` next to the timed
+    * total, instead of a note in BENCH_LOCAL.md.
     * Driver-side only (bodies run on the driver), so a plain atomic. */
   private val bodyNanos = new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] def resetBodyNanos(): Unit = bodyNanos.set(0L)

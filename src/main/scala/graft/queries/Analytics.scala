@@ -667,8 +667,8 @@ object Analytics {
 
   /** [[mergeUpsert]] at the BUCKETED base layout — the 100 TB MERGE
     * story as an oracle row. The base table is written `bucketBy(8,
-    * doc_id)` once (inside the deferred stage, so Bench bills the
-    * layout as `construction`), and the CDC apply's full-outer join
+    * doc_id)` once (inside the deferred stage, so perfbench bills the
+    * layout as `deferred_s`), and the CDC apply's full-outer join
     * then exchanges ONLY the delta side: the base's join shuffle is
     * deleted by the layout, which is the entire economics of MERGE at
     * scale (the delta is GBs, the base is the 100 TB). Output and

@@ -364,7 +364,7 @@ object Ingest {
     * biggest shuffle a 100 TB warehouse pays: lineitem and orders are
     * written `bucketBy(8, orderkey)` + `sortBy(orderkey)` as external
     * catalog tables (inside the deferred sink→source stage, so the layout
-    * job runs when the query does and Bench bills it as `construction`),
+    * job runs when the query does and perfbench bills it as `deferred_s`),
     * then joined WITHOUT any exchange — both scans come up
     * hash-partitioned on the join key straight from the file layout,
     * leaving only shuffle-free partition-local sorts.

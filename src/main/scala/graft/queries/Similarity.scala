@@ -956,7 +956,7 @@ object Similarity {
     * `nprobe` is THE production IVF dial (FAISS's `nprobe`): candidate
     * volume — and so query cost — grows ∝ nprobe/k while recall climbs
     * toward exact; at nprobe = k the search degenerates to brute force
-    * (SimilaritySpec pins that identity). Bench emits recall at
+    * (SimilaritySpec pins that identity). BenchGate gates recall at
     * nprobe ∈ {1,2,4} plus the candidate-count cost curve so a probe
     * regression moves a gated number, the same stance as the LSH bits
     * axis. */
@@ -1524,9 +1524,9 @@ object Similarity {
     * brute-force truth, one row per variant — the bench telemetry dial
     * that catches an index-QUALITY regression (probe count, codebook,
     * hash width) which wall-clock timing alone would wave through.
-    * [[graft.Bench]] runs this after the timed sweep and emits the
-    * values in its JSON line; the per-query distribution lives in the
-    * oracle-checked q_ann_recall. */
+    * [[graft.BenchGate.violations]] runs this and gates each variant;
+    * the per-query distribution lives in the oracle-checked
+    * q_ann_recall. */
   def recallSummary(s: SparkSession, dir: String): DataFrame = {
     val truth = knnBrute(s, dir).filter(col("rank") <= 3)
       .select(col("q_id"), col("neighbor_id")).trackedPersist()
@@ -1587,7 +1587,7 @@ object Similarity {
   }
 
   /** Occupancy census at the TUNED bit width (`Tuning.lshBits(n)`),
-    * Bench-only telemetry (the oracle-checked q_lsh_occupancy pins the
+    * gate-only telemetry (the oracle-checked q_lsh_occupancy pins the
     * two static widths). The dial law is scale-INVARIANT: bits =
     * ⌈log2⌈n/32⌉⌉ puts raw load n/2^bits in (16, 32], so the measured
     * mean occupancy must land in that band (small headroom for empty

@@ -579,7 +579,7 @@ object TextPipeline {
     * fingerprint width — the 20-combo candidate join against the
     * width's block tables, then exact Hamming ≤ 3 on the XOR. 32 is the
     * oracle-pinned test width; 64 is the [[graft.api.Tuning.simBits]]
-    * production width the simhash_tuned Bench telemetry measures. */
+    * production width the simhash_tuned gate telemetry measures. */
   private[graft] def simhashPairsDocs(docs: DataFrame,
       width: Int): DataFrame = {
     val (offs, mods) =
@@ -601,14 +601,14 @@ object TextPipeline {
   /** The width dial measured end-to-end (the `ann_lsh_tuned` pattern):
     * fingerprint width from [[graft.api.Tuning.simBits]] at the corpus'
     * row count, then the full candidate-join + exact-Hamming pair
-    * pipeline at that width. Emits ONE row (bits, n_pairs) — gated in
-    * Bench as the simhash_tuned key. At sf0.1 simBits lands on 32, so
+    * pipeline at that width. Emits ONE row (bits, n_pairs) — gated by
+    * [[graft.BenchGate]] as the simhash_tuned key. At sf0.1 simBits lands on 32, so
     * n_pairs is exactly q_simhash_pairs' row count (the band is exact:
     * everything is deterministic); at the 100× drive the dial crosses
     * to 64 and the candidate volume drop is the recorded measurement.
     *
-    * `nDocs` arrives from the caller (Bench hoists ONE shared
-    * column-pruned count it also emits as telemetry) rather than a
+    * `nDocs` arrives from the caller ([[graft.BenchGate.violations]]
+    * hoists ONE shared column-pruned count) rather than a
     * per-call `docs.count()` action here — the width picks between two
     * PLAN SHAPES (32- vs 64-bit block tables), so unlike
     * sqrtNCenters' ⌈√n⌉ count it cannot fold into the plan as a

@@ -94,7 +94,7 @@ class BenchGateSpec extends AnyFunSuite {
   test("absent occupancy passes check() but fails requireOccTuned") {
     // check() serves arbitrary telemetry consumers: a caller that never
     // claimed the key is not in violation (the r11 regression broke
-    // this). Bench, which PRODUCES the key, layers requireOccTuned on
+    // this). violations(), which PRODUCES the key, layers requireOccTuned on
     // top so its own output cannot silently drop the law.
     assert(BenchGate.check(goodRecall, goodCalib, goodCost, goodNdcg,
       None).isEmpty)
@@ -117,7 +117,7 @@ class BenchGateSpec extends AnyFunSuite {
       None, Some(BenchGate.simTunedBaseline)).isEmpty)
     assert(BenchGate.check(goodRecall, goodCalib, goodCost, goodNdcg,
       None, None).isEmpty)
-    // Bench, which PRODUCES the key, must not silently drop it
+    // violations(), which PRODUCES the key, must not silently drop it
     val miss = BenchGate.requireSimTuned(None)
     assert(miss.exists(_.contains("simhash_tuned missing")))
     assert(BenchGate.requireSimTuned(Some(BenchGate.simTunedBaseline)).isEmpty)
@@ -127,12 +127,5 @@ class BenchGateSpec extends AnyFunSuite {
     assert(BenchGate.requireNoFailures(Nil).isEmpty)
     val v = BenchGate.requireNoFailures(Seq("q_pagerank"))
     assert(v == Seq("headline q_pagerank failed"))
-  }
-
-  test("jsonNum renders NaN/Infinity as null, numbers as themselves") {
-    assert(BenchGate.jsonNum(Double.NaN) == "null")
-    assert(BenchGate.jsonNum(Double.PositiveInfinity) == "null")
-    assert(BenchGate.jsonNum(Double.NegativeInfinity) == "null")
-    assert(BenchGate.jsonNum(0.75) == "0.75")
   }
 }

@@ -101,4 +101,18 @@ class FixpointSpec extends SparkSpec {
     }
     assert(steps == 1 && e.getMessage.contains("round 1"), e.getMessage)
   }
+
+  test("Caches.release() drops the checkpoints of a loop query's rounds") {
+    // q_dup_clusters_star runs two checkpoints and a converge loop,
+    // q_pagerank fixed rounds; each left its checkpoint RDDs persisted
+    // until a GC let the context cleaner see them
+    val sc = spark.sparkContext
+    Seq("q_dup_clusters_star", "q_pagerank").foreach { q =>
+      val before = sc.getPersistentRDDs.keySet
+      SparkEntry.queries(q)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      graft.core.Caches.release()
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$q left persistent RDDs ${left.toSeq.sorted}")
+    }
+  }
 }

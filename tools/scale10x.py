@@ -23,7 +23,9 @@ Usage:
 Then drive it like any other SF directory:
   sbt "runMain graft.Verify /tmp/sf1x /tmp/v10x"
   python3 tools/check.py /tmp/sf1x /tmp/v10x          # correctness at 10x
-  SPARK_GRAFT_SF_DIR=/tmp/sf1x sbt "runMain graft.Bench"  # perf at 10x
+
+perfbench/run.py builds its `curate_scaled` corpus with this tool
+(perfbench/data/sf0.01, 2 replicas) and times the headlines on it.
 
 Caveats (documented in BENCH_LOCAL.md): a replica corpus is not a
 bigger world — vocabulary grows linearly (real corpora grow sublinearly)
