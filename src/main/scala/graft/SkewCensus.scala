@@ -89,35 +89,6 @@ object SkewCensus {
           s""","pack_hot":{"cap":${TextPipeline.PackHotCap},"n_hot_langs":${lang.getLong(0)},"max_lang":${lang.getLong(1)}}""" +
           s""","group_hot":{"cap":${Analytics.GroupHotCap},"n_hot_groups":${grp.getLong(0)},"max_group":${grp.getLong(1)},"max_user":${usr.getLong(0)}}""" +
           s""","sem_hot":{"cap":${graft.queries.Similarity.SemCellCap},"n_hot_cells":${sem.getLong(0)},"max_cell":${sem.getLong(1)},"n_cells":${sem.getLong(2)}}}""")
-
-      // optional layer-attribution profile of the guarded SemDeDup
-      // decomposition (SPARK_SEM_PROFILE=1): times the all-hot FORCED
-      // variant's layers separately — pair enumeration + cosine filter
-      // pre-distinct vs the final distinct — next to the production-cap
-      // run, so a drive can say WHICH layer owns the guarded-vs-plain
-      // gap (r13 measured 58.5 vs 32.6 s at 100× and could not).
-      // The later pair legs ride the warm tracked-persist deliberately
-      // (they isolate pair-join machinery); the FIRST leg must not —
-      // the census above already materialized semAssignedOf's persisted
-      // plan, so without a cache release it would time a cache scan and
-      // report the kernel+Lloyd assignment as free.
-      if (sys.env.get("SPARK_SEM_PROFILE").contains("1")) {
-        val S = graft.queries.Similarity
-        def time(label: String)(f: => Long): Unit = {
-          val t0 = System.nanoTime()
-          val rows = f
-          println(f"[semprofile] $label rows=$rows ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        }
-        graft.core.Caches.release()
-        val assigned = S.semAssignedOf(spark, dir)
-        time("assigned (kernel argmin ×2 + Lloyd, cold)")(assigned.count())
-        time("forced(20/8) pairs pre-distinct")(
-          S.semDroppedRaw(assigned, 0.3, 20L, 8L).count())
-        time("forced(20/8) dropped (with distinct)")(
-          S.semDroppedOf(assigned, 0.3, 20L, 8L).count())
-        time("production(2048/1024) dropped")(
-          S.semDroppedOf(assigned, 0.3).count())
-      }
     } finally spark.stop()
   }
 }

@@ -751,7 +751,10 @@ object Vectors {
     * cosine ≥ `tau` as dropped. Returns one row per vector:
     * (id, cell, is_dropped) — filter `!is_dropped` for the survivors.
     * Cross-cell pairs are never materialized (the SemDeDup scaling
-    * contract: cells grow ∝ √n so pair volume stays O(n^1.5)).
+    * contract: cells grow ∝ √n so pair volume stays O(n^1.5)), and the
+    * pair scan is q_semdedup's ([[graft.queries.Similarity.semDroppedOf]]):
+    * a cell over `SemCellCap` members is block-decomposed, so one giant
+    * near-dup clique cannot serialize into a single task.
     *
     * By DEFAULT (`k = 0`) the quantizer is TRAINED, the q_semdedup
     * contract: ⌈√n⌉ expected seed cells are drawn by an in-plan hash
@@ -780,20 +783,12 @@ object Vectors {
         .select(col("vid").as("cid"), col("v").as("cv"))
       S.lloydCenters(base, c0)
     }
-    // the shared fused-kernel argmin: no n×k distance frame
-    val assigned = S.nearestAssign(base, centers, "cell").trackedPersist()
-    val cos = graft.functions.GraftDot(col("av"), col("bv")).cast("double") /
-      sqrt(col("an2").cast("double")) / sqrt(col("bn2").cast("double"))
-    val dropped = assigned.select(col("cell"), col("vid").as("avid"),
-        col("v").as("av"), col("n2").as("an2"))
-      .join(assigned.select(col("cell"), col("vid").as("bvid"),
-        col("v").as("bv"), col("n2").as("bn2")), "cell")
-      .filter(col("avid") < col("bvid") && cos >= tau)
-      .select(col("bvid").as("vid")).distinct()
-      .withColumn("is_dropped", lit(true))
-    assigned.join(dropped, Seq("vid"), "left")
-      .select(col("vid").as(id), col("cell"),
-        coalesce(col("is_dropped"), lit(false)).as("is_dropped"))
+    // semDroppedOf's rows carry the id as vec_id
+    val assigned = S.nearestAssign(base, centers, "cell")
+      .withColumnRenamed("vid", "vec_id").trackedPersist()
+    assigned.join(S.semDroppedOf(assigned, tau), Seq("vec_id"), "left")
+      .select(col("vec_id").as(id), col("cell"),
+        col("is_dropped").isNotNull.as("is_dropped"))
   }
 
   /** LSH top-k similarity search over arbitrary (id, Array[Float])

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Caches, Fixpoint, GQuery, LoopWidth, Tables}
-import graft.core.Caches.TrackedOps
+import graft.core.{Fixpoint, GQuery, LoopWidth, Tables}
 
 /** Iterative dataflows — the reference's chained-job pattern
   * (`job_spec_generators/pagerank.py:16-39`, `utils.py:71-79
@@ -286,45 +285,13 @@ object Iterative {
   }
 
   /** Two Lloyd iterations of k-means (k = 10, centers seeded from the
-    * first 10 vectors), in the exploded-dimension relational form:
-    * points live as (vec_id, dim, value) rows, centroid update is a
-    * (cid, dim) hash aggregation with integer mean (sum DIV n), distance
-    * is a (vec_id, cid) aggregation. All shuffles are hash-partitioned
-    * aggregations/joins — nothing is collected to the driver, and each
-    * iteration's centroid table (k×64 rows) broadcasts in the reassign
-    * join. Exact integer math throughout. */
-  def kmeansIter2(s: SparkSession, dir: String): DataFrame = {
-    // lazily cached: the exploded point table feeds both assignment
-    // passes and the recenter (3 full references — uncached, each would
-    // re-scan and re-explode the embeddings)
-    val pts = Tables.embeddings(s, dir)
-      .select(col("vec_id"),
-        posexplode(transform(col("embedding"),
-          x => floor(x.cast("double") * 1000000).cast("long"))))
-      .select(col("vec_id"), (col("pos") + 1).as("dim"), col("col").as("x"))
-      .trackedPersist()
-    val c0 = pts.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("cid"), col("dim"), col("x").as("cx"))
-
-    // argmin via struct-MIN over (dist, cid) — one hash aggregation,
-    // identical tie-break to the row_number window it replaces (and to
-    // the oracle's MIN({'d','c'})) with no per-vid sort of the n×k frame
-    def assign(centers: DataFrame): DataFrame =
-      pts.join(broadcast(centers), "dim")
-        .groupBy(col("vec_id"), col("cid"))
-        .agg(sum((col("x") - col("cx")) * (col("x") - col("cx"))).as("dist"))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("dist"), col("cid"))).as("m"))
-        .select(col("vec_id"), col("m").getField("cid").as("cid"))
-    def recenter(asg: DataFrame): DataFrame =
-      pts.join(asg, "vec_id")
-        .groupBy(col("cid"), col("dim"))
-        .agg(expr("SUM(x) DIV COUNT(*)").as("cx"))
-
-    val a2 = assign(recenter(assign(c0)))
-    a2.groupBy(col("cid"))
-      .agg(count(lit(1)).as("n_points"), sum(col("vec_id")).as("sum_vec_id"))
-  }
+    * first 10 vectors): assign, one integer-exact centroid update (sum
+    * DIV n per dimension), reassign — both assignments on the fused
+    * nearest-cell kernel, so no pass materializes a point×center frame.
+    * The trained centers are [[Similarity.annIvfTrained]]'s codebook;
+    * the body is [[Similarity.kmeansCensus]] with one Lloyd round. */
+  def kmeansIter2(s: SparkSession, dir: String): DataFrame =
+    Similarity.kmeansCensus(s, dir, rounds = 1)
 
   // list-comprehension distances + MATERIALIZED CTEs (the q_semdedup r12
   // pattern): the per-dimension unnest join builds n×64×k intermediate

@@ -79,17 +79,22 @@ object Similarity {
     * at the r13 100× drive). Value-identical to
     * `Window.orderBy(dist, cid)` rn = 1 — VectorKernelSpec pins the
     * parity including engineered distance ties. Appends `outCol` (the
-    * winning cid) to `points`' columns; `points` must carry the vector
-    * as `v`. An EMPTY center table fails loudly inside the kernel when
-    * `points` is non-empty (the window form silently dropped every row);
-    * an empty `points` side short-circuits to zero rows as before. */
+    * winning cid) to `points`' columns; `points` carries the vector as
+    * `vec`. With `keys` (PQ's subspace `m`) the centers fold to one
+    * sorted array PER KEY, broadcast-joined on the keys, so each point
+    * meets only its own key's codebook. An EMPTY center table fails
+    * loudly inside the kernel when `points` is non-empty (the window
+    * form silently dropped every row); an empty `points` side
+    * short-circuits to zero rows as before. */
   private[graft] def nearestAssign(points: DataFrame, centers: DataFrame,
-      outCol: String): DataFrame = {
-    val carr = centers.agg(sort_array(collect_list(
-      struct(col("cid"), col("cv")))).as("cs"))
-    points.crossJoin(broadcast(carr))
+      outCol: String, vec: String = "v",
+      keys: Seq[String] = Nil): DataFrame = {
+    val carr = centers.groupBy(keys.map(col): _*).agg(sort_array(
+      collect_list(struct(col("cid"), col("cv")))).as("cs"))
+    (if (keys.isEmpty) points.crossJoin(broadcast(carr))
+     else points.join(broadcast(carr), keys))
       .withColumn(outCol,
-        graft.functions.GraftNearestCell(col("v"), col("cs")))
+        graft.functions.GraftNearestCell(col(vec), col("cs")))
       .drop("cs")
   }
 
@@ -314,8 +319,9 @@ object Similarity {
     def signed(df: DataFrame) =
       lshSigned(df.select(col("vid"), col("v"), col("n2")), bits, tables)
     val sig = signed(base).trackedPersist()
-    val hot = HotKeys.census(sig, Seq("t", "bucket"), cap)
-    def guarded(df: DataFrame) = df.join(hot, Seq("t", "bucket"), "left_anti")
+    val bucketKey = Seq("t", "bucket")
+    val hot = HotKeys.census(sig, bucketKey, cap)
+    def guarded(df: DataFrame) = HotKeys.divert(df, hot, bucketKey)._1
     val flips = lit(0L) +:
       (if (hamming >= 1) (0 until bits).map(b => lit(1L << b)) else Nil)
     val probes = guarded(signed(queries))
@@ -497,8 +503,8 @@ object Similarity {
     * end to end, so the oracle replays encode+LUT+rank bit-for-bit.
     *
     * Scale shape: the codebook is PQ_M×PQ_K subvectors — broadcast at any
-    * corpus size; encoding is scan-local against it (one shuffle to the
-    * per-(vector, subspace) argmin, amortized into the index build);
+    * corpus size; encoding is scan-local against it (the fused
+    * per-subspace argmin of [[nearestAssign]], no shuffle);
     * the LUT is (queries × PQ_M × PQ_K) rows — metadata-sized, broadcast;
     * the ADC sum is a map-side-partial agg of 8 rows per (query,
     * candidate). At 100 TB the serving scan reads 4-byte codes, not
@@ -551,9 +557,9 @@ object Similarity {
   }
 
   private def asCodebook(sv: DataFrame): DataFrame =
-    sv.select(col("m").as("cm"), col("vid").as("cid"), col("vm").as("cv"))
+    sv.select(col("m"), col("vid").as("cid"), col("vm").as("cv"))
 
-  /** The test corpus' seed codebook (cm, cid, cv): the subvectors of its
+  /** The test corpus' seed codebook (m, cid, cv): the subvectors of its
     * [[PQ_K]] lowest (dense) ids. */
   private def pqPivots(sv: DataFrame): DataFrame =
     asCodebook(sv.filter(col("vid") < PQ_K))
@@ -564,44 +570,34 @@ object Similarity {
     sv => asCodebook(sv.join(broadcast(base.orderBy(col("vid")).limit(n)
       .select(col("vid").as("pivot"))), col("vid") === col("pivot")))
 
-  /** Slice-L2² on the fused native kernel — value-identical to the
-    * aggregate(zip_with) composition (VectorKernelSpec parity), and the
-    * difference matters here: code assignment evaluates this on
-    * n·M·K rows (the 100× drive caught the interpreted composition
-    * burning ~10 min/pass at 205k vectors where the codegen'd kernel is
-    * seconds — ZipWith is CodegenFallback, and it also forced the
-    * enclosing aggregation onto the SortAggregate path). */
-  private def pqD2 = l2s(col("vm"), col("cv"))
-
-  /** Nearest-centroid codes (…, m, code) of the subvector rows `sv`
-    * against codebook `cb` — the compressed index. The argmin is an
-    * aggregated struct-MIN (partial-aggregable, ties on cid), so no
-    * (vector, subspace) row sorts its K distances. */
-  private def pqEncode(sv: DataFrame, cb: DataFrame): DataFrame = {
-    val keys = sv.columns.filter(_ != "vm").map(col)
-    sv.join(broadcast(cb), col("m") === col("cm"))
-      .groupBy(keys: _*)
-      .agg(min(struct(pqD2.as("dist"), col("cid"))).as("best"))
-      .select(keys :+ col("best.cid").as("code"): _*)
-  }
+  /** Nearest-centroid codes (…, m, vm, code) of the subvector rows `sv`
+    * against codebook `cb` — the compressed index. The argmin is
+    * [[nearestAssign]] keyed on the subspace: each subspace's codebook
+    * folds to one sorted array, so a (vector, subspace) row runs K fused
+    * distances in place (ties on cid) with no n·M·K row frame and no
+    * shuffle. The subvector `vm` stays on the row for the Lloyd update. */
+  private def pqEncode(sv: DataFrame, cb: DataFrame): DataFrame =
+    nearestAssign(sv, cb, "code", vec = "vm", keys = Seq("m"))
 
   /** (vid, m, code) nibble codes of the test corpus under the pivot
     * codebook — the index [[annPqServed]] persists (spec surface). */
   private[graft] def pqCodes(s: SparkSession, dir: String): DataFrame = {
     val sv = pqSub(corpus(s, dir).select(col("vid"), col("v")))
-    pqEncode(sv, pqPivots(sv))
+    pqEncode(sv, pqPivots(sv)).select(col("vid"), col("m"), col("code"))
   }
 
   /** ADC candidates (q_id, neighbor_id, adc): the LUT rows (…, m, code,
     * lutd) of every query subvector row `qsv` against codebook `cb`
     * broadcast into the code rows on every column the two share (m and
     * code, plus cell for IVF-PQ), and each candidate's M looked-up
-    * distances summed. */
+    * distances summed. LUT distances are slice-L2² on the fused kernel
+    * (ZipWith is CodegenFallback). */
   private def pqAdc(codes: DataFrame, qsv: DataFrame, cb: DataFrame,
       excludeSelf: Boolean): DataFrame = {
     val keys = qsv.columns.filter(_ != "vm").map(col)
-    val lut = qsv.join(broadcast(cb), col("m") === col("cm"))
-      .select(keys :+ col("cid").as("code") :+ pqD2.as("lutd"): _*)
+    val lut = qsv.join(broadcast(cb), "m")
+      .select(keys :+ col("cid").as("code") :+
+        l2s(col("vm"), col("cv")).as("lutd"): _*)
     codes.join(broadcast(lut), codes.columns.filter(lut.columns.contains).toSeq)
       .groupBy(col("q_id"), col("vid"))
       .agg(sum(col("lutd")).as("adc"))
@@ -646,9 +642,8 @@ object Similarity {
       excludeSelf: Boolean = true): DataFrame = {
     val sv = Caches.tracked(pqSub(base.select(col("vid"), col("v"))))
     val cb = (0 until rounds).foldLeft(seed(sv)) { (c, _) =>
-      Caches.tracked(lloydStep(sv.join(pqEncode(sv, c), Seq("vid", "m")),
-        "vm", "m", "code")
-        .select(col("m").as("cm"), col("code").as("cid"), col("cv")))
+      Caches.tracked(lloydStep(pqEncode(sv, c), "vm", "m", "code")
+        .withColumnRenamed("code", "cid"))
     }
     pqRank(pqEncode(sv, cb), cb, base, queries, k, rerank, excludeSelf)
   }
@@ -1331,10 +1326,23 @@ object Similarity {
   /** KMeans assignment step (`KMeansMapFunction.cc:10-71`): nearest of k=10
     * broadcast centers (the first 10 vectors) by exact integer squared-L2;
     * reports per-center population and an id checksum. */
-  def kmeansAssign(s: SparkSession, dir: String): DataFrame = {
-    val base = corpus(s, dir)
-    nearestAssign(base.select(col("vid"), col("v")), firstCenters(base, 10),
-        "cid")
+  def kmeansAssign(s: SparkSession, dir: String): DataFrame =
+    kmeansCensus(s, dir, rounds = 0)
+
+  /** The (cid, n_points, sum_vec_id) census of k-means on the test
+    * corpus: k = 10 centers seeded from the first 10 vectors, `rounds`
+    * integer-exact Lloyd updates ([[lloydCenters]]), then the final
+    * assignment on the fused kernel — the map function plus centroid
+    * reduce of `KMeansMapFunction.cc`. One round is the codebook
+    * [[annIvfTrained]] serves from; q_kmeans_iter2 reports it. */
+  private[queries] def kmeansCensus(s: SparkSession, dir: String,
+      rounds: Int): DataFrame = {
+    // the vector table anchors the seed filter, every assignment pass
+    // and the Lloyd update — cache it once for the whole pipeline
+    val base = Caches.tracked(corpus(s, dir))
+    val centers = (0 until rounds).foldLeft(firstCenters(base, 10))(
+      (c, _) => lloydCenters(base, c))
+    nearestAssign(base.select(col("vid"), col("v")), centers, "cid")
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n_points"), sum(col("vid")).as("sum_vec_id"))
   }
@@ -1616,7 +1624,9 @@ object Similarity {
   /** The dropped-id set of SemDeDup's within-cell pair scan, with the
     * hot-cell straggler guard: every unordered within-cell pair with
     * cosine ≥ `minCos` yields its HIGHER vec_id (keep-first), exactly
-    * once, and the per-task pair volume is bounded.
+    * once, and the per-task pair volume is bounded. `assigned` rows are
+    * (vec_id, v, n2, cell); the result is (vec_id, is_dropped = 1). The
+    * one pair scan of q_semdedup and `graft.api.Vectors.semDedup`.
     *
     * Cold cells (pop ≤ cap) keep the plain self-equi-join on cell id —
     * one key per cell, ≤ cap²/2 pairs per task. Hot cells are
@@ -1640,15 +1650,6 @@ object Similarity {
     * pair volume the cell already owes, so the guard never changes the
     * asymptotic cost — it only un-serializes it. */
   private[graft] def semDroppedOf(assigned: DataFrame, minCos: Double,
-      cap: Long = SemCellCap, blockRows: Long = SemBlockRows): DataFrame =
-    semDroppedRaw(assigned, minCos, cap, blockRows).distinct()
-      .withColumn("is_dropped", lit(1L))
-
-  /** [[semDroppedOf]] BEFORE the final distinct — the multiset of
-    * dropped ids, one per qualifying pair (a vec_id dropped by d pairs
-    * appears d times). Exposed so SkewCensus' SPARK_SEM_PROFILE leg can
-    * time the pair-enumeration layer separately from the distinct. */
-  private[graft] def semDroppedRaw(assigned: DataFrame, minCos: Double,
       cap: Long = SemCellCap, blockRows: Long = SemBlockRows): DataFrame = {
     val hotCells = HotKeys.census(assigned, Seq("cell"), cap)
     // each leg is SELF-JOINED below — uncached, the anti/inner join
@@ -1684,7 +1685,8 @@ object Similarity {
             col("a.vec_id") < col("b.vec_id")))
       .filter(sim)
       .select(greatest(col("a.vec_id"), col("b.vec_id")).as("vec_id"))
-    coldPairs.unionByName(hotPairs)
+    coldPairs.unionByName(hotPairs).distinct()
+      .withColumn("is_dropped", lit(1L))
   }
 
   /** Semantic deduplication, SemDeDup-style (Abbas et al. 2023): vectors

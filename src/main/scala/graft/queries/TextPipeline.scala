@@ -81,11 +81,19 @@ object TextPipeline {
     * 64 trims only the degenerate tail. Mirrored in the oracle SQL. */
   private[graft] val LshBucketCap = 64
 
-  /** Distinct word-2-gram shingles of a token array — the set the
-    * MinHash signature sketches (shared with the calibration census). */
-  private def shingleArr(w: Column): Column =
-    array_distinct(transform(sequence(lit(1), size(w) - 1),
-      i => concat(element_at(w, i), lit(" "), element_at(w, i + 1))))
+  /** (doc_id, sh): the distinct word-2-gram shingles of every doc with
+    * ≥ 2 tokens (shorter docs have none and carry no row) — the set the
+    * MinHash signature sketches, shared with the calibration census and
+    * fuzzy decontamination's confirm join. */
+  private def shingles(docs: DataFrame): DataFrame = {
+    val w = col("w")
+    docs.select(col("doc_id"), ws.as("w"))
+      .filter(size(w) >= 2)
+      .select(col("doc_id"), array_distinct(transform(
+        sequence(lit(1), size(w) - 1),
+        i => concat(element_at(w, i), lit(" "), element_at(w, i + 1))))
+        .as("sh"))
+  }
 
   /** The ONE MinHash band builder: per-doc signature over distinct
     * word-2-gram shingles, exploded into the persisted index schema
@@ -106,15 +114,12 @@ object TextPipeline {
     * 100 TB the shingle-hash traffic IS the cost of the signature stage.
     * Docs with < 2 tokens have no shingles and carry no band rows. */
   private def minhashBands(docs: DataFrame): DataFrame = {
-    val w = col("w")
     val mins = minhashAB.zipWithIndex.map { case ((a, b), i) =>
       graft.functions.GraftAffineMin(col("hs"), a, b, P).as(s"m$i")
     }
     val bandKeys = array((0 until 4).map(i => struct(lit(i).as("band"),
       col(s"m${2 * i}").as("x"), col(s"m${2 * i + 1}").as("y"))): _*)
-    docs.select(col("doc_id"), ws.as("w"))
-      .filter(size(w) >= 2)
-      .select(col("doc_id"), shingleArr(w).as("sh"))
+    shingles(docs)
       .select(col("doc_id"), transform(col("sh"), s => hashMod(s)).as("hs"))
       .select(col("doc_id") +: mins: _*)
       .select(col("doc_id") +: sigCols :+ explode(bandKeys).as("bk"): _*)
@@ -398,12 +403,8 @@ object TextPipeline {
   def minhashCalibration(s: SparkSession, dir: String): DataFrame =
     minhashCalibrationDocs(Tables.documents(s, dir))
 
-  private[graft] def minhashCalibrationDocs(docs: DataFrame): DataFrame = {
-    val sh = docs.select(col("doc_id"), ws.as("w"))
-      .filter(size(col("w")) >= 2)
-      .select(col("doc_id"), shingleArr(col("w")).as("sh"))
-    minhashCalibrationFrom(dedupMinhashDocs(docs, LshBucketCap), sh)
-  }
+  private[graft] def minhashCalibrationDocs(docs: DataFrame): DataFrame =
+    minhashCalibrationFrom(dedupMinhashDocs(docs, LshBucketCap), shingles(docs))
 
   /** Census stage over explicit (doc_a, doc_b, n_match) candidates and
     * per-doc shingle sets. */
@@ -2377,9 +2378,7 @@ object TextPipeline {
     val corpBands = bands.filter(col("doc_id") % 101 =!= 0)
     val cands = corpBands.join(broadcast(evalBands), BandKey)
       .select(col("doc_id"), col("e_id")).distinct()
-    val shing = docs.select(col("doc_id"), ws.as("w"))
-      .filter(size(col("w")) >= 2)
-      .select(col("doc_id"), shingleArr(col("w")).as("sh"))
+    val shing = shingles(docs)
     val confirmed = cands
       .join(shing.select(col("doc_id"), col("sh").as("sa")), "doc_id")
       // only the EVAL slice broadcasts — broadcasting the unfiltered

@@ -300,15 +300,33 @@ class CorpusApiSpec extends SparkSpec {
     assert(fused.keySet == Set(100L, 101L, 102L, 103L))
   }
 
-  test("semDedup drops the later of two near-identical vectors only") {
+  private def nearDupVecs = {
     import spark.implicits._
-    val vecs = Seq(
+    Seq(
       (1L, Array(1.0f, 0.0f, 0.0f)),   // seed cell A
       (2L, Array(0.0f, 1.0f, 0.0f)),   // seed cell B
       (3L, Array(0.999f, 0.001f, 0.0f)), // near-dup of 1 -> dropped
       (4L, Array(0.0f, 0.98f, 0.2f)),  // near 2 but distinct direction
       (5L, Array(0.0f, 0.999f, 0.001f)) // near-dup of 2 -> dropped
     ).toDF("vid", "emb")
+  }
+
+  /** 96 well-spread vectors + 4 exact duplicates, ids nowhere near
+    * dense-from-0 (the hash-threshold seeding must not assume density). */
+  private def sparseVecs = {
+    import spark.implicits._
+    val base = (0 until 96).map { i =>
+      (5000L + 7L * i,
+        Array(math.cos(i * 0.39).toFloat, math.sin(i * 0.39).toFloat,
+          (i % 7).toFloat, (i % 11).toFloat))
+    }
+    val dups = Seq(0, 13, 26, 39).map(i =>
+      (9000L + i, base(i)._2.clone()))
+    (base ++ dups).toDF("vid", "emb")
+  }
+
+  test("semDedup drops the later of two near-identical vectors only") {
+    val vecs = nearDupVecs
     val out = Vectors.semDedup(vecs, k = 2, tau = 0.999,
       id = "vid", vec = "emb").persist()
     try {
@@ -323,17 +341,7 @@ class CorpusApiSpec extends SparkSpec {
   }
 
   test("semDedup default trains ⌈√n⌉ cells and works on sparse ids") {
-    import spark.implicits._
-    // 96 well-spread vectors + 4 exact duplicates, ids nowhere near
-    // dense-from-0 (the hash-threshold seeding must not assume density)
-    val base = (0 until 96).map { i =>
-      (5000L + 7L * i,
-        Array(math.cos(i * 0.39).toFloat, math.sin(i * 0.39).toFloat,
-          (i % 7).toFloat, (i % 11).toFloat))
-    }
-    val dups = Seq(0, 13, 26, 39).map(i =>
-      (9000L + i, base(i)._2.clone()))
-    val vecs = (base ++ dups).toDF("vid", "emb")
+    val vecs = sparseVecs
     val out = Vectors.semDedup(vecs, tau = 0.9999, id = "vid", vec = "emb")
       .persist()
     try {
@@ -355,6 +363,57 @@ class CorpusApiSpec extends SparkSpec {
     } finally {
       out.unpersist()
       graft.core.Caches.release()
+    }
+  }
+
+  /** The reference dropped set: one plain self-join per cell of `out`,
+    * no hot-cell guard — the pair scan `Vectors.semDedup` ran before it
+    * shared q_semdedup's. */
+  private def pairScanDropped(out: org.apache.spark.sql.DataFrame,
+      vecs: org.apache.spark.sql.DataFrame, tau: Double): Set[Long] = {
+    val a = graft.queries.Similarity.canonical(vecs, "vid", "emb")
+      .join(out.select(col("vid"), col("cell")), "vid")
+    val cos = graft.functions.GraftDot(col("av"), col("bv")).cast("double") /
+      sqrt(col("an2").cast("double")) / sqrt(col("bn2").cast("double"))
+    a.select(col("cell"), col("vid").as("avid"), col("v").as("av"),
+        col("n2").as("an2"))
+      .join(a.select(col("cell"), col("vid").as("bvid"), col("v").as("bv"),
+        col("n2").as("bn2")), "cell")
+      .filter(col("avid") < col("bvid") && cos >= tau)
+      .select(col("bvid")).distinct()
+      .collect().map(_.getLong(0)).toSet
+  }
+
+  test("semDedup's guarded pair scan equals the plain per-cell self-join, hot cell included") {
+    import spark.implicits._
+    // k = 1 puts all 2,100 vectors in one cell, over SemCellCap, so the
+    // block-decomposed hot path runs; 60 planted near-dups (each a
+    // spread vector scaled per dimension by 1 ± 1e-4) carry higher ids
+    val rnd = new scala.util.Random(7)
+    val spread = (0 until 2040).map(i =>
+      (100L + 3L * i, Array.fill(8)(rnd.nextGaussian().toFloat)))
+    val planted = (0 until 60).map(j => (20000L + j,
+      spread(j * 31)._2.map(x => x * (1.0f + 1e-4f * rnd.nextGaussian().toFloat))))
+    val hot = (spread ++ planted).toDF("vid", "emb")
+    assert(spread.size + planted.size > graft.queries.Similarity.SemCellCap)
+    Seq(("near-dup", nearDupVecs, 2, 0.999), ("sparse", sparseVecs, 0, 0.9999),
+        ("hot cell", hot, 1, 0.999)).foreach { case (name, vecs, k, tau) =>
+      val out = Vectors.semDedup(vecs, k = k, tau = tau, id = "vid",
+        vec = "emb").persist()
+      try {
+        val got = out.filter(col("is_dropped"))
+          .collect().map(_.getAs[Long]("vid")).toSet
+        assert(got == pairScanDropped(out, vecs, tau),
+          s"$name: guarded drops differ from the plain pair scan")
+        if (name == "hot cell") {
+          assert(out.select(col("cell")).distinct().count() == 1)
+          assert(planted.map(_._1).toSet.subsetOf(got),
+            s"planted near-dups must drop, got ${got.size} drops")
+        }
+      } finally {
+        out.unpersist()
+        graft.core.Caches.release()
+      }
     }
   }
 

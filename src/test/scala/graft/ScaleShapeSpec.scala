@@ -367,6 +367,74 @@ class ScaleShapeSpec extends SparkSpec {
       "ivfDriftCensusOf at a caller-chosen cell count")
   }
 
+  /** Joins of the static plan `exec` keyed on a column derived from a
+    * vector exploded into per-dimension scalar rows — the (point, dim) ⋈
+    * (center, dim) shape whose volume is n·dim·k rows. Lineage follows
+    * aliases through projections and across cache boundaries. */
+  private def perDimExplodeJoins(
+      exec: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, ExprId}
+    import org.apache.spark.sql.catalyst.plans.QueryPlan
+    import org.apache.spark.sql.execution.{GenerateExec, ProjectExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.types.{ArrayType, StructType}
+    def nodes(p: QueryPlan[_]): Seq[QueryPlan[_]] =
+      p +: (p.innerChildren ++ p.children.collect { case c: QueryPlan[_] => c })
+        .flatMap(nodes)
+    val all = nodes(exec)
+    var derived: Set[ExprId] = all.collect {
+      case g: GenerateExec if g.generatorOutput.exists(a =>
+          a.name == "col" && !a.dataType.isInstanceOf[ArrayType] &&
+            !a.dataType.isInstanceOf[StructType]) =>
+        g.generatorOutput.map(_.exprId)
+    }.flatten.toSet
+    var grown = true
+    while (grown) {
+      val next = derived ++ all.collect {
+        case p: ProjectExec => p.projectList.collect {
+          case a: Alias if a.child.references.exists(r => derived(r.exprId)) =>
+            a.exprId
+        }
+        // a cache read renames the cached plan's output positionally
+        case r: InMemoryRelation => r.output.zip(r.cachedPlan.output).collect {
+          case (o, c) if derived(c.exprId) => o.exprId
+        }
+      }.flatten
+      grown = next.size > derived.size
+      derived = next
+    }
+    all.collect {
+      case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys)
+          .exists(_.references.exists(r => derived(r.exprId))) =>
+        j.simpleString(200)
+    }
+  }
+
+  test("k-means and PQ assign on the fused kernel, never a per-dimension explode join") {
+    // every centroid assignment is nearestAssign: no n·dim·k join frame
+    // (the exploded q_kmeans_iter2) and no n·M·K struct-MIN (pqEncode)
+    val S = graft.queries.Similarity
+    Seq("q_kmeans_iter2" -> graft.queries.Iterative.kmeansIter2 _,
+        "q_ann_pq" -> S.annPq _,
+        "q_ann_pq_trained" -> S.annPqTrained _).foreach { case (name, q) =>
+      try {
+        // the static plan (AQE off): its tree holds every operator
+        val exec = withConf("spark.sql.adaptive.enabled" -> "false") {
+          q(spark, sfDir).queryExecution.executedPlan
+        }
+        val p = exec.toString
+        assert(p.contains("graft_nearest_cell"),
+          s"$name must assign on the fused kernel:\n$p")
+        assert(!p.contains("min(struct(") && !p.contains("min(named_struct("),
+          s"$name still takes a struct-MIN argmin:\n$p")
+        val joins = perDimExplodeJoins(exec)
+        assert(joins.isEmpty,
+          s"$name joins on per-dimension exploded rows: $joins\n$p")
+      } finally graft.core.Caches.release()
+    }
+  }
+
   test("corpus drift: one languages-sized exchange, totals broadcast back") {
     val p = plan(TextPipeline.corpusDrift(spark, sfDir))
     assert(distinctHashExchanges(p) == 1,

@@ -116,6 +116,32 @@ class VectorKernelSpec extends SparkSpec {
         Option(e.getCause.getMessage).exists(_.contains("empty center"))))
   }
 
+  test("per-subspace GraftNearestCell codes equal the struct-MIN argmin, ties included") {
+    // 3 subspaces × 6 centroids, each subspace its own codebook; in every
+    // subspace centroid 4 duplicates centroid 1's subvector, so a row
+    // nearest to that subvector must take the lower cid
+    val cdf = (for (m <- 0 until 3; c <- 0L until 6L) yield
+      (m, c, randVec(300L + 10 * m + (if (c == 4L) 1L else c), 8)))
+      .toDF("m", "cid", "cv")
+    val sdf = (for (vid <- 1L to 200L; m <- 0 until 3) yield
+      (vid, m, randVec(vid * 3 + m, 8))).toDF("vid", "m", "vm")
+    def codes(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("vid"), r.getAs[Int]("m")) -> r.getAs[Long]("code"))
+      .toMap
+    val kern = codes(graft.queries.Similarity.nearestAssign(sdf, cdf, "code",
+      vec = "vm", keys = Seq("m")))
+    // the reference: the struct-MIN over every (row, centroid) pair of
+    // the row's subspace — the n·M·K-row form the kernel replaced
+    val ref = codes(sdf.join(broadcast(cdf), "m")
+      .groupBy(col("vid"), col("m"))
+      .agg(min(struct(GraftL2(col("vm"), col("cv")).as("dist"), col("cid")))
+        .as("best"))
+      .select(col("vid"), col("m"), col("best.cid").as("code")))
+    assert(kern.size == 600 && kern == ref)
+    assert(kern.values.exists(_ == 1L), "no row reached the tied centroid")
+    assert(!kern.values.exists(_ == 4L), "tie must break to the lower cid")
+  }
+
   test("GraftNearestCell interpreted eval agrees with codegen") {
     val cdf = (0L to 3L).map(c => (c, randVec(c + 50, 8))).toDF("cid", "cv")
     val carr = cdf.agg(sort_array(collect_list(struct(col("cid"), col("cv"))))
