@@ -312,9 +312,9 @@ object Corpus {
       .filter(col("containment") >= threshold)
 
   /** Connected components over an undirected pair list: every node gets
-    * the minimum reachable node id as `component`. Pointer-doubling to
-    * fixpoint — O(log diameter) rounds, each one edge↔label join over a
-    * pre-partitioned cached edge list.
+    * the minimum reachable node id as `component`. Large-star/small-star
+    * rewriting to fixpoint ([[TextPipeline.starComponents]]) — O(log² n)
+    * rounds, each edge-proportional over a shrinking edge list.
     *
     * Vertex-set contract: the component universe is `nodes` ∪ every id
     * appearing in `pairs` — pair endpoints OUTSIDE `nodes` participate
@@ -324,23 +324,13 @@ object Corpus {
     * endpoints first if edges mentioning unknown ids should be ignored
     * instead. */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
-      nodeCol: String = "node", aCol: String = "a", bCol: String = "b",
-      algorithm: String = "pointer"): DataFrame = {
-    val n = nodes.select(col(nodeCol).cast("long").as("doc_id"))
-    val p = pairs.select(col(aCol).cast("long").as("doc_a"),
-      col(bCol).cast("long").as("doc_b"))
-    val labeled = algorithm match {
-      case "pointer" => TextPipeline.pointerDoublingComponents(n, p)
-      // star rewriting (Kiveris et al.): edge-list-only state that
-      // SHRINKS as stars form — prefer when edges dwarf nodes (the
-      // pointer variant carries a node-sized jump table per round);
-      // label-for-label identical output, spec-pinned in DupClustersSpec
-      case "star" => TextPipeline.starComponents(n, p)
-      case other => throw new IllegalArgumentException(
-        s"unknown components algorithm '$other' (pointer | star)")
-    }
-    labeled.select(col("doc_id").as(nodeCol), col("lbl").as("component"))
-  }
+      nodeCol: String = "node", aCol: String = "a",
+      bCol: String = "b"): DataFrame =
+    TextPipeline.starComponents(
+      nodes.select(col(nodeCol).cast("long").as("doc_id")),
+      pairs.select(col(aCol).cast("long").as("doc_a"),
+        col(bCol).cast("long").as("doc_b")))
+      .select(col("doc_id").as(nodeCol), col("lbl").as("component"))
 
   /** Keep-first exact dedup: one survivor per key set, the row with the
     * smallest `orderCol` (deterministic tie-break). One hash shuffle —
@@ -632,35 +622,32 @@ object Corpus {
     * argmax-merge iterations on the corpus vocabulary (words of length
     * 2–64), returning one row per learned rule — exactly the rule
     * table a tokenizer trainer checkpoints. Every round is
-    * vocabulary-sized, never corpus-sized.
+    * vocabulary-sized, never corpus-sized. Runs the census passes when
+    * called ([[graft.queries.Tokenizer.bpeTrainRulesBatched]] reads each
+    * pass's argmaxes driver-side).
     *
-    * `batchSize` is the production dial toward 10k+ merge counts:
-    * batchSize = 1 (default) replays the oracle-checked per-round
-    * argmax loop ([[graft.queries.Tokenizer.bpeTrainRules]]; output
-    * carries a per-round vocab_checksum); batchSize > 1 applies up to
-    * that many top census pairs per pass WHEN provably equivalent to
-    * the sequential replay, falling back to per-round argmax otherwise
-    * ([[graft.queries.Tokenizer.bpeTrainRulesBatched]], the
-    * oracle-checked q_bpe_train_batched path; output carries one
-    * final_checksum — intermediate states deliberately don't exist).
-    * `strict = true` makes a non-independent batch fail loudly instead
-    * of falling back, for callers that must know batching engaged. */
+    * `batchSize` is the production dial toward 10k+ merge counts: each
+    * census pass applies up to that many top pairs WHEN provably
+    * equivalent to the sequential replay, and one argmax otherwise, so
+    * the rules never depend on it; batchSize = 1 (default) takes one
+    * argmax per pass, the oracle-checked sequential trainer. Output
+    * (round, pair, pair_count, final_checksum, pass): `final_checksum`
+    * is the end vocabulary state, `pass` the census pass that learned
+    * the rule (rules sharing a pass were batch-applied). */
   def bpeMerges(docs: DataFrame, id: String = "doc_id",
-      text: String = "text", rounds: Int = 3, batchSize: Int = 1,
-      strict: Boolean = false): DataFrame = {
+      text: String = "text", rounds: Int = 3,
+      batchSize: Int = 1): DataFrame = {
     val vocab = canon(docs, id, text)
       .select(explode(tokenize(col("text"))).as("raw"))
       .filter(length(col("raw")) >= 2 &&
         length(col("raw")) <= graft.queries.Tokenizer.MaxWordLen)
       .groupBy(col("raw")).agg(count(lit(1)).as("freq"))
-    if (batchSize <= 1) graft.queries.Tokenizer.bpeTrainRules(vocab, rounds)
-    else graft.queries.Tokenizer.bpeTrainRulesBatched(
-      vocab, rounds, batchSize, strict)
+    graft.queries.Tokenizer.bpeTrainRulesBatched(vocab, rounds, batchSize)
   }
 
   /** Cluster-aware leak-free train/val/test assignment for any
     * (id, text) frame: near-dup clusters (guarded MinHash pairs at
-    * signature agreement ≥ `minAgreement`, pointer-doubling components)
+    * signature agreement ≥ `minAgreement`, star-rewriting components)
     * hash as a UNIT into splits, so eval can never see a near-copy of a
     * training document — the scheme the oracle-checked q_split_leakfree
     * proves structurally leak-free while measuring what the naive

@@ -1,7 +1,5 @@
 package graft.api
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.functions.col
 
@@ -38,7 +36,27 @@ object SortedGroups {
     * never ahead of a reduce. */
   def flatMapSortedGroupsPrePartitioned[O: Encoder](
       df: DataFrame, keyCols: Seq[String], orderCols: Seq[String])(
-      f: (Row, Seq[Row]) => Iterator[O]): Dataset[O] = {
+      f: (Row, Seq[Row]) => Iterator[O]): Dataset[O] =
+    scanGroups(df, keyCols, orderCols)((key, rows) => f(key, rows.toSeq))
+
+  /** Single-pass variant for giant groups: the reducer sees each group as
+    * a lazy iterator that is never materialized — a group larger than
+    * executor memory streams through (the scalable analog of the
+    * reference's phase-3 multi-buffer reduce, `main.cc:794-806`). The
+    * trade: no re-iteration (the reference's two-pass reducers like
+    * InvertedIndex need [[flatMapSortedGroups]] instead); whatever the
+    * reducer leaves unconsumed is skipped before the next group. */
+  def flatMapStreamingGroups[O: Encoder](
+      df: DataFrame, keyCols: Seq[String], orderCols: Seq[String])(
+      f: (Row, Iterator[Row]) => Iterator[O]): Dataset[O] =
+    scanGroups(df.repartition(keyCols.map(col): _*), keyCols, orderCols)(f)
+
+  /** The one group scan: sort each partition by key then `orderCols`,
+    * and hand `f` the first row of each key run plus a lazy iterator
+    * over the run. */
+  private def scanGroups[O: Encoder](
+      df: DataFrame, keyCols: Seq[String], orderCols: Seq[String])(
+      f: (Row, Iterator[Row]) => Iterator[O]): Dataset[O] = {
     val sorted = df
       .sortWithinPartitions((keyCols ++ orderCols).map(col): _*)
     val names = sorted.columns
@@ -46,41 +64,6 @@ object SortedGroups {
     require(kpos.forall(_ >= 0), s"key columns $keyCols not all in ${names.mkString(",")}")
     // value equality that works for binary keys too (Array[Byte] has
     // reference equality under Seq.==)
-    def keyOf(r: Row): Seq[Any] = kpos.map(r.get(_) match {
-      case b: Array[Byte] => b.toSeq
-      case v => v
-    })
-    sorted.mapPartitions { it =>
-      new Iterator[Iterator[O]] {
-        private val buf = it.buffered
-        def hasNext: Boolean = buf.hasNext
-        def next(): Iterator[O] = {
-          val first = buf.head
-          val key = keyOf(first)
-          val group = new ArrayBuffer[Row]()
-          while (buf.hasNext && keyOf(buf.head) == key) group += buf.next()
-          f(first, group.toSeq)
-        }
-      }.flatten
-    }
-  }
-
-  /** Single-pass variant for giant groups: the reducer sees each group as
-    * a lazy iterator that is never materialized — a group larger than
-    * executor memory streams through (the scalable analog of the
-    * reference's phase-3 multi-buffer reduce, `main.cc:794-806`). The
-    * trade: no re-iteration (the reference's two-pass reducers like
-    * InvertedIndex need [[flatMapSortedGroups]] instead), and the reducer
-    * must fully consume or discard the iterator before the next group. */
-  def flatMapStreamingGroups[O: Encoder](
-      df: DataFrame, keyCols: Seq[String], orderCols: Seq[String])(
-      f: (Row, Iterator[Row]) => Iterator[O]): Dataset[O] = {
-    val sorted = df
-      .repartition(keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ orderCols).map(col): _*)
-    val names = sorted.columns
-    val kpos = keyCols.map(c => names.indexOf(c))
-    require(kpos.forall(_ >= 0), s"key columns $keyCols not all in ${names.mkString(",")}")
     def keyOf(r: Row): Seq[Any] = kpos.map(r.get(_) match {
       case b: Array[Byte] => b.toSeq
       case v => v

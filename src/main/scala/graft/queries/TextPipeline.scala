@@ -1015,7 +1015,7 @@ object TextPipeline {
   def dupClusters(s: SparkSession, dir: String): DataFrame =
     dupClusterCensus(s, dir, hashMinComponents(_, _, iters = 5))
 
-  /** The cluster census shared by the three component variants: strong
+  /** The cluster census shared by both component loops: strong
     * near-dup pairs (agreement ≥ 6 of 8) → `components(nodes, pairs)`'s
     * (doc_id, lbl) labels → (cluster_rep, n_docs, id_sum) per label,
     * singletons included. */
@@ -1119,58 +1119,22 @@ object TextPipeline {
     edges
   }
 
-  /** Production components: hash-min PLUS pointer doubling
-    * (`lbl ← min(lbl, min-neighbor-lbl, lbl(lbl))` — the label chases its
-    * own label's label each round), iterated to a fixpoint. Pointer
-    * doubling halves the remaining distance-to-root per round, so
-    * convergence is O(log diameter) — a 100 TB web-graph-diameter
-    * component costs tens of rounds, not diameter rounds (the same
-    * round-complexity class as large-star/small-star). Convergence is
-    * probed by the round's own checkpoint action: labels only ever
-    * DECREASE, so Σlbl is strictly monotone and stalls exactly at the
-    * fixpoint. Per round: one edge↔label join (work ∝ edges), one
-    * label self-join (∝ nodes). A budget of `maxIters` rounds that ends
-    * short of the fixpoint throws. */
-  private[graft] def pointerDoublingComponents(
-      nodes: DataFrame, pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    val edges = dupEdges(pairs)
-    Fixpoint(nodes.sparkSession, edges.rdd.getNumPartitions, edges) { loop =>
-      // iterate over V(E) only, singletons attached after the loop —
-      // see the identical reasoning in [[hashMinComponents]]; the
-      // convergence sum is likewise over V(E), still strictly monotone.
-      // sum() over zero rows is NULL — an empty node set is already
-      // converged, not a crash.
-      val loopEdges = loop(edges)
-      val labels = loop.converge(loop.checkpoint(vertexLabels(loopEdges)),
-          maxIters, coalesce(sum(col("lbl")), lit(0L)).as("s")) { labels =>
-        val jump = labels.select(col("doc_id").as("j_id"), col("lbl").as("j_lbl"))
-        labels
-          .join(neighborMin(loopEdges, labels), col("doc_id") === col("dst"), "left")
-          .join(jump, col("lbl") === col("j_id"), "left")
-          .select(col("doc_id"),
-            least(col("lbl"),
-              coalesce(col("nlbl"), col("lbl")),
-              coalesce(col("j_lbl"), col("lbl"))).as("lbl"))
-      }
-      withSingletons(nodes, labels)
-    }
-  }
-
   /** Connected components by LARGE-STAR / SMALL-STAR rewriting (Kiveris
-    * et al., "Connected Components in MapReduce and Beyond", SoCC '14) —
-    * the third components variant: instead of propagating labels over a
-    * FIXED edge list (hash-min, pointer doubling), each round REWRITES
-    * the edge list itself toward a forest of stars centered at the
-    * component minima. Large-star re-hangs every neighbor LARGER than u
-    * onto m(u) = min(Γ(u) ∪ {u}); small-star re-hangs the smaller
-    * neighbors (and u itself) onto m(u). Both ops preserve connectivity
-    * and never grow the edge count, and the pair converges in
-    * O(log² n) rounds. Where this wins at 100 TB: pointer doubling
-    * carries a node-sized jump table through every round, while star
-    * state is the CURRENT edge list, which SHRINKS as stars form — the
-    * variant of choice when components are large and edge-dominated.
-    * Per round each op is one groupBy-min plus one join, edge-
-    * proportional, at the dup-graph loop width. */
+    * et al., "Connected Components in MapReduce and Beyond", SoCC '14),
+    * iterated to a fixpoint — the converging components loop, behind
+    * q_dup_clusters_conv, q_dup_clusters_star, q_split_leakfree and
+    * `Corpus.connectedComponents`. Instead of propagating labels over a
+    * FIXED edge list (hash-min), each round REWRITES the edge list
+    * itself toward a forest of stars centered at the component minima.
+    * Large-star re-hangs every neighbor LARGER than u onto
+    * m(u) = min(Γ(u) ∪ {u}); small-star re-hangs the smaller neighbors
+    * (and u itself) onto m(u). Both ops preserve connectivity and never
+    * grow the edge count, and the pair converges in O(log² n) rounds.
+    * Loop state is the CURRENT edge list, which SHRINKS as stars form —
+    * no node-sized table rides through the rounds. Per round each op is
+    * one window minimum, edge-proportional, at the dup-graph loop
+    * width. A budget of `maxIters` rounds that ends short of the
+    * fixpoint throws. */
   private[graft] def starComponents(
       nodes: DataFrame, pairs: DataFrame, maxIters: Int = 30): DataFrame = {
     val edges = dupEdges(pairs)
@@ -1251,20 +1215,14 @@ object TextPipeline {
     }
   }
 
-  /** [[dupClusters]] computed by star rewriting — census-identical to
-    * the other two variants at any diameter, oracle = the exact
-    * transitive closure (shared with [[dupClustersConverged]]). */
+  /** [[dupClusters]] computed by star rewriting to the fixpoint. Its
+    * oracle is NOT the 5-round unrolling (that would silently disagree
+    * on any component whose node sits > 5 hash-min hops from its
+    * minimum — exactly the case a converging loop exists for) but the
+    * exact-at-any-diameter transitive closure. Registered twice:
+    * q_dup_clusters_star (the headline) and q_dup_clusters_conv. */
   def dupClustersStar(s: SparkSession, dir: String): DataFrame =
     dupClusterCensus(s, dir, starComponents(_, _))
-
-  /** [[dupClusters]] computed by the converging production variant.
-    * Its oracle is NOT the 5-round unrolling (that would silently
-    * disagree on any component whose node sits > 5 hash-min hops from
-    * its minimum — exactly the case this variant exists for) but an
-    * exact-at-any-diameter recursive transitive closure: min reachable
-    * id per node. */
-  def dupClustersConverged(s: SparkSession, dir: String): DataFrame =
-    dupClusterCensus(s, dir, pointerDoublingComponents(_, _))
 
   /** The 5-round hash-min label CTE chain shared by the cluster oracles
     * (l0 = every doc its own label, l5 = the settled labels).
@@ -1362,7 +1320,7 @@ object TextPipeline {
       |  CAST(SUM(CASE WHEN rn = 1 AND doc_id <> lbl THEN 1 ELSE 0 END) AS BIGINT) AS n_keep_not_first
       |FROM r GROUP BY lang""".stripMargin
 
-  /** Exact-at-any-diameter census oracle for [[dupClustersConverged]]:
+  /** Exact-at-any-diameter census oracle for [[dupClustersStar]]:
     * recursive transitive closure (UNION-dedup guarantees termination;
     * row count is Σ component², bounded at oracle scale), then min
     * reachable id per node — the true fixpoint the converging variant
@@ -2441,11 +2399,13 @@ object TextPipeline {
     * for the cluster scheme (same component ⇒ same key ⇒ same split),
     * nonzero for the random scheme whenever dup clusters exist.
     *
-    * Scale shape: pairs and components are the guarded-LSH + pointer-
-    * doubling machinery of q_dup_clusters_conv (edge-proportional
-    * rounds); the split draw is a scan-local hash; the leak audit joins
-    * the pair list (dup-graph-sized, not corpus-sized) to two slim
-    * (doc_id, split) projections. */
+    * Scale shape: pairs and components are the guarded-LSH + star-
+    * rewriting machinery of q_dup_clusters_conv (edge-proportional
+    * rounds); both schemes' split draws are scan-local hashes in ONE
+    * cached (doc_id, n_tok, split per scheme) table, as the oracle's `sp`;
+    * one leak audit joins the pair list (dup-graph-sized, not
+    * corpus-sized) to two slim projections of it, and the per-scheme
+    * rows unstack from one census row. */
   def splitLeakfree(s: SparkSession, dir: String): DataFrame = {
     val docsRaw = Tables.documents(s, dir)
     val pairs = dedupMinhashDocs(docsRaw, LshBucketCap)
@@ -2455,32 +2415,39 @@ object TextPipeline {
     val comps = graft.api.Corpus.connectedComponents(
       docsRaw.select(col("doc_id").as("node")), pairs)
       .select(col("node").as("doc_id"), col("component"))
-    val base = docsRaw
-      .select(col("doc_id"), size(ws).cast("long").as("n_tok"))
-      .join(comps, "doc_id")
     def splitOf(c: Column): Column = {
       val h = hash60(c) % 1000L
       when(h < 800, lit(0)).when(h < 900, lit(1)).otherwise(lit(2))
     }
-    def scheme(name: String, key: Column): DataFrame = {
-      val withSplit = base.withColumn("sp", splitOf(key)).trackedPersist()
-      val leak = pairs
-        .join(withSplit.select(col("doc_id").as("a"), col("sp").as("spa")), "a")
-        .join(withSplit.select(col("doc_id").as("b"), col("sp").as("spb")), "b")
-        .agg(coalesce(sum(when(col("spa") =!= col("spb"), 1L).otherwise(0L)),
-          lit(0L)).as("n_leaky_pairs"))
-      withSplit.agg(
-          sum(when(col("sp") === 0, 1L).otherwise(0L)).as("n_train"),
-          sum(when(col("sp") === 1, 1L).otherwise(0L)).as("n_val"),
-          sum(when(col("sp") === 2, 1L).otherwise(0L)).as("n_test"),
-          sum(when(col("sp") === 0, col("n_tok")).otherwise(0L)).as("tok_train"),
-          sum(when(col("sp") =!= 0, col("n_tok")).otherwise(0L)).as("tok_heldout"))
-        .crossJoin(leak)
-        .select(lit(name).as("scheme"), col("n_train"), col("n_val"),
-          col("n_test"), col("tok_train"), col("tok_heldout"),
-          col("n_leaky_pairs"))
-    }
-    scheme("random", col("doc_id")).union(scheme("cluster", col("component")))
+    val schemes = Seq("random" -> col("doc_id"), "cluster" -> col("component"))
+    val sp = docsRaw
+      .select(col("doc_id"), size(ws).cast("long").as("n_tok"))
+      .join(comps, "doc_id")
+      .select(col("doc_id") +: col("n_tok") +:
+        schemes.map { case (n, key) => splitOf(key).as(n) }: _*)
+      .trackedPersist()
+    def end(e: String) = sp.select(col("doc_id").as(e) +:
+      schemes.map { case (n, _) => col(n).as(s"${n}_$e") }: _*)
+    def tally(c: Column, v: Column) = sum(when(c, v).otherwise(0L))
+    def agg1(df: DataFrame, cs: Seq[Column]) = df.agg(cs.head, cs.tail: _*)
+    val census = agg1(sp, schemes.map { case (n, _) =>
+      val c = col(n)
+      struct(lit(n).as("scheme"), tally(c === 0, lit(1L)).as("n_train"),
+        tally(c === 1, lit(1L)).as("n_val"),
+        tally(c === 2, lit(1L)).as("n_test"),
+        tally(c === 0, col("n_tok")).as("tok_train"),
+        tally(c =!= 0, col("n_tok")).as("tok_heldout")).as(n)
+    })
+    val leak = agg1(pairs.join(end("a"), "a").join(end("b"), "b"),
+      schemes.map { case (n, _) =>
+        coalesce(tally(col(s"${n}_a") =!= col(s"${n}_b"), lit(1L)), lit(0L))
+          .as(s"${n}_leak")
+      })
+    census.crossJoin(leak)
+      .select(explode(array(schemes.map { case (n, _) =>
+        col(n).withField("n_leaky_pairs", col(s"${n}_leak"))
+      }: _*)).as("r"))
+      .select(col("r.*"))
   }
 
   private val splitLeakfreeSql = {
@@ -2833,7 +2800,7 @@ object TextPipeline {
     GQuery("q_sample_group", sampleGroup, Some(sampleGroupSql)),
     GQuery("q_dup_clusters", dupClusters, Some(dupClustersSql), headline = true),
     GQuery("q_dedup_keep_best", dedupKeepBest, Some(dedupKeepBestSql)),
-    GQuery("q_dup_clusters_conv", dupClustersConverged, Some(dupClustersConvSql)),
+    GQuery("q_dup_clusters_conv", dupClustersStar, Some(dupClustersConvSql)),
     GQuery("q_dup_clusters_star", dupClustersStar, Some(dupClustersConvSql), headline = true),
     GQuery("q_sample_stratified", sampleStratified, Some(sampleStratifiedSql)),
     GQuery("q_sample_weighted", sampleWeighted, Some(sampleWeightedSql)),

@@ -169,9 +169,10 @@ object Tokenizer {
         .groupBy(col("raw")).agg(count(lit(1)).as("freq")),
       3)
 
-  /** The merge-training loop over an explicit (raw, freq) vocabulary
-    * frame — the surface `Corpus.bpeMerges` exposes over arbitrary
-    * corpora; [[bpeTrain]] censuses it against the oracle. */
+  /** The lazy merge-training loop over an explicit (raw, freq)
+    * vocabulary frame: one argmax round per census, constructed without
+    * running a job. [[bpeTrain]] censuses it against the oracle; it is
+    * the sequential reference [[bpeTrainRulesBatched]] must equal. */
   private[graft] def bpeTrainRules(vocab: DataFrame, nRounds: Int): DataFrame =
     bpeLoop(vocab, nRounds)._1.reduce(_ union _)
 
@@ -187,20 +188,10 @@ object Tokenizer {
   private def bpeLoop(vocab: DataFrame, nRounds: Int): (Seq[DataFrame], DataFrame) = {
     import graft.core.Caches.TrackedOps
     require(nRounds > 0, s"rounds must be positive: $nRounds")
-    val v0 = vocab
-      .select(col("raw"), concat(lit(" "),
-        array_join(expr("transform(sequence(1, length(raw)), i -> substring(raw, i, 1))"), " "),
-        lit(" ")).as("w"), col("freq"))
-      .trackedPersist()
+    val v0 = bpeSeed(vocab).trackedPersist()
     val rounds = (1 to nRounds).scanLeft((v0, Option.empty[DataFrame])) {
       case ((v, _), k) =>
-        val pc = v.select(col("freq"), split(trim(col("w")), " ").as("syms"))
-          .filter(size(col("syms")) >= 2)
-          .select(col("freq"), explode(expr(
-            "transform(sequence(1, size(syms) - 1), " +
-              "i -> concat_ws(' ', element_at(syms, i), element_at(syms, i + 1)))"))
-            .as("pair"))
-          .groupBy(col("pair")).agg(sum(col("freq")).as("pair_count"))
+        val pc = pairCensus(v)
         // exhaustion guard: when no pairs remain (every word fully
         // merged), the argmax would be EMPTY and the cross join below
         // would wipe the vocabulary for all later rounds. A sentinel
@@ -237,6 +228,25 @@ object Tokenizer {
     (rounds.flatMap(_._2), rounds.last._1)
   }
 
+  /** Round-0 state (raw, w, freq): every word spelled as single-character
+    * symbols between spaces. Shared by both trainers, so the batched
+    * fallback starts from the sequential trainer's exact state. */
+  private def bpeSeed(vocab: DataFrame): DataFrame =
+    vocab.select(col("raw"), concat(lit(" "),
+      array_join(expr("transform(sequence(1, length(raw)), i -> substring(raw, i, 1))"), " "),
+      lit(" ")).as("w"), col("freq"))
+
+  /** Frequency-weighted adjacent-symbol pair census (pair, pair_count)
+    * of a vocabulary state. */
+  private def pairCensus(v: DataFrame): DataFrame =
+    v.select(col("freq"), split(trim(col("w")), " ").as("syms"))
+      .filter(size(col("syms")) >= 2)
+      .select(col("freq"), explode(expr(
+        "transform(sequence(1, size(syms) - 1), " +
+          "i -> concat_ws(' ', element_at(syms, i), element_at(syms, i + 1)))"))
+        .as("pair"))
+      .groupBy(col("pair")).agg(sum(col("freq")).as("pair_count"))
+
   /** BATCHED merge training — the production dial toward 10k+ merge
     * vocabularies: instead of one argmax per census pass, take the top
     * `batchSize` pairs of ONE census and apply them in ONE vocabulary
@@ -268,60 +278,39 @@ object Tokenizer {
     *     batch replaces. Untouched pairs were already out-ranked by the
     *     census order (count desc, pair asc — the argmax tie-break).
     *
-    * A batch that fails the check either falls back to the exact
-    * per-round argmax for that step (default — output is then
-    * bit-identical to [[bpeTrainRules]] by construction) or fails
-    * loudly (`strict = true`, for callers that must know batching
-    * engaged). The census/argmax is read driver-side per batch —
-    * metadata-sized (batchSize rows + one scalar), the
-    * boundary-collection stance, and exactly what production trainers
-    * do each merge; the vocabulary itself never leaves the cluster.
+    * A batch that fails the check falls back to the exact per-round
+    * argmax for that step, so the rules are bit-identical to
+    * [[bpeTrainRules]] by construction; at `batchSize` = 1 every pass
+    * takes that argmax — the sequential trainer. The census/argmax is
+    * read driver-side per batch — metadata-sized (batchSize rows + one
+    * scalar), the boundary-collection stance, and exactly what
+    * production trainers do each merge; the vocabulary itself never
+    * leaves the cluster.
     *
-    * Output: (round, pair, pair_count, final_checksum) — per-round
-    * rules with their census counts (equal to the sequential counts
-    * whenever rules apply, per the argument above) plus one checksum of
-    * the END vocabulary state; intermediate per-round vocabulary states
-    * deliberately don't exist on the batched path (that is the point),
-    * so the sequential oracle compares the final state. */
-  /** Driver-side telemetry of the most recent [[bpeTrainRulesBatched]]
-    * run: (census passes, passes that applied a full batch, passes that
-    * fell back to one rule, rules learned). Reset at the start of each
-    * run; the production-drive ritual (BENCH_LOCAL) reads it to report
-    * how often batching actually engaged. Not meaningful under two
-    * concurrently-running trainers (none exist). */
-  final case class BpeBatchStats(censusPasses: Int, batchedPasses: Int,
-    fallbackPasses: Int, rulesLearned: Int)
-  @volatile private var bpeStats = BpeBatchStats(0, 0, 0, 0)
-  def lastBpeBatchStats: BpeBatchStats = bpeStats
-
+    * Output: (round, pair, pair_count, final_checksum, pass) —
+    * per-round rules with their census counts (equal to the sequential
+    * counts whenever rules apply, per the argument above), one checksum
+    * of the END vocabulary state, and the census pass that learned each
+    * rule (rules sharing a pass were batch-applied; a pass of its own
+    * is an argmax or a fallback). Intermediate per-round vocabulary
+    * states deliberately don't exist on the batched path (that is the
+    * point), so the sequential oracle compares the final state. */
   private[graft] def bpeTrainRulesBatched(vocab: DataFrame, nRounds: Int,
-      batchSize: Int, strict: Boolean): DataFrame = {
+      batchSize: Int): DataFrame = {
     import graft.core.Caches.TrackedOps
     require(nRounds > 0 && batchSize > 0,
       s"rounds/batch must be positive: $nRounds/$batchSize")
-    bpeStats = BpeBatchStats(0, 0, 0, 0)
     val spark = vocab.sparkSession
     import spark.implicits._
-    // seed state identical to bpeLoop's v0 — the fallback branch must be
-    // bit-identical to the sequential trainer
-    var v = vocab
-      .select(col("raw"), concat(lit(" "),
-        array_join(expr("transform(sequence(1, length(raw)), i -> substring(raw, i, 1))"), " "),
-        lit(" ")).as("w"), col("freq"))
-      .trackedPersist()
-    val rules = scala.collection.mutable.ArrayBuffer[(Long, String, Long)]()
+    var v = bpeSeed(vocab).trackedPersist()
+    val rules = scala.collection.mutable.ArrayBuffer[(Long, String, Long, Long)]()
     var k = 1
+    var pass = 0L
     var exhausted = false
     while (k <= nRounds && !exhausted) {
       val take = math.min(batchSize, nRounds - k + 1)
-      val pc = v.select(col("freq"), split(trim(col("w")), " ").as("syms"))
-        .filter(size(col("syms")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(1, size(syms) - 1), " +
-            "i -> concat_ws(' ', element_at(syms, i), element_at(syms, i + 1)))"))
-          .as("pair"))
-        .groupBy(col("pair")).agg(sum(col("freq")).as("pair_count"))
-        .trackedPersist()
+      // cached only when the independence check reads it a second time
+      val pc = if (take > 1) pairCensus(v).trackedPersist() else pairCensus(v)
       val top = pc.orderBy(col("pair_count").desc, col("pair")).limit(take)
         .collect().map(r => (r.getString(0), r.getLong(1)))
       if (top.isEmpty) exhausted = true
@@ -359,12 +348,6 @@ object Tokenizer {
               }
             val minBatch = top.last._2
             if (disjoint && !selfAdjacent && 2 * maxTouch < minBatch) top
-            else if (strict) throw new IllegalArgumentException(
-              s"bpeTrainRulesBatched: batch at round $k is not provably " +
-                s"independent (disjoint=$disjoint, " +
-                s"selfAdjacent=$selfAdjacent, maxTouch=$maxTouch, " +
-                s"minBatch=$minBatch) — batched ≢ sequential here; rerun " +
-                "with strict=false to fall back to per-round argmax")
             else top.take(1)
           }
         val mergedW = applied.foldLeft(col("w")) { case (acc, (p, _)) =>
@@ -376,19 +359,16 @@ object Tokenizer {
               c, lit(s" $p "), lit(s" $m ")))
         }
         v = v.select(col("raw"), mergedW.as("w"), col("freq")).trackedPersist()
+        pass += 1
         applied.zipWithIndex.foreach { case ((p, c), i) =>
-          rules += ((k + i.toLong, p, c))
+          rules += ((k + i.toLong, p, c, pass))
         }
-        bpeStats = BpeBatchStats(bpeStats.censusPasses + 1,
-          bpeStats.batchedPasses + (if (applied.length > 1) 1 else 0),
-          bpeStats.fallbackPasses +
-            (if (take > 1 && applied.length == 1) 1 else 0),
-          bpeStats.rulesLearned + applied.length)
         k += applied.length
       }
     }
-    rules.toSeq.toDF("round", "pair", "pair_count")
+    rules.toSeq.toDF("round", "pair", "pair_count", "pass")
       .crossJoin(v.agg(sum(hashMod(col("w"))).as("final_checksum")))
+      .select("round", "pair", "pair_count", "final_checksum", "pass")
   }
 
   /** q_bpe_train_batched: [[bpeTrainRulesBatched]] at rounds = batch =
@@ -409,7 +389,8 @@ object Tokenizer {
           .select(explode(words(col("text"))).as("raw"))
           .filter(length(col("raw")) >= 2 && length(col("raw")) <= MaxWordLen)
           .groupBy(col("raw")).agg(count(lit(1)).as("freq")),
-        3, 3, strict = false)
+        3, 3)
+        .select("round", "pair", "pair_count", "final_checksum")
     }
 
   /** One oracle round: pair census → argmax → vocabulary rewrite. */

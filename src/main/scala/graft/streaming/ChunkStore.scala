@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,17 +49,11 @@ object ChunkStore {
 
   /** The newest persisted chunk store — strictly before `beforeBatch` when
     * given (the replay-idempotence read), else the global newest; None
-    * before the first batch commits. */
+    * before the first batch commits. Non-numeric `v…` entries are
+    * skipped, as [[IndexMaintenance]]'s readers skip them. */
   def latest(spark: SparkSession, stateDir: String,
-      beforeBatch: Option[Long] = None): Option[DataFrame] = {
-    val dir = new Path(s"$stateDir/chunks")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) return None
-    val versions = fs.listStatus(dir).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("v"))
-      .map(_.drop(1).toLong)
-      .filter(v => beforeBatch.forall(v < _))
-    if (versions.isEmpty) None
-    else Some(spark.read.parquet(s"$stateDir/chunks/v${versions.max}"))
-  }
+      beforeBatch: Option[Long] = None): Option[DataFrame] =
+    IndexMaintenance.versions(s"$stateDir/chunks",
+      spark.sessionState.newHadoopConf(), beforeBatch).maxOption
+      .map(v => spark.read.parquet(s"$stateDir/chunks/v$v"))
 }

@@ -100,7 +100,9 @@ object IndexMaintenance {
     }.sum
   }
 
-  private def versions(dir: String,
+  /** The numeric `v<k>` version ids under `dir` (below `below` when
+    * given); non-numeric debris is skipped. Shared with [[ChunkStore]]. */
+  private[streaming] def versions(dir: String,
       conf: org.apache.hadoop.conf.Configuration,
       below: Option[Long]): Seq[Long] = {
     val p = new Path(dir)

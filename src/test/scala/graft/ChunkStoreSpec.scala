@@ -62,4 +62,18 @@ class ChunkStoreSpec extends SparkSpec {
         s"exact re-delivery grew the store: ${sizes(1)} -> ${sizes(2)}")
     } finally q.stop()
   }
+
+  test("latest skips a non-numeric v entry under chunks/") {
+    val dir = java.nio.file.Files.createTempDirectory("chunkstore_debris").toString
+    Seq((11L, 3L)).toDF("chash", "clen")
+      .write.parquet(s"$dir/chunks/v3")
+    // debris a crashed writer or an operator could leave next to the
+    // versions; a numeric parse of it would throw
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "chunks", "vtmp"))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "chunks", "v9.bak"))
+    val Some(store) = ChunkStore.latest(spark, dir)
+    assert(storeCensus(store) === Seq((11L, 3L)))
+    assert(ChunkStore.latest(spark, dir, Some(3L)).isEmpty,
+      "no numeric version lies below 3")
+  }
 }

@@ -52,13 +52,6 @@ class CorpusApiSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc(10L) == 10L && cc(11L) == 10L && cc(12L) == 10L)
     assert(cc(13L) == 13L && cc(15L) == 15L)
-    // the star variant labels identically through the same facade
-    val star = Corpus.connectedComponents(nodes, pairs, algorithm = "star")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == cc, "star and pointer facades disagree")
-    intercept[IllegalArgumentException] {
-      Corpus.connectedComponents(nodes, pairs, algorithm = "nope")
-    }
   }
 
   test("temporal facades (asof/scd2/funnel) run guarded on custom columns") {

@@ -40,33 +40,9 @@ class DupClustersSpec extends SparkSpec {
     assert(lbl(99L) == 99L)
   }
 
-  test("pointer doubling converges in O(log diameter) rounds on a long path") {
-    // path of 200 nodes: plain hash-min needs 199 rounds; pointer
-    // doubling must finish inside its 50-round budget (≈ log2(199) + slack
-    // in practice) and label everything with the minimum id
-    val nodes = (0L until 200L)
-    val path = (0L until 199L).map(i => (i, i + 1))
-    val lbl = TextPipeline.pointerDoublingComponents(
-      nodes.toDF("doc_id"), path.toDF("doc_a", "doc_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(nodes.forall(lbl(_) == 0L),
-      "fixpoint must label the whole 200-path with its minimum")
-  }
-
-  test("pointer doubling fails loudly when the round budget is exhausted") {
-    // 2 rounds cannot settle the 200-path; returning its unconverged
-    // labels would silently split the component, so the loop must raise
-    val nodes = (0L until 200L).toDF("doc_id")
-    val path = (0L until 199L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val e = intercept[IllegalArgumentException] {
-      TextPipeline.pointerDoublingComponents(nodes, path, maxIters = 2)
-    }
-    assert(e.getMessage.contains("fixpoint"))
-  }
-
   test("converged and fixed-round variants agree on the corpus census") {
     val a = TextPipeline.dupClusters(spark, sfDir)
-    val b = TextPipeline.dupClustersConverged(spark, sfDir)
+    val b = TextPipeline.dupClustersStar(spark, sfDir)
     assert(a.exceptAll(b).count() == 0)
     assert(b.exceptAll(a).count() == 0)
   }
@@ -103,14 +79,7 @@ class DupClustersSpec extends SparkSpec {
     assert(e.getMessage.contains("fixpoint"))
   }
 
-  test("star and converged variants agree on the corpus census") {
-    val a = TextPipeline.dupClustersStar(spark, sfDir)
-    val b = TextPipeline.dupClustersConverged(spark, sfDir)
-    assert(a.exceptAll(b).count() == 0)
-    assert(b.exceptAll(a).count() == 0)
-  }
-
-  test("star and pointer doubling agree on the heavy-tailed power-law graph") {
+  test("star rewriting equals a union-find on the heavy-tailed power-law graph") {
     // ~1k-edge hub-dominated graph (sf0.001 slice of the generator):
     // star rewriting exercises real high-degree star formation here, not
     // just the small near-clique dup groups
@@ -120,9 +89,23 @@ class DupClustersSpec extends SparkSpec {
       .union(pairs.select(col("doc_b")))
       .distinct()
     val star = TextPipeline.starComponents(nodes, pairs)
-    val pd = TextPipeline.pointerDoublingComponents(nodes, pairs)
-    assert(star.exceptAll(pd).count() == 0 && pd.exceptAll(star).count() == 0,
-      "star rewriting and pointer doubling disagree on component labels")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // driver-side union-find over the collected edges, the minimum id
+    // of each set as its label
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.collect().foreach { r =>
+      val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val expect = parent.keys.map(x => x -> find(x)).toMap
+    assert(expect.size > 100 && expect.values.toSet.size < expect.size,
+      "the fixture must hold real components")
+    assert(star == expect,
+      "star rewriting disagrees with the union-find component labels")
   }
 
   test("census over the corpus partitions all documents") {

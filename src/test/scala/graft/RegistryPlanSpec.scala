@@ -24,7 +24,7 @@ class RegistryPlanSpec extends SparkSpec {
     "q_dup_clusters", "q_dup_clusters_conv", "q_dup_clusters_star",
     "q_dedup_keep_best",                     // same hash-min label rounds
                                              // as q_dup_clusters
-    "q_split_leakfree",                      // pointer-doubling components
+    "q_split_leakfree",                      // star-rewriting components
     "q_sssp", "q_bfs_hops", "q_hits",        // frontier/fixpoint rounds
     "q_gensort_checksum")                    // spark.range sized from a
                                              // data count (gensort's n

@@ -337,21 +337,34 @@ class ScaleShapeSpec extends SparkSpec {
         x => floor(x.cast("double") * 1000000).cast("bigint")).as("v"))
       .withColumn("n2", graft.functions.GraftDot(col("v"), col("v")))
     val queries = base.filter(col("vid") < 20)
-    def assertNoVidWindow(df: org.apache.spark.sql.DataFrame,
-        what: String): Unit = {
-      val p = plan(df)
-      assert(p.contains("graft_nearest_cell"),
-        s"$what must assign cells on the fused kernel:\n$p")
-      val exec = df.queryExecution.executedPlan
-      val vidWindows = exec.collect {
+    // the static plan (AQE off): an AdaptiveSparkPlanExec is a leaf, so
+    // a window under it would be invisible to the matcher
+    def staticPlan(df: => org.apache.spark.sql.DataFrame) =
+      withConf("spark.sql.adaptive.enabled" -> "false") {
+        df.queryExecution.executedPlan
+      }
+    def vidWindows(exec: org.apache.spark.sql.execution.SparkPlan) =
+      planNodes(exec).collect {
         case w: org.apache.spark.sql.execution.window.WindowExec
             if w.partitionSpec.exists(_.toString.contains("vid#")) => w
         case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
             if w.partitionSpec.exists(_.toString.contains("vid#")) => w
       }
-      assert(vidWindows.isEmpty,
+    def assertNoVidWindow(df: => org.apache.spark.sql.DataFrame,
+        what: String): Unit = {
+      val exec = staticPlan(df)
+      val p = exec.toString
+      assert(p.contains("graft_nearest_cell"),
+        s"$what must assign cells on the fused kernel:\n$p")
+      assert(vidWindows(exec).isEmpty,
         s"$what plans a per-vid window over the corpus side:\n$p")
     }
+    // negative control: a planted per-vid window must trip the matcher
+    val planted = staticPlan(base.withColumn("rn", row_number().over(
+      org.apache.spark.sql.expressions.Window.partitionBy(col("vid"))
+        .orderBy(col("n2")))))
+    assert(vidWindows(planted).nonEmpty,
+      s"the per-vid window matcher misses a planted window:\n$planted")
     val S = graft.queries.Similarity
     assertNoVidWindow(
       S.ivfSearch(base, queries, S.lowestCenters(base, 50), k = 3,
@@ -367,6 +380,14 @@ class ScaleShapeSpec extends SparkSpec {
       "ivfDriftCensusOf at a caller-chosen cell count")
   }
 
+  /** Every node of a plan, inner children (cached plans, subqueries)
+    * included. */
+  private def planNodes(p: org.apache.spark.sql.catalyst.plans.QueryPlan[_])
+      : Seq[org.apache.spark.sql.catalyst.plans.QueryPlan[_]] =
+    p +: (p.innerChildren ++ p.children.collect {
+      case c: org.apache.spark.sql.catalyst.plans.QueryPlan[_] => c
+    }).flatMap(planNodes)
+
   /** Joins of the static plan `exec` keyed on a column derived from a
     * vector exploded into per-dimension scalar rows — the (point, dim) ⋈
     * (center, dim) shape whose volume is n·dim·k rows. Lineage follows
@@ -374,15 +395,11 @@ class ScaleShapeSpec extends SparkSpec {
   private def perDimExplodeJoins(
       exec: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, ExprId}
-    import org.apache.spark.sql.catalyst.plans.QueryPlan
     import org.apache.spark.sql.execution.{GenerateExec, ProjectExec}
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.types.{ArrayType, StructType}
-    def nodes(p: QueryPlan[_]): Seq[QueryPlan[_]] =
-      p +: (p.innerChildren ++ p.children.collect { case c: QueryPlan[_] => c })
-        .flatMap(nodes)
-    val all = nodes(exec)
+    val all = planNodes(exec)
     var derived: Set[ExprId] = all.collect {
       case g: GenerateExec if g.generatorOutput.exists(a =>
           a.name == "col" && !a.dataType.isInstanceOf[ArrayType] &&

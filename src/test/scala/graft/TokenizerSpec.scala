@@ -229,14 +229,19 @@ class TokenizerSpec extends SparkSpec {
   }
 
   /** Drive the batched trainer on an explicit (raw, freq) vocabulary and
-    * return (rules, final_checksum). */
+    * return (rules, final_checksum, rounds grouped by the census pass
+    * that learned them). */
   private def runBatched(vocab: Seq[(String, Long)], rounds: Int,
-      batch: Int, strict: Boolean): (Seq[(Long, String, Long)], Long) = {
+      batch: Int): (Seq[(Long, String, Long)], Long, Seq[Set[Long]]) = {
     import spark.implicits._
     val rows = graft.queries.Tokenizer.bpeTrainRulesBatched(
-      vocab.toDF("raw", "freq"), rounds, batch, strict).collect()
-    (rows.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1).toSeq,
-      if (rows.isEmpty) 0L else rows.head.getLong(3))
+      vocab.toDF("raw", "freq"), rounds, batch).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
+        r.getLong(4)))
+      .sortBy(_._1).toSeq
+    (rows.map(t => (t._1, t._2, t._3)),
+      if (rows.isEmpty) 0L else rows.head._4,
+      rows.groupBy(_._5).toSeq.sortBy(_._1).map(_._2.map(_._1).toSet))
   }
 
   private def runSequential(vocab: Seq[(String, Long)],
@@ -254,11 +259,12 @@ class TokenizerSpec extends SparkSpec {
     // top-3 pairwise symbol-disjoint, and the only other pair (g h)
     // touches none of them → maxTouch = 0 → one batched pass of 3
     val vocab = Seq(("ab", 100L), ("cd", 90L), ("ef", 80L), ("gh", 5L))
-    val (batched, fpB) = runBatched(vocab, 3, 3, strict = true)
+    val (batched, fpB, passes) = runBatched(vocab, 3, 3)
     val (seq, fpS) = runSequential(vocab, 3)
     assert(batched == seq, s"batched drifted:\n $batched\n $seq")
     assert(fpB == fpS, "final vocabulary state drifted")
     assert(batched.map(_._2) == Seq("a b", "c d", "e f"))
+    assert(passes == Seq(Set(1L, 2L, 3L)), s"batch did not apply: $passes")
   }
 
   test("batched bpe falls back when a merge would create a winning pair") {
@@ -274,14 +280,11 @@ class TokenizerSpec extends SparkSpec {
     val (seq, fpS) = runSequential(vocab, 3)
     assert(seq(1)._2 == "x ab",
       s"fixture must make the created pair win round 2, got ${seq(1)}")
-    val (batched, fpB) = runBatched(vocab, 3, 3, strict = false)
+    val (batched, fpB, passes) = runBatched(vocab, 3, 3)
     assert(batched == seq, s"fallback output drifted:\n $batched\n $seq")
     assert(fpB == fpS)
-    // and strict mode refuses rather than silently sequentializing
-    val e = intercept[IllegalArgumentException] {
-      runBatched(vocab, 3, 3, strict = true)
-    }
-    assert(e.getMessage.contains("not provably independent"))
+    // the first census falls back to one rule rather than batching
+    assert(passes.head == Set(1L), s"batch was not refused: $passes")
   }
 
   test("batched bpe 2·maxTouch guard is conservative but never wrong") {
@@ -289,15 +292,13 @@ class TokenizerSpec extends SparkSpec {
     // even be correct here (the created (x ab)=60 loses round 2 to
     // (c d)=90) — but the guard cannot prove it: (x a)=60 touches the
     // batch and 2·60 > 90, so the batch falls back. Conservatism is
-    // the contract: output equals sequential on BOTH branches; strict
-    // mode surfaces which branch ran.
+    // the contract: output equals sequential on BOTH branches; the
+    // passes show which branch ran.
     val vocab = Seq(("ab", 100L), ("cd", 90L), ("xab", 60L))
     val (seq, fpS) = runSequential(vocab, 2)
-    val (batched, fpB) = runBatched(vocab, 2, 2, strict = false)
+    val (batched, fpB, passes) = runBatched(vocab, 2, 2)
     assert(batched == seq && fpB == fpS)
-    assert(intercept[IllegalArgumentException] {
-      runBatched(vocab, 2, 2, strict = true)
-    }.getMessage.contains("maxTouch=60"))
+    assert(passes == Seq(Set(1L), Set(2L)), s"batch was not refused: $passes")
   }
 
   test("batched bpe treats self-adjacent rules as not provably independent") {
@@ -312,25 +313,25 @@ class TokenizerSpec extends SparkSpec {
     val (seq, fpS) = runSequential(vocab, 2)
     assert(seq(1)._2 == "aa aa",
       s"fixture must make the created self-pair win round 2, got ${seq(1)}")
-    val (batched, fpB) = runBatched(vocab, 2, 2, strict = false)
+    val (batched, fpB, passes) = runBatched(vocab, 2, 2)
     assert(batched == seq, s"self-adjacent batch drifted:\n $batched\n $seq")
     assert(fpB == fpS, "final vocabulary state drifted")
-    // strict mode refuses loudly, naming the reason
-    assert(intercept[IllegalArgumentException] {
-      runBatched(vocab, 2, 2, strict = true)
-    }.getMessage.contains("selfAdjacent=true"))
+    assert(passes == Seq(Set(1L), Set(2L)), s"batch was not refused: $passes")
   }
 
   test("batched bpe falls back on overlapping top rules (shared symbol)") {
     // ' a b c ': (a b) and (b c) share 'b' — not disjoint
     val vocab = Seq(("abc", 100L), ("de", 40L))
     val (seq, fpS) = runSequential(vocab, 2)
-    val (batched, fpB) = runBatched(vocab, 2, 2, strict = false)
+    val (batched, fpB, passes) = runBatched(vocab, 2, 2)
     assert(batched == seq && fpB == fpS)
-    assert(intercept[IllegalArgumentException] {
-      runBatched(vocab, 2, 2, strict = true)
-    }.getMessage.contains("not provably independent"))
+    assert(passes == Seq(Set(1L), Set(2L)), s"batch was not refused: $passes")
   }
+
+  /** Rounds past 2 force three state handoffs at batch 2, the middle
+    * batch engineered to fall back (see the chaining test). */
+  private val chainedVocab = Seq(("ab", 100L), ("cd", 90L), ("efg", 40L),
+    ("hi", 30L), ("jk", 28L), ("lm", 5L))
 
   test("multi-batch chaining with a mid-run fallback ≡ sequential") {
     // 6 rounds at batch 2 force THREE state handoffs across batches,
@@ -341,19 +342,36 @@ class TokenizerSpec extends SparkSpec {
     // output must equal the sequential replay across every handoff —
     // the state the batched path carries between batches is the only
     // vocabulary there is.
-    val vocab = Seq(("ab", 100L), ("cd", 90L), ("efg", 40L), ("hi", 30L),
-      ("jk", 28L), ("lm", 5L))
-    val (seq, fpS) = runSequential(vocab, 6)
+    val (seq, fpS) = runSequential(chainedVocab, 6)
     assert(seq.map(_._2) == Seq("a b", "c d", "e f", "ef g", "h i", "j k"),
       s"fixture census order drifted: $seq")
-    val (batched, fpB) = runBatched(vocab, 6, 2, strict = false)
+    val (batched, fpB, passes) = runBatched(chainedVocab, 6, 2)
     assert(batched == seq, s"chained output drifted:\n $batched\n $seq")
     assert(fpB == fpS, "final vocabulary state drifted across handoffs")
-    // telemetry pins WHICH branches ran: 4 census passes = batch,
-    // fallback, batch, take-1 tail; 6 rules total
-    assert(graft.queries.Tokenizer.lastBpeBatchStats ==
-      graft.queries.Tokenizer.BpeBatchStats(4, 2, 1, 6),
-      s"branch telemetry drifted: ${graft.queries.Tokenizer.lastBpeBatchStats}")
+    // the passes pin WHICH branches ran: batch, fallback, batch, take-1 tail
+    assert(passes == Seq(Set(1L, 2L), Set(3L), Set(4L, 5L), Set(6L)),
+      s"census passes drifted: $passes")
+  }
+
+  test("batched bpe at batch 1 is the sequential trainer: rules and final state") {
+    // the Corpus.bpeMerges default: one census argmax per pass
+    val (seq, fpS) = runSequential(chainedVocab, 6)
+    val (one, fpO, passes) = runBatched(chainedVocab, 6, 1)
+    assert(one == seq && fpO == fpS,
+      s"batch 1 drifted from the sequential trainer:\n $one\n $seq")
+    assert(passes == (1L to 6L).map(Set(_)))
+    // and on the corpus vocabulary
+    val vocab = graft.core.Tables.documents(spark, sfDir)
+      .select(explode(graft.queries.Qdsl.words(col("text"))).as("raw"))
+      .filter(length(col("raw")) >= 2 &&
+        length(col("raw")) <= graft.queries.Tokenizer.MaxWordLen)
+      .groupBy(col("raw")).agg(count(lit(1)).as("freq"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val (seqC, fpSC) = runSequential(vocab, 3)
+    val (oneC, fpOC, _) = runBatched(vocab, 3, 1)
+    graft.core.Caches.release()
+    assert(oneC == seqC && fpOC == fpSC,
+      s"batch 1 drifted on the corpus:\n $oneC\n $seqC")
   }
 
   test("q_bpe_train_batched over the corpus equals the sequential rules") {
