@@ -60,10 +60,11 @@ object Tables {
     * scheme, no Spark job — construction stays job-free), cached per
     * path: the testdata tables are immutable for a process lifetime and
     * a benchmark re-constructs each query every pass. A missing path
-    * sizes as 0 (the scan itself will fail loudly later if it matters). */
+    * sizes as 0 (the scan itself will fail loudly later if it matters)
+    * and is not cached, so a table written there later is sized then. */
   def tableBytes(spark: SparkSession, dir: String, name: String): Long = {
     val p = s"$dir/$name.parquet"
-    tableBytesCache.computeIfAbsent(p, { path =>
+    val listed = tableBytesCache.computeIfAbsent(p, { path =>
       try {
         val conf = new org.apache.hadoop.conf.Configuration()
         val hp = new org.apache.hadoop.fs.Path(path)
@@ -71,8 +72,9 @@ object Tables {
         val st = fs.getFileStatus(hp)
         if (st.isFile) st.getLen
         else graft.sources.HadoopIO.listFiles(path, conf).map(_.getLen).sum
-      } catch { case _: java.io.FileNotFoundException => 0L }
+      } catch { case _: java.io.FileNotFoundException => null }
     })
+    if (listed == null) 0L else listed
   }
 
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
@@ -102,12 +104,13 @@ object Tables {
     * file or a directory of part files (first part wins — the driver writes
     * one homogeneous table per path). Falls back to the current driver
     * format (native micros) when no file exists yet, e.g. an empty
-    * streaming source directory. Listing goes through the Hadoop FS API
-    * ([[graft.sources.HadoopIO.listFiles]]), so the probe works on any
-    * configured scheme, not just the local disk — the same posture as the
-    * binary sources. */
-  private[graft] def probeTsStorage(path: String): TsStorage =
-    tsStorageCache.computeIfAbsent(path, { p =>
+    * streaming source directory; only a footer's answer is cached, so the
+    * first part to land there is probed on the next call. Listing goes
+    * through the Hadoop FS API ([[graft.sources.HadoopIO.listFiles]]),
+    * so the probe works on any configured scheme, not just the local
+    * disk — the same posture as the binary sources. */
+  private[graft] def probeTsStorage(path: String): TsStorage = {
+    val read = tsStorageCache.computeIfAbsent(path, { p =>
       import org.apache.parquet.hadoop.ParquetFileReader
       import org.apache.parquet.hadoop.util.HadoopInputFile
       import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
@@ -133,7 +136,7 @@ object Tables {
           .sortBy(_.getPath.getName)
           .headOption.map(_.getPath))
       target match {
-        case None => TsNativeTimestamp(utcAdjusted = false)
+        case None => null
         case Some(file) =>
           val in = HadoopInputFile.fromPath(file, conf)
           val reader = ParquetFileReader.open(in)
@@ -153,6 +156,8 @@ object Tables {
           } finally reader.close()
       }
     })
+    if (read == null) TsNativeTimestamp(utcAdjusted = false) else read
+  }
 
   /** A TIMESTAMP(NANOS) file reads only under
     * `spark.sql.legacy.parquet.nanosAsLong`, which the scan looks up in its

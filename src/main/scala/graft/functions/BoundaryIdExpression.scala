@@ -1,13 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Partition id of a key under a decided boundary list — the count of
@@ -94,5 +94,5 @@ object GraftBoundaryId {
 
   /** Column-API surface: `GraftBoundaryId($"key", boundsSeq)`. */
   def apply(c: Column, bounds: Seq[Any]): Column =
-    Bridge.column(GraftBoundaryId(Bridge.expression(c), bounds))
+    column(GraftBoundaryId(expression(c), bounds))
 }

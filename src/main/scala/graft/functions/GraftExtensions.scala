@@ -95,11 +95,31 @@ object GraftExtensions {
     *    numbers a query's stages in the order they are planned, which
     *    varies from run to run, and the id in the class name made
     *    otherwise identical code a cache miss (q_curate: 8 to 14 classes
-    *    per pass). The id stays in the plan and in a comment of the code. */
+    *    per pass). The id stays in the plan and in a comment of the code;
+    *  - streaming checkpoints written through Hadoop's `FileSystem`, not
+    *    its `FileContext`. Every offset-log entry, commit-log entry,
+    *    state-store delta and checksum file is written to a temp file
+    *    and renamed into place. Spark's default manager renames with
+    *    `FileContext.rename`, which calls
+    *    `RawLocalFileSystem.getFileLinkStatus` on both paths, and without
+    *    the native Hadoop library each such call forks a `readlink`
+    *    process. One `sort_ingest` perfbench run (4 vCPUs, census by
+    *    `tools/jfr_forks.py`) forked 4,032 processes, 2,784 of them
+    *    `readlink` under checkpoint renames; with this manager it forks
+    *    1,246 and no `readlink`. The write path keeps its guarantees:
+    *    `createAtomic` still writes a temp file and renames it; on
+    *    `file:` both managers check the destination before the rename;
+    *    on HDFS `FileSystem.rename` refuses an existing destination and
+    *    the manager throws `FileAlreadyExistsException`, as before. Spark
+    *    itself falls back to this manager for schemes without
+    *    `FileContext` support, and its checksum manager still wraps the
+    *    state-store files. */
   val sparkDefaults: Seq[(String, String)] = Seq(
     "spark.sql.codegen.cache.maxEntries" -> "1000",
     "spark.sql.artifact.isolation.enabled" -> "false",
-    "spark.sql.codegen.useIdInClassName" -> "false")
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
 
   /** Sets each of [[sparkDefaults]] on `conf` unless it is already set. */
   def seed(conf: SparkConf): Unit =

@@ -3,11 +3,11 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -73,5 +73,5 @@ object GraftHash60 {
 
   /** Column-API surface: `GraftHash60(col)`. */
   def apply(c: Column): Column =
-    Bridge.column(GraftHash60(Bridge.expression(c)))
+    column(GraftHash60(expression(c)))
 }

@@ -1,12 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -48,5 +48,5 @@ case class ThemisMurmur64(child: Expression)
 object ThemisMurmur64 {
   /** Column-API surface: `themis_murmur64($"key")`. */
   def apply(c: Column): Column =
-    Bridge.column(ThemisMurmur64(Bridge.expression(c)))
+    column(ThemisMurmur64(expression(c)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 
 /** Fused integer vector kernels for the ANN/k-means paths.
@@ -176,7 +176,7 @@ case class GraftAffineMin(child: Expression, a: Long, b: Long, p: Long)
 
 object GraftAffineMin {
   def apply(c: Column, a: Long, b: Long, p: Long): Column =
-    Bridge.column(GraftAffineMin(Bridge.expression(c), a, b, p))
+    column(GraftAffineMin(expression(c), a, b, p))
 }
 
 /** Σ a(i)·b(i) over two array<bigint> columns. */
@@ -191,7 +191,7 @@ case class GraftDot(left: Expression, right: Expression) extends GraftVecExpr {
 
 object GraftDot {
   def apply(a: Column, b: Column): Column =
-    Bridge.column(GraftDot(Bridge.expression(a), Bridge.expression(b)))
+    column(GraftDot(expression(a), expression(b)))
 }
 
 /** Σ (a(i)−b(i))² over two array<bigint> columns. */
@@ -206,7 +206,7 @@ case class GraftL2(left: Expression, right: Expression) extends GraftVecExpr {
 
 object GraftL2 {
   def apply(a: Column, b: Column): Column =
-    Bridge.column(GraftL2(Bridge.expression(a), Bridge.expression(b)))
+    column(GraftL2(expression(a), expression(b)))
 }
 
 /** argmin cid by (squared-L2 to `v`, cid) over a broadcast center table
@@ -242,5 +242,5 @@ case class GraftNearestCell(left: Expression, right: Expression)
 
 object GraftNearestCell {
   def apply(v: Column, cs: Column): Column =
-    Bridge.column(GraftNearestCell(Bridge.expression(v), Bridge.expression(cs)))
+    column(GraftNearestCell(expression(v), expression(cs)))
 }

@@ -1,13 +1,16 @@
 package org.apache.spark.sql
 
 import org.apache.spark.{SparkConf, SparkContext}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.ExpressionUtils
 
 /** The `private[sql]` doorways the engine needs: constructing a
   * DataFrame from a custom [[LogicalPlan]] (`Dataset.ofRows` is
-  * package-private), cloning a session and reaching the running
-  * context's live conf. Standard practice for Spark plan extensions that
-  * produce leaf nodes outside the SQL parser path.
+  * package-private), converting between a [[Column]] and the Catalyst
+  * [[Expression]] of a native function, cloning a session and reaching
+  * the running context's live conf. Standard practice for Spark plan
+  * extensions that produce leaf nodes outside the SQL parser path.
   */
 object GraftPlanBridge {
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
@@ -16,6 +19,9 @@ object GraftPlanBridge {
   /** `df`'s plan as a DataFrame of `s`, planned under `s`'s SQLConf. */
   def rebind(df: DataFrame, s: SparkSession): DataFrame =
     ofRows(s, df.asInstanceOf[classic.Dataset[Row]].logicalPlan)
+
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** A session sharing `s`'s state and cache, starting from a copy of its
     * SQLConf, functions and listeners; nothing set on it reaches `s`. */

@@ -46,7 +46,9 @@ class CodegenReuseSpec extends SparkSpec {
     val set = Map(
       "spark.sql.codegen.cache.maxEntries" -> "64",
       "spark.sql.artifact.isolation.enabled" -> "true",
-      "spark.sql.codegen.useIdInClassName" -> "true")
+      "spark.sql.codegen.useIdInClassName" -> "true",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager")
     val user = new SparkConf(false).setAll(set)
     GraftExtensions.seed(user)
     assert(user.getAll.toMap == set)

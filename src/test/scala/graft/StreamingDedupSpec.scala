@@ -1,7 +1,13 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.Sessions
@@ -43,6 +49,41 @@ class StreamingDedupSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table("dedup_test").count() == 3)
     } finally q.stop()
+  }
+
+  test("a restarted dedup stream resumes from its checkpoint") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val ckpt = Files.createTempDirectory("dedup_restart").toString
+    assert(CheckpointFileManager.create(new Path(ckpt), spark.sessionState.newHadoopConf())
+      .isInstanceOf[FileSystemBasedCheckpointFileManager])
+
+    val input = MemoryStream[(Long, Timestamp, Double)]
+    val emitted = mutable.ArrayBuffer.empty[(Long, Seq[Long])]
+    def start() = Sessions.dedupStream(input.toDF().toDF("k", "ts", "v"), "10 minutes", Seq("k"))
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        emitted.synchronized { emitted += id -> batch.select("k").as[Long].collect().toSeq.sorted }
+        ()
+      }.start()
+
+    val first = start()
+    try {
+      input.addData((1L, ts(1), 1.0), (2L, ts(2), 2.0))
+      first.processAllAvailable()
+      input.addData((3L, ts(3), 3.0), (1L, ts(3), 4.0))
+      first.processAllAvailable()
+    } finally first.stop()
+    assert(emitted.toSeq == Seq(0L -> Seq(1L, 2L), 1L -> Seq(3L)))
+
+    // the same checkpoint and source: keys 1..3 are still in state, so
+    // only the new keys pass, in the batch after the last committed one
+    val second = start()
+    try {
+      input.addData((2L, ts(4), 5.0), (3L, ts(4), 6.0), (4L, ts(5), 7.0), (5L, ts(5), 8.0))
+      second.processAllAvailable()
+    } finally second.stop()
+    assert(emitted.toSeq == Seq(0L -> Seq(1L, 2L), 1L -> Seq(3L), 2L -> Seq(4L, 5L)))
   }
 
   test("classifier quality filter runs unchanged on a stream (stateless scan op)") {

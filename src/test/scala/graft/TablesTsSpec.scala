@@ -52,6 +52,24 @@ class TablesTsSpec extends SparkSpec {
     assert(times.last === 1704067200000L + 2 * 3600 * 1000L)
   }
 
+  test("an empty directory's fallback is not cached: its first part is probed") {
+    // a streaming source directory starts empty and later receives parts;
+    // the native-micros fallback must not stick to it
+    val dir = Files.createTempDirectory("events_late").toFile.getAbsolutePath
+    assert(Tables.probeTsStorage(dir) === Tables.TsNativeTimestamp(utcAdjusted = false))
+    spark.range(2).selectExpr("id AS event_id", "1704067200000000000L + id AS ts")
+      .coalesce(1).write.mode("append").parquet(dir)
+    assert(Tables.probeTsStorage(dir) === Tables.TsNanosAsLong)
+  }
+
+  test("a missing table's size is not cached: a table written later is sized") {
+    val dir = Files.createTempDirectory("bytes_late").toFile.getAbsolutePath
+    assert(Tables.tableBytes(spark, dir, "region") == 0L)
+    spark.range(3).selectExpr("CAST(id AS INT) AS r_regionkey", "'r' AS r_name")
+      .coalesce(1).write.parquet(s"$dir/region.parquet")
+    assert(Tables.tableBytes(spark, dir, "region") > 0L)
+  }
+
   test("events ts survives load at sane wall-clock scale (regression tripwire)") {
     val e = Tables.events(spark, sfDir)
       .agg(min(col("ts")).as("lo"), max(col("ts")).as("hi"),
